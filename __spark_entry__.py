@@ -16,7 +16,7 @@ from collections.abc import Callable
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from velesdb_spark.functions.arraylit import double_array_lit
+from velesdb_spark.functions.sqlexpr import double_array_lit
 
 # ----------------------------------------------------------------- helpers
 

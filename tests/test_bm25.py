@@ -418,42 +418,21 @@ def test_staging_eviction_skips_aliased_plans(spark):
     assert shared_new.storageLevel.useMemory is False
 
 
-def test_scan_scores_sql_fastpath_identity(spark):
-    """The one-shot-SQL scan path (r12, guide §5) must be BIT-identical
-    to the Column-builder fallback for every query shape: same trees,
-    same Python-folded constants, same left-assoc grouping (incl. the
-    parenthesized saturation quotient — * and / share precedence)."""
-    import struct
-
-    from velesdb_spark.functions import bm25 as B
+def test_scan_scores_fallback_on_exotic_names(spark, corpus):
+    """Column names that need quoting (space, dot, backtick) and a query
+    with a quote go through the same SQL spelling and score like the
+    reference."""
+    from velesdb_spark.functions.bm25 import bm25_scan_scores
     from velesdb_spark.functions.staging import release_staged
 
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    for q in ["spark query join", "alpha", "the spark spark window",
-              "data merge shuffle pipeline window batch"]:
-        counts: dict = {}
-        for t in B.tokenize_py(q):
-            counts[t] = counts.get(t, 0) + 1
-        fast = sorted((r[0], struct.pack(">d", r[1])) for r in
-                      B._scan_scores_sql(docs, counts, "doc_id", "text")
-                      .collect())
+    df, docs = corpus
+    weird = df.select(F.col("id").alias("the `id`.x"),
+                      F.col("text").alias("body text.y"))
+    for q in ["rust programming", "l'été rust", "fox"]:
+        got = {r["the `id`.x"]: r["_bm25_score"] for r in bm25_scan_scores(
+            weird, q, id_col="the `id`.x", text_col="body text.y").collect()}
         release_staged()
-        slow = sorted((r[0], struct.pack(">d", r[1])) for r in
-                      B._scan_scores_columns(docs, counts, "doc_id", "text")
-                      .collect())
-        release_staged()
-        assert fast == slow
-
-
-def test_scan_scores_fallback_on_exotic_names(spark):
-    """Non-identifier column names must route to the Column fallback
-    (no SQL splicing reachable) and still score correctly."""
-    docs = (spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-            .limit(50)
-            .select(F.col("doc_id").alias("the id"),
-                    F.col("text").alias("body text")))
-    from velesdb_spark.functions.bm25 import bm25_scan_scores
-
-    out = bm25_scan_scores(docs, "spark", id_col="the id",
-                           text_col="body text").collect()
-    assert all(r["_bm25_score"] > 0 for r in out)
+        want = ref_bm25(docs, q)
+        assert set(got) == set(want), q
+        for i in want:
+            assert got[i] == pytest.approx(want[i], rel=1e-12), q

@@ -475,15 +475,15 @@ def test_knn_batch_plan_has_no_python_nodes(spark):
 
 
 def test_double_array_lit_bit_identical_and_fallback(spark):
-    """arraylit fast path (one parsed SQL expression) must be
-    bit-identical to the per-element builder — repr() round-trips
+    """The one parsed ARRAY<DOUBLE> spelling (functions/sqlexpr.py) must
+    be bit-identical to the per-element builder — repr() round-trips
     doubles exactly and Spark's double parser is correctly rounding —
-    and non-finite values must fall back rather than fail."""
+    and non-finite values go through the same spelling as CASTs."""
     import math
     import random
 
-    from velesdb_spark.functions.arraylit import (double_array_lit,
-                                                  long_array_lit)
+    from velesdb_spark.functions.sqlexpr import (double_array_lit,
+                                                 long_array_lit)
 
     rng = random.Random(3)
     vals = ([rng.uniform(-1e3, 1e3) for _ in range(64)]
@@ -493,11 +493,15 @@ def test_double_array_lit_bit_identical_and_fallback(spark):
         F.array(*[F.lit(float(x)) for x in vals]).alias("v")).first().v
     assert all(math.copysign(1, a) == math.copysign(1, b) and a == b
                for a, b in zip(fast, slow))
-    # non-finite: falls back to the per-element path, same values
-    nf = [1.0, float("inf"), float("-inf"), float("nan")]
+    # non-finite: same values as the per-element builder, NaN-aware
+    nf = [1.0, float("inf"), float("-inf"), float("nan"), -0.0]
     got = spark.range(1).select(double_array_lit(nf).alias("v")).first().v
-    assert got[0] == 1.0 and math.isinf(got[1]) and math.isinf(got[2]) \
-        and math.isnan(got[3])
+    want = spark.range(1).select(
+        F.array(*[F.lit(x) for x in nf]).alias("v")).first().v
+    assert len(got) == len(want) == len(nf)
+    assert all((math.isnan(a) and math.isnan(b))
+               or (a == b and math.copysign(1, a) == math.copysign(1, b))
+               for a, b in zip(got, want))
     # long variant
     ls = [0, -1, 2**62, -2**62]
     got = spark.range(1).select(long_array_lit(ls).alias("v")).first().v
@@ -505,19 +509,19 @@ def test_double_array_lit_bit_identical_and_fallback(spark):
 
 
 def test_staged_score_sql_fastpath_identity(spark):
-    """The one-shot SQL fast paths in distance.py (staged_score /
-    doc_norm2 / staged_scores_batch build their aggregate+zip_with trees
-    as ONE parsed expression — ~100x fewer py4j round-trips per score)
-    must be bit-identical in values AND canonically identical in
-    analyzed plan to the Column-HOF builders they replace, for every
-    metric that takes the fast path."""
+    """The one-shot SQL scores in distance.py (staged_score / doc_norm2 /
+    staged_scores_batch build their aggregate+zip_with trees as ONE
+    parsed expression — ~100x fewer py4j round-trips per score) must be
+    bit-identical in values to metric_score AND canonically identical in
+    analyzed plan to the Column-HOF kernels, for the metrics they
+    stage."""
     import random
     import struct
 
     from pyspark.sql import functions as F
 
     from velesdb_spark.functions import distance as D
-    from velesdb_spark.functions.arraylit import double_array_lit
+    from velesdb_spark.functions.sqlexpr import double_array_lit
 
     rng = random.Random(11)
     rows = [(i, [rng.uniform(-2, 2) for _ in range(16)]) for i in range(50)]
@@ -534,7 +538,7 @@ def test_staged_score_sql_fastpath_identity(spark):
         F.zip_with(D._as_double(F.col("vector")), double_array_lit(q),
                    lambda x, y: x * y),
         F.lit(0.0), lambda acc, x: acc + x)
-    from velesdb_spark.functions.arraylit import double_array_sql
+    from velesdb_spark.functions.sqlexpr import double_array_sql
 
     new_dot = F.expr(D._dot_sql("`vector`", double_array_sql(q)))
     canon = lambda d: (d._jdf.queryExecution().analyzed()
@@ -565,15 +569,18 @@ def test_staged_score_sql_fastpath_identity(spark):
     assert bits([r.s0 for r in batch]) == bits([r.s0 for r in loop])
     assert bits([r.s1 for r in batch]) == bits([r.s1 for r in loop])
 
-    # non-identifier column name forces the Column-HOF fallback; it must
-    # produce the same bits as the fast path did on the plain name
-    weird = df.withColumnRenamed("vector", "vec col")
-    got = D.staged_score(weird, "vec col", q, "cosine", "s") \
-        .orderBy("id").select("s").collect()
-    fast_plain = D.staged_score(df, "vector", q, "cosine", "s") \
-        .orderBy("id").select("s").collect()
-    assert bits([r.s for r in got]) == bits([r.s for r in fast_plain])
-    # non-finite query elements fall back without failing
-    nf = D.staged_score(df, "vector", [float("nan")] * 16, "dot", "s") \
-        .limit(1).select("s").collect()
-    assert len(nf) == 1
+    # a name that needs quoting (backtick, space, dot) goes through the
+    # same spelling and gives the same bits as the plain name
+    weird = df.withColumnRenamed("vector", "v`ec col.x")
+    base = weird.withColumn("_n2", D.doc_norm2("v`ec col.x"))
+    for metric in ("cosine", "dot", "euclidean"):
+        got = D.staged_score(weird, "v`ec col.x", q, metric, "s") \
+            .orderBy("id").select("s").collect()
+        plain = D.staged_score(df, "vector", q, metric, "s") \
+            .orderBy("id").select("s").collect()
+        assert bits([r.s for r in got]) == bits([r.s for r in plain]), metric
+    got = D.staged_scores_batch(base, "v`ec col.x", [q, q2], "cosine",
+                                ["s0", "s1"], norm2_col="_n2") \
+        .orderBy("id").select("s0", "s1").collect()
+    assert bits([r.s0 for r in got]) == bits([r.s0 for r in loop])
+    assert bits([r.s1 for r in got]) == bits([r.s1 for r in loop])

@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from velesdb_spark.functions.sqlexpr import double_lit, ident, str_lit
+
 K1 = 1.2
 B = 0.75
 # Unicode-aware split (Rust char::is_alphanumeric ≈ \p{L} | \p{N})
@@ -637,55 +639,43 @@ def bm25_scan_scores(docs: DataFrame, query: str, id_col: str = "id",
     the corpus is indexed once and searched many times — that amortizes the
     inverted-index build exactly like the reference's add-time indexing
     (index/bm25.rs add/search split).
+
+    The plan is built from a handful of SQL expression strings (guide §5,
+    the r11 driver-latency class) instead of ~250 py4j round-trips of
+    Column plumbing; names and terms are spelled by functions/sqlexpr.py.
     """
-    import re as _re
+    from velesdb_spark.functions.staging import stage
 
     counts: dict[str, int] = {}
     for t in tokenize_py(query):
         counts[t] = counts.get(t, 0) + 1
     if not counts:
         return docs.select(
-            F.col(id_col), F.lit(0.0).alias("_bm25_score")).limit(0)
-
-    # One-shot SQL fast path (guide §5 — the r11 driver-latency class):
-    # the whole two-pass scan plan parses from a handful of expression
-    # strings instead of ~250 py4j round-trips of Column plumbing. The
-    # strings spell EXACTLY the trees the Column form below builds (same
-    # op order, same Python-folded constants via repr), so values are
-    # bit-identical — pinned by
-    # tests/test_bm25.py::test_scan_scores_sql_fastpath_identity.
-    # Guarded (ADVICE r11): only plain-identifier column names and terms
-    # made purely of tokenizer word chars qualify; anything else takes
-    # the Column fallback, so no input can reach SQL-literal splicing.
-    if (_re.fullmatch(r"[A-Za-z_][A-Za-z0-9_]*", id_col)
-            and _re.fullmatch(r"[A-Za-z_][A-Za-z0-9_]*", text_col)
-            and all(_re.fullmatch(r"[^\W_]+", t) for t in counts)):
-        return _scan_scores_sql(docs, counts, id_col, text_col)
-    return _scan_scores_columns(docs, counts, id_col, text_col)
-
-
-def _scan_scores_sql(docs: DataFrame, counts: dict,
-                     id_col: str, text_col: str) -> DataFrame:
-    """One-shot-SQL construction of the scan-path plan (fast path)."""
-    from velesdb_spark.functions.staging import stage
+            F.col(ident(id_col)), F.lit(0.0).alias("_bm25_score")).limit(0)
 
     terms = list(counts)
-    # SQL string literals unescape '\p' to 'p' — double the backslashes
-    sql_re = TOKEN_SPLIT_RE.replace("\\", "\\\\")
     base = (
         docs.selectExpr(
-            f"{id_col} AS _doc_id",
-            f"filter(split(lower({text_col}), '{sql_re}'), "
-            "t -> octet_length(t) > 1) AS _toks")
+            f"{ident(id_col)} AS _doc_id",
+            f"filter(split(lower({ident(text_col)}), "
+            f"{str_lit(TOKEN_SPLIT_RE)}), t -> octet_length(t) > 1) AS _toks")
         .selectExpr("_doc_id", "_toks", "size(_toks) AS _dl")
-        .filter("_dl > 0")
+        .filter("_dl > 0")  # empty docs are not indexed (bm25.rs:146-148)
     )
-    tf_exprs = []
-    for i, t in enumerate(terms):
-        esc = t.replace("\\", "\\\\").replace("'", "\\'")
-        tf_exprs.append(f"size(filter(_toks, x -> x = '{esc}')) AS _tf{i}")
-    # projection drops _toks — the staged frame is (_doc_id, _dl, _tf*)
-    # ints only, same as the fallback (see its sizing comment)
+    # tf as a HOF filter count. An ArrayRemove spelling (size −
+    # size(array_remove)) was measured ~33% faster on the ISOLATED tf
+    # pass at sf0.1 but end-to-end the two-pass query is tokenize/
+    # stats-dominated and the interleaved A/B was a wash — keeping the
+    # allocation-free original.
+    tf_exprs = [f"size(filter(_toks, x -> x = {str_lit(t)})) AS _tf{i}"
+                for i, t in enumerate(terms)]
+    # Persist the post-tokenize tf projection: BOTH the corpus-stats
+    # aggregate (broadcast side) and the scoring pass consume it, and
+    # unpersisted the regexp tokenize — the dominant cost — runs twice.
+    # The projection drops the text and token arrays, so the staged frame
+    # is (_doc_id, _dl, _tf*) ints only: ~16+4·|terms| bytes/doc, at 1B
+    # docs tens of GB cluster-wide, comfortably MEMORY_AND_DISK.
+    # Registered with the shared staging registry for harness release.
     base = stage(base.selectExpr("_doc_id", "_dl", *tf_exprs))
 
     stats = base.agg(
@@ -693,88 +683,25 @@ def _scan_scores_sql(docs: DataFrame, counts: dict,
         *[F.expr(f"sum(cast((_tf{i} > 0) AS long)) AS _df{i}")
           for i in range(len(terms))])
     scored = base.crossJoin(F.broadcast(stats))
-    # score: same left-assoc 0.0 + Σ CASE chain as the Column form; all
-    # constants are Python-folded first and spelled with repr so the
-    # parsed doubles are bit-identical (repr round-trips)
+    # score: left-assoc 0.0 + Σ CASE chain; all constants are
+    # Python-folded first and spelled with repr so the parsed doubles
+    # are bit-identical (repr round-trips)
     pieces = ["0.0D"]
     for i, t in enumerate(terms):
-        qtf = repr(float(counts[t]))
         idf = (f"ln((n_docs - _df{i} + 0.5D) / (_df{i} + 0.5D) + 1.0D)")
         # NOTE the outer parens: * and / share precedence left-assoc, so
-        # without them "qtf * idf * a / b" would regroup the division and
-        # drift by 1-2 ULP from the Column form
-        sat = (f"((_tf{i} * {K1 + 1.0!r}D) / (_tf{i} + {K1!r}D * "
-               f"({1.0 - B!r}D + {B!r}D * _dl / avgdl)))")
+        # without them "qtf * idf * a / b" would regroup the division
+        # and drift by 1-2 ULP from the (tf·(k1+1))/(…) formula
+        sat = (f"((_tf{i} * {double_lit(K1 + 1.0)}) / (_tf{i} + "
+               f"{double_lit(K1)} * ({double_lit(1.0 - B)} + "
+               f"{double_lit(B)} * _dl / avgdl)))")
         pieces.append(
-            f"CASE WHEN _tf{i} > 0 THEN {qtf}D * {idf} * {sat} "
-            "ELSE 0.0D END")
-    score_sql = " + ".join(pieces)
+            f"CASE WHEN _tf{i} > 0 THEN {double_lit(counts[t])} * {idf} "
+            f"* {sat} ELSE 0.0D END")
     return (
-        scored.withColumn("_bm25_score", F.expr(score_sql))
+        scored.withColumn("_bm25_score", F.expr(" + ".join(pieces)))
         .filter("_bm25_score > 0.0D")
-        .selectExpr(f"_doc_id AS {id_col}", "_bm25_score")
-    )
-
-
-def _scan_scores_columns(docs: DataFrame, counts: dict,
-                         id_col: str, text_col: str) -> DataFrame:
-    """Column-builder form (fallback for exotic column names/terms; also
-    the identity-test anchor for the SQL fast path)."""
-    base = (
-        docs.select(F.col(id_col).alias("_doc_id"),
-                    tokenize(F.col(text_col)).alias("_toks"))
-        .withColumn("_dl", F.size("_toks"))
-        .filter(F.col("_dl") > 0)  # empty docs are not indexed (bm25.rs:146-148)
-    )
-    terms = list(counts)
-
-    # tf as a HOF filter count. An ArrayRemove spelling (size −
-    # size(array_remove)) was measured ~33% faster on the ISOLATED tf
-    # pass at sf0.1 but end-to-end the two-pass query is tokenize/
-    # stats-dominated and the interleaved A/B was a wash (mins favored
-    # array_remove, medians-under-load the HOF) — keeping the
-    # allocation-free original.
-    def _tf(term):
-        # one-shot SQL fast path: the F.filter lambda costs ~40 py4j
-        # round-trips per term to build; parsing the same tree from one
-        # string is one. Tokens are lowercased alnum so the escaped
-        # literal is exact; same lambda variable name, same EqualTo tree.
-        esc = term.replace("\\", "\\\\").replace("'", "\\'")
-        return F.expr(f"size(filter(_toks, x -> x = '{esc}'))")
-
-    # one withColumns call: each withColumn in a loop re-analyzes the
-    # whole plan (eager per-Dataset analysis), quadratic in term count
-    base = base.withColumns({
-        f"_tf{i}": _tf(t) for i, t in enumerate(terms)})
-    # Persist the post-tokenize tf projection: BOTH the corpus-stats
-    # aggregate (broadcast side) and the scoring pass consume it, and
-    # unpersisted the regexp tokenize — the dominant cost — runs twice.
-    # The cached frame is (_doc_id, _dl, _tf*) ints only (text and token
-    # arrays already dropped): ~16+4·|terms| bytes/doc, so at 1B docs it
-    # is tens of GB cluster-wide, comfortably MEMORY_AND_DISK. Registered
-    # with the shared staging registry for harness release.
-    from velesdb_spark.functions.staging import stage
-
-    base = stage(base.drop("_toks"))
-
-    stats = base.agg(
-        F.count("*").alias("n_docs"), F.avg("_dl").alias("avgdl"),
-        *[F.sum((F.col(f"_tf{i}") > 0).cast("long")).alias(f"_df{i}")
-          for i in range(len(terms))])
-
-    scored = base.crossJoin(F.broadcast(stats))
-    score = F.lit(0.0)
-    for i, t in enumerate(terms):
-        idf = F.log((F.col("n_docs") - F.col(f"_df{i}") + 0.5)
-                    / (F.col(f"_df{i}") + 0.5) + 1.0)
-        sat = (F.col(f"_tf{i}") * (K1 + 1.0)) / (
-            F.col(f"_tf{i}") + K1 * (1.0 - B + B * F.col("_dl") / F.col("avgdl")))
-        score = score + F.when(F.col(f"_tf{i}") > 0,
-                               float(counts[t]) * idf * sat).otherwise(0.0)
-    return (
-        scored.withColumn("_bm25_score", score)
-        .filter(F.col("_bm25_score") > 0.0)
-        .select(F.col("_doc_id").alias(id_col), "_bm25_score")
+        .selectExpr(f"_doc_id AS {ident(id_col)}", "_bm25_score")
     )
 
 
@@ -782,7 +709,7 @@ def bm25_scan_search(docs: DataFrame, query: str, k: int = 10,
                      id_col: str = "id", text_col: str = "text") -> DataFrame:
     """Top-k over the scan path (TakeOrderedAndProject — no full sort)."""
     return (bm25_scan_scores(docs, query, id_col, text_col)
-            .orderBy(F.desc("_bm25_score"), F.asc(id_col)).limit(k))
+            .orderBy(F.desc("_bm25_score"), F.asc(ident(id_col))).limit(k))
 
 
 def bm25_score_df(docs: DataFrame, query: str, id_col: str = "id",

@@ -17,8 +17,14 @@ across engines.
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+
+from velesdb_spark.functions.sqlexpr import (double_array_lit,
+                                             double_array_sql, double_lit,
+                                             ident)
 
 METRICS = ("cosine", "euclidean", "dot", "hamming", "jaccard")
 
@@ -42,22 +48,10 @@ def _as_double(col: Column) -> Column:
 # one dim-64 cosine score is ~100 JVM round-trips, ~0.2 s of pure driver
 # time per query construction at bench scale. Parsing the SAME tree from
 # one SQL string is a single round-trip. The text spells exactly what the
-# Column form builds (CAST, same lambda variable names, 0.0D double
-# literals), so analyzed plans and values are identical — pinned by
-# tests/test_vector.py::test_staged_score_sql_fastpath_identity.
-
-_IDENT_RE = None
-
-
-def _ident_sql(name: str) -> str | None:
-    """Backtick-quoted SQL identifier, or None when the column name is
-    not a plain identifier (those callers keep the Column builders)."""
-    global _IDENT_RE
-    if _IDENT_RE is None:
-        import re
-
-        _IDENT_RE = re.compile(r"^[A-Za-z_][A-Za-z0-9_]*$")
-    return f"`{name}`" if _IDENT_RE.match(name) else None
+# Column kernels below build (CAST, same lambda variable names, 0.0D
+# double literals), so analyzed plans and values are identical — pinned
+# by tests/test_vector.py::test_staged_score_sql_fastpath_identity.
+# Names and literals are spelled by functions/sqlexpr.py.
 
 
 def _vec_double_sql(vcol_sql: str) -> str:
@@ -141,15 +135,26 @@ def jaccard_similarity(a: Column, b: Column) -> Column:
     )
 
 
+def _cosine_sql(dot_sql: str, n2_sql: str, qn: float) -> str:
+    """Final cosine arithmetic over a staged dot product and Σx²; the
+    query norm ``qn`` is a plan-time constant."""
+    return (f"CASE WHEN SQRT({n2_sql}) = 0.0D THEN 0.0D "
+            f"ELSE {dot_sql} / (SQRT({n2_sql}) * {double_lit(qn)}) END")
+
+
+def _query_norm(q) -> float:
+    # same left-fold f64 order as the row-level aggregate
+    qn2 = 0.0
+    for x in q:
+        qn2 += x * x
+    return math.sqrt(qn2)
+
+
 def doc_norm2(vector_col: str) -> Column:
     """Σ x², the query-independent half of a cosine score — compute it
     ONCE per row and pass its column name to staged_score(norm2_col=...)
     when scoring the same rows against many queries (knn_batch)."""
-    vsql = _ident_sql(vector_col)
-    if vsql is not None:
-        return F.expr(_norm2_sql(vsql))
-    return F.aggregate(_as_double(F.col(vector_col)), F.lit(0.0),
-                       lambda acc, x: acc + x * x)
+    return F.expr(_norm2_sql(ident(vector_col)))
 
 
 def staged_score(df, vector_col: str, query, metric: str,
@@ -169,78 +174,33 @@ def staged_score(df, vector_col: str, query, metric: str,
     BIT-identical to metric_score (property-tested). ~35 % less per-row
     work for cosine at dim 64.
     """
-    import math
-
-    from velesdb_spark.functions.arraylit import (double_array_lit,
-                                                  double_array_sql)
-
     metric = metric.lower()
     q = [float(x) for x in query]
-    # one-shot SQL fast path (see the builders above): same tree, one
-    # py4j round-trip instead of ~100 per aggregate
-    vsql = _ident_sql(vector_col)
-    asql = double_array_sql(q)
-    fast = vsql is not None and asql is not None
-
-    def _lit_q():
-        return double_array_lit(q)
-
+    vsql, asql = ident(vector_col), double_array_sql(q)
     if metric == "cosine":
-        qn2 = 0.0
-        for x in q:
-            qn2 += x * x
-        qn = math.sqrt(qn2)
+        qn = _query_norm(q)
         if qn == 0.0:
             return df.withColumn(score_col, F.lit(0.0))
-        if fast:
-            dot = F.expr(_dot_sql(vsql, asql))
-        else:
-            dot = F.aggregate(
-                F.zip_with(_as_double(F.col(vector_col)), _lit_q(),
-                           lambda x, y: x * y),
-                F.lit(0.0), lambda acc, x: acc + x)
+        dot = F.expr(_dot_sql(vsql, asql))
         if norm2_col is None:
-            n2 = (F.expr(_norm2_sql(vsql)) if fast
-                  else F.aggregate(_as_double(F.col(vector_col)), F.lit(0.0),
-                                   lambda acc, x: acc + x * x))
-            staged = df.withColumns({"_dot": dot, "_n2": n2})
+            staged = df.withColumns({"_dot": dot,
+                                     "_n2": F.expr(_norm2_sql(vsql))})
             n2name, drops = "_n2", ["_dot", "_n2"]
         else:
             # caller precomputed Σx² (doc_norm2) — reuse across queries
             staged = df.withColumn("_dot", dot)
             n2name, drops = norm2_col, ["_dot"]
-        n2sql = _ident_sql(n2name)
-        if n2sql is not None:
-            # one-shot SQL final (guide §5): same CASE/SQRT tree; qn via
-            # repr so the parsed double is bit-equal
-            out = F.expr(f"CASE WHEN SQRT({n2sql}) = 0.0D THEN 0.0D "
-                         f"ELSE `_dot` / (SQRT({n2sql}) * {qn!r}D) END")
-        else:
-            n2ref = F.col(n2name)
-            out = F.when(F.sqrt(n2ref) == 0.0, F.lit(0.0)).otherwise(
-                F.col("_dot") / (F.sqrt(n2ref) * F.lit(qn)))
+        out = F.expr(_cosine_sql("`_dot`", ident(n2name), qn))
         return staged.withColumn(score_col, out).drop(*drops)
     if metric in ("dot", "dotproduct", "dot_product"):
-        if fast:
-            return df.withColumn(score_col, F.expr(_dot_sql(vsql, asql)))
-        dot = F.aggregate(
-            F.zip_with(_as_double(F.col(vector_col)), _lit_q(),
-                       lambda x, y: x * y),
-            F.lit(0.0), lambda acc, x: acc + x)
-        return df.withColumn(score_col, dot)
+        return df.withColumn(score_col, F.expr(_dot_sql(vsql, asql)))
     if metric in ("euclidean", "l2"):
-        if fast:
-            return df.withColumn(
-                score_col, F.sqrt(F.expr(_euclid2_sql(vsql, asql))))
-        d2 = F.aggregate(
-            F.zip_with(_as_double(F.col(vector_col)), _lit_q(),
-                       lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0), lambda acc, x: acc + x)
-        return df.withColumn(score_col, F.sqrt(d2))
+        return df.withColumn(score_col,
+                             F.sqrt(F.expr(_euclid2_sql(vsql, asql))))
     # hamming/jaccard compare raw elements — the generic form already
     # runs one aggregate per component with no casts
-    return df.withColumn(
-        score_col, metric_score(F.col(vector_col), _lit_q(), metric))
+    return df.withColumn(score_col, metric_score(
+        F.col(vsql), double_array_lit(q), metric))
 
 
 def staged_scores_batch(df, vector_col: str, queries, metric: str,
@@ -260,77 +220,36 @@ def staged_scores_batch(df, vector_col: str, queries, metric: str,
     cosine, pass ``norm2_col`` (a doc_norm2 column) so ‖doc‖² is shared
     across the batch exactly like the per-query path.
     """
-    import math
-
     metric = metric.lower()
+    vsql = ident(vector_col)
     qlists = [[float(x) for x in q] for q in queries]
     if metric == "cosine":
         if norm2_col is None:
             raise ValueError("staged_scores_batch(cosine) needs norm2_col")
-        n2sql = _ident_sql(norm2_col)
         dots, finals, drops = {}, {}, []
         for name, q in zip(names, qlists):
-            qn = math.sqrt(sum(x * x for x in q))
+            qn = _query_norm(q)
             if qn == 0.0:
                 finals[name] = F.lit(0.0)
                 continue
             dcol = f"_dot{name}"
             drops.append(dcol)
-            dots[dcol] = _literal_dot(vector_col, q)
-            dsql = _ident_sql(dcol)
-            if n2sql is not None and dsql is not None:
-                # one-shot SQL (guide §5): same CASE/SQRT tree, one parse;
-                # qn spelled with repr so the parsed double is bit-equal
-                finals[name] = F.expr(
-                    f"CASE WHEN SQRT({n2sql}) = 0.0D THEN 0.0D "
-                    f"ELSE {dsql} / (SQRT({n2sql}) * {qn!r}D) END")
-            else:
-                finals[name] = F.when(
-                    F.sqrt(F.col(norm2_col)) == 0.0, F.lit(0.0)).otherwise(
-                    F.col(dcol) / (F.sqrt(F.col(norm2_col)) * F.lit(qn)))
+            dots[dcol] = F.expr(_dot_sql(vsql, double_array_sql(q)))
+            finals[name] = F.expr(
+                _cosine_sql(ident(dcol), ident(norm2_col), qn))
         out = df.withColumns(dots) if dots else df
         return out.withColumns(finals).drop(*drops)
     if metric in ("dot", "dotproduct", "dot_product"):
         return df.withColumns({
-            name: _literal_dot(vector_col, q)
+            name: F.expr(_dot_sql(vsql, double_array_sql(q)))
             for name, q in zip(names, qlists)})
     if metric in ("euclidean", "l2"):
         return df.withColumns({
-            name: F.sqrt(_literal_euclid2(vector_col, q))
+            name: F.sqrt(F.expr(_euclid2_sql(vsql, double_array_sql(q))))
             for name, q in zip(names, qlists)})
-    from velesdb_spark.functions.arraylit import double_array_lit
-
     return df.withColumns({
-        name: metric_score(F.col(vector_col), double_array_lit(q), metric)
+        name: metric_score(F.col(vsql), double_array_lit(q), metric)
         for name, q in zip(names, qlists)})
-
-
-def _literal_dot(vector_col: str, q) -> Column:
-    """Σ vec_i·q_i against a literal query (fast path when expressible
-    as one SQL string, Column HOFs otherwise)."""
-    from velesdb_spark.functions.arraylit import (double_array_lit,
-                                                  double_array_sql)
-
-    vsql, asql = _ident_sql(vector_col), double_array_sql(q)
-    if vsql is not None and asql is not None:
-        return F.expr(_dot_sql(vsql, asql))
-    return F.aggregate(
-        F.zip_with(_as_double(F.col(vector_col)), double_array_lit(q),
-                   lambda x, y: x * y),
-        F.lit(0.0), lambda acc, x: acc + x)
-
-
-def _literal_euclid2(vector_col: str, q) -> Column:
-    from velesdb_spark.functions.arraylit import (double_array_lit,
-                                                  double_array_sql)
-
-    vsql, asql = _ident_sql(vector_col), double_array_sql(q)
-    if vsql is not None and asql is not None:
-        return F.expr(_euclid2_sql(vsql, asql))
-    return F.aggregate(
-        F.zip_with(_as_double(F.col(vector_col)), double_array_lit(q),
-                   lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0), lambda acc, x: acc + x)
 
 
 def metric_score(a: Column, b: Column, metric: str) -> Column:

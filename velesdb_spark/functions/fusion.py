@@ -16,36 +16,26 @@ are per-query top-k lists); fusion itself is a groupBy(id) partial-aggregate.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from velesdb_spark.functions.arraylit import double_array_lit
+from velesdb_spark.functions.sqlexpr import (double_array_lit, double_lit,
+                                             ident, str_lit)
 
 RRF_K = 60
-
-
-def _idents(*names: str) -> bool:
-    import re
-
-    return all(re.fullmatch(r"[A-Za-z_][A-Za-z0-9_]*", n) for n in names)
 
 
 def with_rank(results: DataFrame, qid_col: str = "qid", id_col: str = "id",
               score_col: str = "score", higher_is_better: bool = True) -> DataFrame:
     """0-based rank per query list, score-ordered, id tie-break (deterministic
-    stand-in for the reference's insertion order)."""
-    if _idents(qid_col, id_col, score_col):
-        # one-shot SQL fast path (guide §5): one parse round-trip builds
-        # the same window tree (DESC is NULLS LAST / ASC NULLS FIRST by
-        # default, matching F.desc/F.asc); rank is an int — no FP concerns
-        direction = "DESC" if higher_is_better else "ASC"
-        return results.selectExpr(
-            "*",
-            f"(row_number() OVER (PARTITION BY {qid_col} ORDER BY "
-            f"{score_col} {direction}, {id_col} ASC) - 1) AS _rank")
-    order = [F.desc(score_col) if higher_is_better else F.asc(score_col), F.asc(id_col)]
-    w = Window.partitionBy(qid_col).orderBy(*order)
-    return results.withColumn("_rank", F.row_number().over(w) - 1)
+    stand-in for the reference's insertion order). An existing ``_rank``
+    column is replaced."""
+    # one parsed window expression (guide §5); DESC is NULLS LAST and ASC
+    # NULLS FIRST by default, matching F.desc/F.asc
+    direction = "DESC" if higher_is_better else "ASC"
+    return results.withColumn("_rank", F.expr(
+        f"row_number() OVER (PARTITION BY {ident(qid_col)} ORDER BY "
+        f"{ident(score_col)} {direction}, {ident(id_col)} ASC) - 1"))
 
 
 def fuse_rrf(results: DataFrame, k: int = RRF_K, qid_col: str = "qid",
@@ -53,14 +43,8 @@ def fuse_rrf(results: DataFrame, k: int = RRF_K, qid_col: str = "qid",
              higher_is_better: bool = True) -> DataFrame:
     """Multi-list RRF: Σ 1/(k + rank+1) (strategy.rs:223-250, hybrid.rs:112-149)."""
     ranked = with_rank(results, qid_col, id_col, score_col, higher_is_better)
-    if _idents(id_col):
-        # same tree as the Column form: ((k + _rank) + 1.0), summed
-        return ranked.groupBy(id_col).agg(F.expr(
-            f"sum(1.0D / ({float(k)!r}D + _rank + 1.0D)) AS score"))
-    return (
-        ranked.groupBy(id_col)
-        .agg(F.sum(1.0 / (F.lit(float(k)) + F.col("_rank") + 1.0)).alias("score"))
-    )
+    return ranked.groupBy(ident(id_col)).agg(F.expr(
+        f"sum(1.0D / ({double_lit(k)} + _rank + 1.0D)) AS score"))
 
 
 def fuse_hybrid_rrf(results: DataFrame, weights: dict | None = None,
@@ -69,23 +53,21 @@ def fuse_hybrid_rrf(results: DataFrame, weights: dict | None = None,
     """Hybrid-search RRF: Σ weight_q/(rank + 60), 0-based rank
     (text.rs:150-162). ``weights`` maps qid → weight (default 1.0)."""
     ranked = with_rank(results, qid_col, id_col, score_col, True)
-    if not weights and _idents(id_col):
-        # unweighted fast path: wcol folds to 1.0 — same tree, one parse
-        return (ranked
-                .withColumn("_rrf",
-                            F.expr(f"1.0D / (_rank + {float(RRF_K)!r}D)"))
-                .groupBy(id_col)
-                .agg(F.expr("sum(_rrf) AS score")))
+    weight = "1.0D"
     if weights:
-        wmap = F.create_map(*[F.lit(x) for kv in weights.items() for x in kv])
-        wcol = F.coalesce(wmap[F.col(qid_col)], F.lit(1.0))
-    else:
-        wcol = F.lit(1.0)
-    return (
-        ranked.withColumn("_rrf", wcol / (F.col("_rank") + float(RRF_K)))
-        .groupBy(id_col)
-        .agg(F.sum("_rrf").alias("score"))
-    )
+        pairs = ",".join(f"{_key_lit(q)}, {double_lit(w)}"
+                         for q, w in weights.items())
+        weight = f"coalesce(map({pairs})[{ident(qid_col)}], 1.0D)"
+    return (ranked
+            .withColumn("_rrf", F.expr(
+                f"{weight} / (_rank + {double_lit(RRF_K)})"))
+            .groupBy(ident(id_col))
+            .agg(F.expr("sum(_rrf) AS score")))
+
+
+def _key_lit(q) -> str:
+    # qids are list tags (str) or query numbers (int)
+    return str_lit(q) if isinstance(q, str) else str(int(q))
 
 
 def fuse_average(results: DataFrame, qid_col: str = "qid", id_col: str = "id",

@@ -45,8 +45,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from velesdb_spark.functions.similarity import LSH_SEED, _kmeans_np
-from velesdb_spark.functions.arraylit import (double_array_lit,
-                                               double_matrix_lit)
+from velesdb_spark.functions.sqlexpr import (double_array_lit,
+                                             double_matrix_lit)
 
 # JVM-literal path bound: m * ksub element_at/argmin terms stay small
 # enough for codegen; above this the codebooks move into an Arrow UDF

@@ -22,7 +22,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from velesdb_spark.functions.arraylit import double_array_lit
+from velesdb_spark.functions.sqlexpr import double_array_lit
 
 from velesdb_spark.functions.distance import cosine_similarity, metric_score
 from velesdb_spark.operators.topk import vector_lit

@@ -32,7 +32,7 @@ from typing import Optional, Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from velesdb_spark.functions.arraylit import double_array_lit
+from velesdb_spark.functions.sqlexpr import double_array_lit, ident, str_lit
 
 from velesdb_spark.velesql import ast
 
@@ -337,20 +337,11 @@ def triangle_counts(edges: DataFrame, src: str = "src",
 # --------------------------------------------------------------- MATCH
 
 
-def _is_ident(name: str) -> bool:
-    import re
-
-    return bool(re.fullmatch(r"[A-Za-z_][A-Za-z0-9_]*", name))
-
-
 def _node_filter(nodes: DataFrame, pat: ast.NodePattern, value_of) -> DataFrame:
     out = nodes
     for lbl in pat.labels:
-        if _is_ident(lbl):
-            # one-shot SQL (guide §5): same ArrayContains tree, one parse
-            out = out.filter(f"array_contains(labels, '{lbl}')")
-        else:
-            out = out.filter(F.array_contains(F.col("labels"), lbl))
+        # one-shot SQL (guide §5): same ArrayContains tree, one parse
+        out = out.filter(f"array_contains(labels, {str_lit(lbl)})")
     for name, val in pat.properties:
         v = value_of(val)
         if v is None:
@@ -456,15 +447,10 @@ def translate_match(q: ast.MatchQuery, catalog, params: Optional[dict] = None,
     out = cur
     for a in needed:
         cols = [c for c in nodes.columns if c != id_col]
-        if _is_ident(a) and _is_ident(id_col) and all(map(_is_ident, cols)):
-            # one-shot SQL aliases (guide §5): same trees, one parse each
-            props = nodes.selectExpr(
-                f"{id_col} AS _b_{a}", *[f"{c} AS {a}__{c}" for c in cols])
-        else:
-            props = nodes.select(
-                F.col(id_col).alias(f"_b_{a}"),
-                *[F.col(c).alias(f"{a}__{c}") for c in cols],
-            )
+        # one-shot SQL aliases (guide §5): same trees, one parse each
+        props = nodes.selectExpr(
+            f"{ident(id_col)} AS {ident(f'_b_{a}')}",
+            *[f"{ident(c)} AS {ident(f'{a}__{c}')}" for c in cols])
         out = out.join(props, on=f"_b_{a}", how="left")
 
     def resolve(name: str) -> Column:
@@ -534,12 +520,10 @@ def translate_match(q: ast.MatchQuery, catalog, params: Optional[dict] = None,
 
 def _rel_join(cur: DataFrame, e: DataFrame, src_col: str, dst_col: str,
               direction: str) -> DataFrame:
-    fast = _is_ident(src_col) and _is_ident(dst_col)
-
     def _edge_sel(a: str, b: str) -> DataFrame:
-        if fast:  # same alias trees, one parse round-trip per column
-            return e.selectExpr(f"{a} AS {src_col}", f"{b} AS {dst_col}")
-        return e.select(F.col(a).alias(src_col), F.col(b).alias(dst_col))
+        # same alias trees, one parse round-trip per column
+        return e.selectExpr(f"{a} AS {ident(src_col)}",
+                            f"{b} AS {ident(dst_col)}")
 
     outs = []
     if direction in ("out", "both"):

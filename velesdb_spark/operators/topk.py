@@ -28,6 +28,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from velesdb_spark.functions.distance import higher_is_better, metric_score
+from velesdb_spark.functions.sqlexpr import double_array_lit, ident
 
 DEFAULT_K = 10
 # The single-scan path inlines every query as plan literals (Q·dim of
@@ -39,8 +40,6 @@ BATCH_LITERAL_BUDGET = 8192
 
 
 def vector_lit(vec: Sequence[float]) -> Column:
-    from velesdb_spark.functions.arraylit import double_array_lit
-
     return double_array_lit(vec)
 
 
@@ -55,8 +54,9 @@ def with_score(df: DataFrame, query_vector: Sequence[float], metric: str = "cosi
 
 
 def _best_order(score_col: str, metric: str, id_col: str) -> list[Column]:
-    best = F.desc(score_col) if higher_is_better(metric) else F.asc(score_col)
-    return [best, F.asc(id_col)]
+    score = ident(score_col)
+    best = F.desc(score) if higher_is_better(metric) else F.asc(score)
+    return [best, F.asc(ident(id_col))]
 
 
 def knn(df: DataFrame, query_vector: Sequence[float], k: int = DEFAULT_K,
@@ -167,7 +167,8 @@ def knn_batch(df: DataFrame, queries: Iterable[tuple[int, Sequence[float]]],
     base = df.filter(filter_cond) if filter_cond is not None else df
     if not qrows:  # empty batch → empty (qid, id, score) result
         return base.select(F.lit(0).cast("bigint").alias("qid"),
-                           F.col(id_col), F.lit(0.0).alias("score")).limit(0)
+                           F.col(ident(id_col)),
+                           F.lit(0.0).alias("score")).limit(0)
     if len(qrows) * len(qrows[0][1]) <= BATCH_LITERAL_BUDGET:
         # Small batches: ONE scan scoring every query as a staged column
         # (queries ride as plan literals — fine while Q·dim stays small),
@@ -196,25 +197,14 @@ def knn_batch(df: DataFrame, queries: Iterable[tuple[int, Sequence[float]]],
         scored = staged_scores_batch(
             scored, vector_col, [vec for _, vec in qrows], metric,
             [name for _, name in cols], norm2_col=n2col)
-        from velesdb_spark.functions.distance import _ident_sql
-
-        idsql = _ident_sql(id_col)
-        if idsql is not None:
-            # one parsed expression for the (qid, score) struct array —
-            # the F.struct/F.lit loop costs ~8 py4j round-trips per query
-            pairs_sql = "array(" + ",".join(
-                f"named_struct('qid', {int(qid)}L, 'score', `{name}`)"
-                for qid, name in cols) + ")"
-            long = (scored.selectExpr(idsql, f"explode({pairs_sql}) AS _p")
-                    .selectExpr("_p.qid AS qid", idsql,
-                                "_p.score AS score"))
-        else:
-            pairs = F.array(*[
-                F.struct(F.lit(qid).cast("bigint").alias("qid"),
-                         F.col(name).alias("score")) for qid, name in cols])
-            long = (scored.select(F.col(id_col), F.explode(pairs).alias("_p"))
-                    .select(F.col("_p.qid").alias("qid"), id_col,
-                            F.col("_p.score").alias("score")))
+        # one parsed expression for the (qid, score) struct array — the
+        # F.struct/F.lit loop costs ~8 py4j round-trips per query
+        idsql = ident(id_col)
+        pairs_sql = "array(" + ",".join(
+            f"named_struct('qid', {int(qid)}L, 'score', {ident(name)})"
+            for qid, name in cols) + ")"
+        long = (scored.selectExpr(idsql, f"explode({pairs_sql}) AS _p")
+                .selectExpr("_p.qid AS qid", idsql, "_p.score AS score"))
         w = Window.partitionBy("qid") \
             .orderBy(*_best_order("score", metric, id_col))
         return (long.withColumn("_rn", F.row_number().over(w))
@@ -222,8 +212,9 @@ def knn_batch(df: DataFrame, queries: Iterable[tuple[int, Sequence[float]]],
     qdf = spark.createDataFrame(qrows, "qid bigint, _qvec array<double>")
     scored = (
         base.join(F.broadcast(qdf))
-        .withColumn("score", metric_score(F.col(vector_col), F.col("_qvec"), metric))
-        .select("qid", F.col(id_col).alias(id_col), "score")
+        .withColumn("score", metric_score(F.col(ident(vector_col)),
+                                          F.col("_qvec"), metric))
+        .select("qid", F.col(ident(id_col)), "score")
     )
     w = Window.partitionBy("qid").orderBy(*_best_order("score", metric, id_col))
     return (

@@ -22,7 +22,7 @@ from typing import Optional
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from velesdb_spark.functions.arraylit import double_array_lit
+from velesdb_spark.functions.sqlexpr import double_array_lit
 
 from velesdb_spark.functions import fusion as fusion_mod
 from velesdb_spark.functions.distance import (
