@@ -82,6 +82,7 @@ def int_array_lit(values: Sequence[int]) -> Column:
 
 def double_matrix_lit(rows: Sequence[Sequence[float]]) -> Column:
     """ARRAY<ARRAY<DOUBLE>> literal (PQ codebooks, centroid tables)."""
-    if not rows:
+    body = [double_array_sql(r) for r in rows]
+    if not body:
         return F.array().cast("array<array<double>>")
-    return F.expr("array(" + ",".join(map(double_array_sql, rows)) + ")")
+    return F.expr("array(" + ",".join(body) + ")")
