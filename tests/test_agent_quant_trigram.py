@@ -259,22 +259,6 @@ def test_intersect_results(spark):
 
 # ------------------------------------------------------------- persistence
 
-def test_bm25_index_save_load(spark, tmp_path):
-    from velesdb_spark.functions.bm25 import Bm25Index
-
-    rows = [(1, "rust programming language"), (2, "python data science"),
-            (3, "rust all the way"), (4, "the quick brown fox")]
-    df = spark.createDataFrame(rows, "id bigint, text string")
-    idx = Bm25Index(df)
-    want = [(r.id, round(r._bm25_score, 9)) for r in idx.search("rust", 4).collect()]
-
-    path = str(tmp_path / "bm25idx")
-    idx.save(path, term_buckets=4)
-    back = Bm25Index.load(spark, path)
-    got = [(r.id, round(r._bm25_score, 9)) for r in back.search("rust", 4).collect()]
-    assert got == want and len(got) == 2
-
-
 def test_lsh_index_save_load(spark, tmp_path):
     import numpy as np
 

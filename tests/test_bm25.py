@@ -313,15 +313,18 @@ def test_incremental_bm25_differential_fuzz(spark, tmp_path):
 
 
 def test_incremental_update_on_loaded_index(spark, corpus, tmp_path):
-    """incremental_update on a Bm25Index.load()ed (bucketed) index must
-    compose — the saved postings carry the _tb partition column, so the
-    delta's postings get the SAME bucket expression before the union (a
-    naive unionByName would raise AnalysisException) and term_buckets
-    rides onto the composed index so pruning survives the mutation."""
+    """incremental_update on an opened IncrementalBm25Index view (bucketed
+    postings) must compose — the snapshot postings carry the _tb partition
+    column, so the delta's postings get the SAME bucket expression before
+    the union (a naive unionByName would raise AnalysisException) and
+    term_buckets rides onto the composed index so pruning survives the
+    mutation."""
+    from velesdb_spark.functions.bm25 import IncrementalBm25Index
+
     df, docs = corpus
     path = str(tmp_path / "bm25_upd")
-    Bm25Index(df).save(path, term_buckets=16)
-    idx = Bm25Index.load(spark, path)
+    IncrementalBm25Index.build(df, path, term_buckets=16)
+    idx = IncrementalBm25Index(spark, path).as_bm25()
 
     batch = [(2, "rust data pipelines"), (8, "go and rust tooling")]
     upd = idx.incremental_update(
@@ -340,16 +343,16 @@ def test_incremental_update_on_loaded_index(spark, corpus, tmp_path):
 
 
 def test_term_filter_reaches_postings_scan(spark, corpus, tmp_path):
-    """A saved-index search must prune at BOTH levels: partition filters on
-    the term-bucket column (reads only the query terms' directories) AND
+    """A snapshot-index search must prune at BOTH levels: partition filters
+    on the term-bucket column (reads only the query terms' directories) AND
     pushed In(term, ...) filters for row-group skipping — the properties
     that keep a 100 TB postings search from reading the whole table."""
-    from velesdb_spark.functions.bm25 import term_bucket_py
+    from velesdb_spark.functions.bm25 import (IncrementalBm25Index,
+                                              term_bucket_py)
 
     df, _ = corpus
     path = str(tmp_path / "bm25_saved")
-    Bm25Index(df).save(path, term_buckets=16)
-    idx = Bm25Index.load(spark, path)
+    idx = IncrementalBm25Index.build(df, path, term_buckets=16).as_bm25()
     assert idx.term_buckets == 16
     plan = idx.search("rust programming", 5) \
         ._jdf.queryExecution().executedPlan().toString()
@@ -360,7 +363,8 @@ def test_term_filter_reaches_postings_scan(spark, corpus, tmp_path):
     # driver-side bucket derivation matches the written layout
     import os
     want = {term_bucket_py(t, 16) for t in ("rust", "programming")}
-    dirs = {int(d.split("=")[1]) for d in os.listdir(f"{path}/postings")
+    postings_dir = f"{path}/snapshot/v=1/postings"
+    dirs = {int(d.split("=")[1]) for d in os.listdir(postings_dir)
             if d.startswith("_tb=")}
     assert want <= dirs
 
@@ -370,6 +374,53 @@ def test_term_filter_reaches_postings_scan(spark, corpus, tmp_path):
     want_scores = [(r.id, round(r._bm25_score, 9))
                    for r in Bm25Index(df).search("rust programming", 5).collect()]
     assert got == want_scores
+
+
+def test_composed_term_df_lookup_pushes_term_filter(spark, corpus, tmp_path):
+    """With a log segment on top of the snapshot, the df lookup a search
+    makes (term_df filtered on the query terms) must still push
+    In(term, ...) into EVERY snapshot-postings scan: term df is aggregated
+    from the composed postings, so the filter passes the aggregate, the
+    union and the anti join down to the parquet reader."""
+    from velesdb_spark.functions.bm25 import IncrementalBm25Index
+
+    df, _ = corpus
+    path = str(tmp_path / "bm25_push")
+    idx = IncrementalBm25Index.build(df, path, term_buckets=4)
+    idx.upsert_docs(spark.createDataFrame(
+        [(2, "rust data pipelines")], "id bigint, text string"))
+    terms = ["rust", "programming"]
+    # untruncated scan locations, so the snapshot scans can be told apart
+    spark.conf.set("spark.sql.maxMetadataStringLength", "10000")
+    try:
+        plan = (idx.as_bm25().term_df.filter(F.col("term").isin(terms))
+                ._jdf.queryExecution().executedPlan().toString())
+    finally:
+        spark.conf.unset("spark.sql.maxMetadataStringLength")
+    scans = [ln for ln in plan.splitlines()
+             if "FileScan" in ln and "snapshot/v=1/postings" in ln]
+    assert scans, plan
+    for ln in scans:
+        pushed = ln.split("PushedFilters:", 1)[1]
+        assert "In(term" in pushed, ln
+    got = {r.term: r.df for r in idx.as_bm25().term_df
+           .filter(F.col("term").isin(terms)).collect()}
+    assert got == {"rust": 4, "programming": 2}
+
+
+def test_incremental_index_delete_all_docs(spark, corpus, tmp_path):
+    """Deleting every document leaves an empty corpus (n_docs = 0, avgdl
+    NULL): searches return no rows instead of failing on the corpus
+    stats."""
+    from velesdb_spark.functions.bm25 import IncrementalBm25Index
+
+    df, docs = corpus
+    idx = IncrementalBm25Index.build(df, str(tmp_path / "bm25_empty"),
+                                     term_buckets=4)
+    idx.delete_docs(list(docs))
+    assert idx.search("rust programming", 5).collect() == []
+    col_idx = Bm25Index(df).incremental_update(deleted_ids=list(docs))
+    assert col_idx.search("rust programming", 5).collect() == []
 
 
 def test_staging_registry_bounded(spark):

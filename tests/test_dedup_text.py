@@ -687,6 +687,27 @@ def test_dedup_keep_best_prefers_quality_over_min_id(spark):
                                          prefer_col="qlen", prefer="avg")
 
 
+def test_ngram_pairs_staging_respects_cap(spark, monkeypatch):
+    """ngram_jaccard_pairs registers its shingle frame through
+    staging.stage(), so the registry's MAX_STAGED eviction bounds it: a
+    session running many distinct near-dup queries cannot pile up one
+    cached frame per query."""
+    from velesdb_spark.functions import staging
+
+    staging.release_staged()
+    monkeypatch.setattr(staging, "MAX_STAGED", 2)
+    try:
+        for i in range(3):
+            df = spark.createDataFrame(
+                [(1, f"alpha beta gamma delta {i}"),
+                 (2, f"alpha beta gamma delta epsilon {i}")],
+                "id bigint, text string")
+            dedup.ngram_jaccard_pairs(df, 0.3).collect()
+            assert staging.staged_count() <= 2
+    finally:
+        staging.release_staged()
+
+
 def test_weighted_sample_proportions_and_determinism(spark):
     """Max-of-w-hashes weighted sampling: P(top pick) proportional to
     weight — verified empirically over many seeds — plus exact

@@ -68,6 +68,25 @@ def term_bucket_py(term: str, n_buckets: int) -> int:
     return int(hashlib.md5(term.encode()).hexdigest()[:8], 16) % n_buckets
 
 
+def _tokenized(docs: DataFrame, id_col: str,
+               text_col: str) -> tuple[DataFrame, DataFrame]:
+    """(postings, doc_lengths) of ``docs``: tf per (term, doc) and token
+    count per doc."""
+    from velesdb_spark.functions.util import spread
+
+    # Stage the token array before exploding (keeps the regex chain out
+    # of the generator) and spread small single-file inputs across cores.
+    toks = spread(docs).select(
+        F.col(id_col).alias("_doc_id"),
+        tokenize(F.col(text_col)).alias("_toks"),
+    )
+    tokens = toks.select("_doc_id", F.explode("_toks").alias("term"))
+    # Per-doc length; empty docs are NOT indexed (bm25.rs:146-148)
+    doc_lengths = tokens.groupBy("_doc_id").agg(F.count("*").alias("dl"))
+    postings = tokens.groupBy("term", "_doc_id").agg(F.count("*").alias("tf"))
+    return postings, doc_lengths
+
+
 class Bm25Index:
     """Corpus statistics for BM25 over (id, text) — all lazy DataFrames.
 
@@ -75,32 +94,10 @@ class Bm25Index:
     becomes the postings build; ``search`` becomes a score join.
     """
 
-    term_buckets: int | None = None  # set on saved/loaded indexes
-
     def __init__(self, docs: DataFrame, id_col: str = "id", text_col: str = "text",
                  cache: bool = False):
-        from velesdb_spark.functions.util import spread
-
-        self.id_col = id_col
         spark = docs.sparkSession
-        # Stage the token array before exploding (keeps the regex chain out
-        # of the generator) and spread small single-file inputs across cores.
-        toks = spread(docs).select(
-            F.col(id_col).alias("_doc_id"),
-            tokenize(F.col(text_col)).alias("_toks"),
-        )
-        tokens = toks.select("_doc_id", F.explode("_toks").alias("term"))
-        # Per-doc length; empty docs are NOT indexed (bm25.rs:146-148)
-        self.doc_lengths = tokens.groupBy("_doc_id").agg(F.count("*").alias("dl"))
-        # Postings: term frequency per (term, doc)
-        self.postings = tokens.groupBy("term", "_doc_id").agg(F.count("*").alias("tf"))
-        # Document frequency per term
-        self.term_df = self.postings.groupBy("term").agg(F.count("*").alias("df"))
-        # Corpus stats: N and avgdl (1-row DataFrame, broadcastable)
-        self.stats = self.doc_lengths.agg(
-            F.count("*").alias("n_docs"), F.avg("dl").alias("avgdl")
-        )
-        self.spark = spark
+        self._attach(spark, id_col, *_tokenized(docs, id_col, text_col))
         if cache:
             self.postings = self.postings.cache()
             self.doc_lengths = self.doc_lengths.cache()
@@ -127,15 +124,43 @@ class Bm25Index:
                                  .repartitionByRange(max(8, par // 4), "term")
                                  .sortWithinPartitions("term").cache())
 
-    def query_terms_df(self, query: str) -> DataFrame:
-        """Query token bag with multiplicities (duplicate terms multiply)."""
-        terms = tokenize_py(query)
-        counts: dict[str, int] = {}
-        for t in terms:
-            counts[t] = counts.get(t, 0) + 1
-        rows = [(t, c) for t, c in counts.items()] or []
-        return self.spark.createDataFrame(rows, "term string, qtf int") if rows else \
-            self.spark.createDataFrame([], "term string, qtf int")
+    def _attach(self, spark, id_col: str, postings: DataFrame,
+                doc_lengths: DataFrame,
+                term_buckets: int | None = None) -> "Bm25Index":
+        """Set the index frames. Term df and the corpus stats are always
+        derived from (postings, doc_lengths) — for a fresh build, a
+        snapshot and a composed snapshot+delta view alike — so a df lookup
+        filtered on its terms pushes down to the postings scans."""
+        self.spark = spark
+        self.id_col = id_col
+        self.term_buckets = term_buckets
+        self.postings = postings
+        self.doc_lengths = doc_lengths
+        # Document frequency per term
+        self.term_df = postings.groupBy("term").agg(F.count("*").alias("df"))
+        # Corpus stats: N and avgdl (1-row DataFrame, broadcastable)
+        self.stats = doc_lengths.agg(
+            F.count("*").alias("n_docs"), F.avg("dl").alias("avgdl"))
+        return self
+
+    def _compose(self, shadowed: DataFrame, add_postings: DataFrame | None,
+                 add_dl: DataFrame | None) -> "Bm25Index":
+        """This index minus the ``shadowed`` docs, plus a delta (none for a
+        delete-only batch). The base is never shuffled — shadowed-doc
+        removal is a broadcast anti join — and delta postings get the
+        base's ``_tb`` bucket column so the union stays uniformly
+        bucketed."""
+        shadowed = F.broadcast(shadowed)
+        postings = self.postings.join(shadowed, "_doc_id", "left_anti")
+        doc_lengths = self.doc_lengths.join(shadowed, "_doc_id", "left_anti")
+        if add_postings is not None:
+            if self.term_buckets:
+                add_postings = add_postings.withColumn(
+                    "_tb", term_bucket_expr(F.col("term"), self.term_buckets))
+            postings = postings.unionByName(add_postings)
+            doc_lengths = doc_lengths.unionByName(add_dl)
+        return Bm25Index.__new__(Bm25Index)._attach(
+            self.spark, self.id_col, postings, doc_lengths, self.term_buckets)
 
     def _corpus_stats(self) -> tuple[int, float]:
         """(n_docs, avgdl), collected once per index instance. The
@@ -164,7 +189,7 @@ class Bm25Index:
         - the term-membership filter is applied EXPLICITLY to the
           postings before any other op — Catalyst pushes it through to
           the parquet scans (PushedFilters: In(term, ...)), so a search
-          over a saved or snapshot+delta index reads only row groups
+          over a snapshot or snapshot+delta index reads only row groups
           (and, via the literal ``_tb`` bucket ids, only PARTITIONS)
           containing its terms instead of the whole postings table;
         - per-term IDF·qtf weights are folded driver-side from a bounded
@@ -201,7 +226,7 @@ class Bm25Index:
         base = getattr(self, "_postings_dl", None)
         src = base if base is not None else self.postings
         if self.term_buckets and "_tb" in src.columns:
-            # literal bucket ids → PARTITION pruning on the saved layout,
+            # literal bucket ids → PARTITION pruning on the snapshot layout,
             # not just row-group skipping
             bkts = sorted({term_bucket_py(t, self.term_buckets)
                            for t in weights})
@@ -239,123 +264,23 @@ class Bm25Index:
         """Composed index after an upsert/delete batch WITHOUT re-tokenizing
         the corpus: only ``new_docs`` go through tokenize/explode; the
         existing postings/doc_lengths (cached by the collection) are reused
-        behind a broadcast anti join on the mutated ids, and term df is
-        adjusted arithmetically. The in-memory twin of
-        IncrementalBm25Index.as_bm25()."""
-        spark = self.spark
+        behind a broadcast anti join on the mutated ids. The in-memory twin
+        of IncrementalBm25Index.as_bm25(); both go through _compose."""
         shadow_parts = []
-        delta = None
+        add_postings = add_dl = None
         if new_docs is not None:
-            delta = Bm25Index(new_docs, id_col=self.id_col, text_col=text_col)
+            add_postings, add_dl = _tokenized(new_docs, self.id_col, text_col)
             shadow_parts.append(new_docs.select(
                 F.col(self.id_col).alias("_doc_id")))
         if deleted_ids:
-            shadow_parts.append(spark.createDataFrame(
+            shadow_parts.append(self.spark.createDataFrame(
                 [(int(i),) for i in deleted_ids], "_doc_id bigint"))
         if not shadow_parts:
             return self
         shadowed = shadow_parts[0]
         for p in shadow_parts[1:]:
             shadowed = shadowed.unionByName(p)
-        shadowed = shadowed.distinct()
-
-        out = Bm25Index.__new__(Bm25Index)
-        out.id_col = self.id_col
-        out.spark = spark
-        kept_postings = self.postings.join(
-            F.broadcast(shadowed), "_doc_id", "left_anti")
-        kept_dl = self.doc_lengths.join(
-            F.broadcast(shadowed), "_doc_id", "left_anti")
-        rem_tdf = (self.postings
-                   .join(F.broadcast(shadowed), "_doc_id", "left_semi")
-                   .groupBy("term").agg(F.count("*").alias("_rem")))
-        if delta is not None:
-            delta_postings = delta.postings
-            if "_tb" in kept_postings.columns:
-                if self.term_buckets:
-                    # loaded (bucketed) index: compute the SAME bucket for
-                    # the delta rows so the union keeps the pruning column
-                    # (what as_bm25() does for log deltas)
-                    delta_postings = delta_postings.withColumn(
-                        "_tb", term_bucket_expr(F.col("term"),
-                                                self.term_buckets))
-                else:
-                    kept_postings = kept_postings.drop("_tb")
-            out.postings = kept_postings.unionByName(delta_postings)
-            out.doc_lengths = kept_dl.unionByName(delta.doc_lengths)
-            add_tdf = delta.term_df.withColumnRenamed("df", "_add")
-        else:
-            out.postings = kept_postings
-            out.doc_lengths = kept_dl
-            add_tdf = spark.createDataFrame([], "term string, _add bigint")
-        out.term_buckets = self.term_buckets
-        out.term_df = (
-            self.term_df.join(rem_tdf, "term", "full")
-            .join(add_tdf, "term", "full")
-            .select("term", (F.coalesce(F.col("df"), F.lit(0))
-                             - F.coalesce(F.col("_rem"), F.lit(0))
-                             + F.coalesce(F.col("_add"), F.lit(0))).alias("df"))
-            .filter(F.col("df") > 0))
-        # narrow map-combinable agg over the composed (mostly cached) dl set
-        out.stats = out.doc_lengths.agg(
-            F.count("*").alias("n_docs"), F.avg("dl").alias("avgdl"))
-        return out
-
-    def save(self, path: str, term_buckets: int = 64) -> str:
-        """Materialize the inverted index to parquet. Postings are written
-        bucketed by a hash of the term so a query's score join reads only
-        its terms' buckets (the 100 TB layout; locally the same files).
-
-        The reference persists its index on flush (crud.rs flush →
-        index/bm25.rs serialization); this is that, as columnar artifacts.
-        """
-        import json
-        import os
-
-        # persist the shared tokenize/explode lineage: term_df derives from
-        # postings and stats from doc_lengths — without this, the four
-        # writes would each re-scan and re-shuffle the whole corpus
-        postings = self.postings.persist()
-        doc_lengths = self.doc_lengths.persist()
-        try:
-            (postings
-             .withColumn("_tb", term_bucket_expr(F.col("term"), term_buckets))
-             .write.mode("overwrite").partitionBy("_tb")
-             .parquet(f"{path}/postings"))
-            doc_lengths.write.mode("overwrite").parquet(f"{path}/doc_lengths")
-            postings.groupBy("term").agg(F.count("*").alias("df")) \
-                .write.mode("overwrite").parquet(f"{path}/term_df")
-            doc_lengths.agg(
-                F.count("*").alias("n_docs"), F.avg("dl").alias("avgdl")) \
-                .write.mode("overwrite").parquet(f"{path}/stats")
-        finally:
-            postings.unpersist()
-            doc_lengths.unpersist()
-        with open(os.path.join(path, "_meta.json"), "w") as f:
-            json.dump({"term_buckets": term_buckets}, f)
-        return path
-
-    @classmethod
-    def load(cls, spark, path: str, id_col: str = "id") -> "Bm25Index":
-        """Open a saved index without recomputing corpus statistics. The
-        bucket column rides along so scores() can prune partitions."""
-        import json
-        import os
-
-        idx = cls.__new__(cls)
-        idx.id_col = id_col
-        idx.spark = spark
-        idx.postings = spark.read.parquet(f"{path}/postings")
-        idx.doc_lengths = spark.read.parquet(f"{path}/doc_lengths")
-        idx.term_df = spark.read.parquet(f"{path}/term_df")
-        idx.stats = spark.read.parquet(f"{path}/stats")
-        try:
-            with open(os.path.join(path, "_meta.json")) as f:
-                idx.term_buckets = json.load(f)["term_buckets"]
-        except (FileNotFoundError, KeyError):
-            idx.term_buckets = None  # pre-meta layout: no pruning
-            idx.postings = idx.postings.drop("_tb")
-        return idx
+        return self._compose(shadowed.distinct(), add_postings, add_dl)
 
 
 class IncrementalBm25Index:
@@ -367,18 +292,24 @@ class IncrementalBm25Index:
     - ``upsert_docs``/``delete_docs`` append one immutable log segment
       computed from ONLY the mutated docs (tokenize cost ∝ batch size,
       never corpus size — no full re-index per upsert→search cycle).
-    - Search composes the live view lazily: snapshot postings minus
-      shadowed docs, union the log's last-writer-wins postings; term df
-      and corpus stats are adjusted arithmetically from the (small) delta
-      instead of re-aggregated from the corpus. The snapshot is never
-      shuffled — shadowed-doc removal is a broadcast anti join.
+    - ``as_bm25()`` opens the live view lazily: snapshot postings minus
+      shadowed docs, union the log's last-writer-wins postings — the same
+      composition Bm25Index.incremental_update runs in memory. Term df
+      and corpus stats are aggregated from the composed frames. The
+      snapshot is never shuffled — shadowed-doc removal is a broadcast
+      anti join.
     - ``compact()`` folds the log into a new snapshot version and
-      truncates the log atomically (manifest rename is the commit point).
+      truncates the log atomically (manifest rename is the commit point);
+      ``vacuum()`` then deletes what the manifest no longer references.
 
-    Layout: MANIFEST.json, snapshot/v=N/{postings,doc_lengths,term_df,
-    stats}, log/NNNNNN.parquet with rows (_doc_id, term, tf, dl, _op,
-    _seq); a delete (or an upsert whose new text has no tokens) is a
-    single term=NULL tombstone row.
+    ``build()`` plus ``IncrementalBm25Index(spark, path).as_bm25()`` is
+    the way to persist and reopen a BM25 index.
+
+    Layout: MANIFEST.json (snapshot, segments, seq, term_buckets),
+    snapshot/v=N/{postings partitioned by _tb, doc_lengths},
+    log/NNNNNN.parquet with rows (_doc_id, term, tf, dl, _op, _seq); a
+    delete (or an upsert whose new text has no tokens) is a single
+    term=NULL tombstone row.
     """
 
     def __init__(self, spark, path: str, id_col: str = "id",
@@ -398,54 +329,35 @@ class IncrementalBm25Index:
         join reads only its terms' buckets); small corpora can use fewer
         to cut per-directory write overhead."""
         idx = cls(docs.sparkSession, path, id_col, text_col)
-        idx.term_buckets = term_buckets
-        idx._write_snapshot(Bm25Index(docs, id_col=id_col, text_col=text_col),
-                            version=1, seq=0)
+        idx._write_snapshot(*_tokenized(docs, id_col, text_col),
+                            version=1, seq=0, buckets=term_buckets)
         return idx
 
-    def _write_snapshot(self, src, version: int, seq: int) -> None:
+    def _write_snapshot(self, postings: DataFrame, doc_lengths: DataFrame,
+                        version: int, seq: int, buckets: int) -> None:
         import os
 
         from velesdb_spark.storage import commit_manifest
 
         snap = f"snapshot/v={version}"
         base = os.path.join(self.path, snap)
-        buckets = getattr(self, "term_buckets", 64) or 64
-        src_postings = src.postings
-        if "_tb" in src_postings.columns:
-            src_postings = src_postings.drop("_tb")
-        postings = src_postings.persist()
-        doc_lengths = src.doc_lengths.persist()
-        try:
-            # repartition on the bucket key before the partitionBy write:
-            # without it every upstream task writes a sliver into every
-            # bucket directory (buckets x tasks files — 256 at 8 buckets
-            # on local[32]); with it each bucket is one task's single
-            # well-sized file, and a query's per-term bucket read opens
-            # 1 file instead of tasks-many (guide §6 file sizing)
-            (postings.withColumn("_tb",
-                                 term_bucket_expr(F.col("term"), buckets))
-             .repartition(buckets, F.col("_tb"))
-             .write.mode("overwrite").partitionBy("_tb")
-             .parquet(f"{base}/postings"))
-            doc_lengths.write.mode("overwrite").parquet(f"{base}/doc_lengths")
-            postings.groupBy("term").agg(F.count("*").alias("df")) \
-                .write.mode("overwrite").parquet(f"{base}/term_df")
-            # sum_dl rides along so stats compose arithmetically with deltas
-            doc_lengths.agg(
-                F.count("*").alias("n_docs"), F.avg("dl").alias("avgdl"),
-                F.sum("dl").alias("sum_dl")) \
-                .write.mode("overwrite").parquet(f"{base}/stats")
-        finally:
-            postings.unpersist()
-            doc_lengths.unpersist()
+        if "_tb" in postings.columns:
+            postings = postings.drop("_tb")
+        # repartition on the bucket key before the partitionBy write:
+        # without it every upstream task writes a sliver into every
+        # bucket directory (buckets x tasks files — 256 at 8 buckets
+        # on local[32]); with it each bucket is one task's single
+        # well-sized file, and a query's per-term bucket read opens
+        # 1 file instead of tasks-many (guide §6 file sizing)
+        (postings.withColumn("_tb", term_bucket_expr(F.col("term"), buckets))
+         .repartition(buckets, F.col("_tb"))
+         .write.mode("overwrite").partitionBy("_tb")
+         .parquet(f"{base}/postings"))
+        doc_lengths.write.mode("overwrite").parquet(f"{base}/doc_lengths")
         commit_manifest(self.path, {"snapshot": snap, "segments": [],
                                     "seq": seq, "term_buckets": buckets})
 
     # ------------------------------------------------------------ writes
-    _LOG_SCHEMA = ("_doc_id bigint, term string, tf bigint, dl bigint, "
-                   "_op string, _seq bigint")
-
     def _append_segment(self, rows: DataFrame) -> None:
         import os
 
@@ -492,49 +404,34 @@ class IncrementalBm25Index:
         return self
 
     # ------------------------------------------------------------ reads
-    def _snapshot_frames(self, m):
+    def as_bm25(self) -> Bm25Index:
+        """Open the live index view as a Bm25Index (same scores/search).
+
+        Plan shape: the snapshot's bucketed postings/doc_lengths minus the
+        (small, broadcast) set of docs the log shadows, union the log's
+        last-writer-wins postings (Bm25Index._compose, shared with
+        incremental_update). Term df and corpus stats are aggregated from
+        that composed view, so a df lookup's term filter reaches the
+        snapshot postings scan; nothing is tokenized."""
         import os
 
-        if m["snapshot"]:
-            base = os.path.join(self.path, m["snapshot"])
-            # _tb stays: scores() prunes snapshot partitions on it
-            return (self.spark.read.parquet(f"{base}/postings"),
-                    self.spark.read.parquet(f"{base}/doc_lengths"),
-                    self.spark.read.parquet(f"{base}/term_df"),
-                    self.spark.read.parquet(f"{base}/stats"))
-        empty = self.spark.createDataFrame
-        return (empty([], "term string, _doc_id bigint, tf bigint"),
-                empty([], "_doc_id bigint, dl bigint"),
-                empty([], "term string, df bigint"),
-                empty([(0, 0.0, 0)], "n_docs bigint, avgdl double, sum_dl bigint"))
-
-    def as_bm25(self) -> Bm25Index:
-        """Compose the live index view as a Bm25Index (same scores/search).
-
-        Plan shape: snapshot postings/doc_lengths anti-joined against the
-        (small, broadcast) shadowed-doc set ∪ the log's latest postings;
-        term_df and stats adjusted by delta arithmetic — no corpus-wide
-        re-aggregation, no tokenization anywhere."""
         from pyspark.sql import Window
 
         from velesdb_spark.storage import read_manifest
 
-        import os
-
         m = read_manifest(self.path)
-        snap_postings, snap_dl, snap_tdf, snap_stats = self._snapshot_frames(m)
-        buckets = m.get("term_buckets")
-        idx = Bm25Index.__new__(Bm25Index)
-        idx.id_col = self.id_col
-        idx.spark = self.spark
-        idx.term_buckets = buckets
-        if buckets is None and "_tb" in snap_postings.columns:
-            snap_postings = snap_postings.drop("_tb")  # pre-meta layout
+        if m["snapshot"]:
+            snap = os.path.join(self.path, m["snapshot"])
+            # _tb stays: scores() prunes snapshot partitions on it
+            frames = (self.spark.read.parquet(f"{snap}/postings"),
+                      self.spark.read.parquet(f"{snap}/doc_lengths"))
+        else:
+            frames = (self.spark.createDataFrame(
+                          [], "term string, _doc_id bigint, tf bigint"),
+                      self.spark.createDataFrame([], "_doc_id bigint, dl bigint"))
+        idx = Bm25Index.__new__(Bm25Index)._attach(
+            self.spark, self.id_col, *frames, m.get("term_buckets"))
         if not m["segments"]:
-            idx.postings = snap_postings
-            idx.doc_lengths = snap_dl
-            idx.term_df = snap_tdf
-            idx.stats = snap_stats.select("n_docs", "avgdl")
             return idx
         log = self.spark.read.parquet(
             *[os.path.join(self.path, s) for s in m["segments"]])
@@ -543,47 +440,9 @@ class IncrementalBm25Index:
         latest = (log.withColumn("_max_seq", F.max("_seq").over(w))
                   .filter(F.col("_seq") == F.col("_max_seq")))
         live = latest.filter(F.col("_op") != "delete")
-        shadowed = log.select("_doc_id").distinct()
-        add_postings = live.select("term", "_doc_id", "tf")
-        if buckets is not None:
-            # delta rows get the same bucket column so the composed frame
-            # stays uniformly bucketed (union requires matching schemas)
-            add_postings = add_postings.withColumn(
-                "_tb", term_bucket_expr(F.col("term"), buckets))
-        add_dl = live.select("_doc_id", "dl").distinct()
-        idx.postings = snap_postings.join(
-            F.broadcast(shadowed), "_doc_id", "left_anti") \
-            .unionByName(add_postings)
-        idx.doc_lengths = snap_dl.join(
-            F.broadcast(shadowed), "_doc_id", "left_anti") \
-            .unionByName(add_dl)
-        # term df adjustment: -1 per (removed snapshot doc containing term),
-        # +1 per (added live doc containing term)
-        rem_tdf = (snap_postings
-                   .join(F.broadcast(shadowed), "_doc_id", "left_semi")
-                   .groupBy("term").agg(F.count("*").alias("_rem")))
-        add_tdf = add_postings.groupBy("term").agg(F.count("*").alias("_add"))
-        idx.term_df = (
-            snap_tdf.join(rem_tdf, "term", "full")
-            .join(add_tdf, "term", "full")
-            .select("term", (F.coalesce(F.col("df"), F.lit(0))
-                             - F.coalesce(F.col("_rem"), F.lit(0))
-                             + F.coalesce(F.col("_add"), F.lit(0))).alias("df"))
-            .filter(F.col("df") > 0))
-        # corpus stats adjustment (map-combinable aggs over narrow columns)
-        rem_stats = (snap_dl.join(F.broadcast(shadowed), "_doc_id", "left_semi")
-                     .agg(F.count("*").alias("_rn"),
-                          F.coalesce(F.sum("dl"), F.lit(0)).alias("_rs")))
-        add_stats = add_dl.agg(F.count("*").alias("_an"),
-                               F.coalesce(F.sum("dl"), F.lit(0)).alias("_as"))
-        idx.stats = (snap_stats.crossJoin(rem_stats).crossJoin(add_stats)
-                     .select(
-                         (F.col("n_docs") - F.col("_rn") + F.col("_an"))
-                         .alias("n_docs"),
-                         ((F.col("sum_dl") - F.col("_rs") + F.col("_as"))
-                          / (F.col("n_docs") - F.col("_rn") + F.col("_an")))
-                         .alias("avgdl")))
-        return idx
+        return idx._compose(log.select("_doc_id").distinct(),
+                            live.select("term", "_doc_id", "tf"),
+                            live.select("_doc_id", "dl").distinct())
 
     def scores(self, query: str) -> DataFrame:
         return self.as_bm25().scores(query)
@@ -600,31 +459,19 @@ class IncrementalBm25Index:
         m = read_manifest(self.path)
         if not m["segments"]:
             return
-        if m.get("term_buckets"):
-            self.term_buckets = m["term_buckets"]  # keep the built layout
         cur = int(m["snapshot"].rsplit("=", 1)[1]) if m["snapshot"] else 0
-        self._write_snapshot(self.as_bm25(), version=cur + 1, seq=m["seq"])
+        live = self.as_bm25()
+        # keep the built layout
+        self._write_snapshot(live.postings, live.doc_lengths,
+                             version=cur + 1, seq=m["seq"],
+                             buckets=m.get("term_buckets") or 64)
 
     def vacuum(self) -> None:
-        import os
-        import shutil
+        """Remove snapshot versions and log segments the manifest no
+        longer references (storage.vacuum_dir, shared with LogStore)."""
+        from velesdb_spark.storage import vacuum_dir
 
-        from velesdb_spark.storage import read_manifest
-
-        m = read_manifest(self.path)
-        snapdir = os.path.join(self.path, "snapshot")
-        live = os.path.basename(m["snapshot"]) if m["snapshot"] else None
-        if os.path.isdir(snapdir):
-            for v in os.listdir(snapdir):
-                if v != live:
-                    shutil.rmtree(os.path.join(snapdir, v))
-        live_segs = {os.path.basename(s) for s in m["segments"]}
-        logdir = os.path.join(self.path, "log")
-        if os.path.isdir(logdir):
-            for s in os.listdir(logdir):
-                if s not in live_segs:
-                    seg = os.path.join(logdir, s)
-                    shutil.rmtree(seg) if os.path.isdir(seg) else os.remove(seg)
+        vacuum_dir(self.path)
 
 
 def bm25_scan_scores(docs: DataFrame, query: str, id_col: str = "id",
@@ -711,8 +558,3 @@ def bm25_scan_search(docs: DataFrame, query: str, k: int = 10,
     return (bm25_scan_scores(docs, query, id_col, text_col)
             .orderBy(F.desc("_bm25_score"), F.asc(ident(id_col))).limit(k))
 
-
-def bm25_score_df(docs: DataFrame, query: str, id_col: str = "id",
-                  text_col: str = "text") -> DataFrame:
-    """One-shot convenience: scan-path scores (no index build)."""
-    return bm25_scan_scores(docs, query, id_col=id_col, text_col=text_col)

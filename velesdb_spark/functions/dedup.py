@@ -219,8 +219,7 @@ def minhash_dedup_pairs(df: DataFrame, threshold: float = 0.8,
 
 # shared registry (staging.py): bm25's tf projection stages here too, so
 # one release_staged() call frees everything between harness queries
-from velesdb_spark.functions.staging import _HANDLES as _STAGED_HANDLES  # noqa: E402
-from velesdb_spark.functions.staging import release_staged  # noqa: E402,F401
+from velesdb_spark.functions.staging import release_staged, stage  # noqa: E402,F401
 
 
 AUTO_PREFIX_DF_CUTOFF = 2
@@ -303,7 +302,8 @@ def ngram_jaccard_pairs(df: DataFrame, threshold: float = 0.5,
         raise ValueError("prefix_filter (exact) and max_shingle_df "
                          "(documented-lossy) are alternative strategies — "
                          "pick one")
-    base = staged_shingles(df, text_col, id_col, n).persist()
+    base = staged_shingles(df, text_col, id_col, n)
+    base = base.persist() if return_handle else stage(base)
     # exploded postings carry the doc's shingle-set size INLINE (8 bytes/row)
     # so |A∪B| falls out of the pair aggregate via first() — no post-agg
     # size joins, the whole op is one self-join + one groupBy. Join key is
@@ -321,10 +321,7 @@ def ngram_jaccard_pairs(df: DataFrame, threshold: float = 0.5,
             prefix_filter = _probe_cached(ex)
     if prefix_filter and threshold > 0.0:
         out = _ngram_prefix_join(base, ex, float(threshold))
-        if return_handle:
-            return out, base
-        _STAGED_HANDLES.append(base)
-        return out
+        return (out, base) if return_handle else out
     if max_shingle_df is not None:
         # document frequency per shingle hash (shingles are distinct per
         # doc, so count(*) IS the df), then keep only sub-cap postings.
@@ -349,10 +346,7 @@ def ngram_jaccard_pairs(df: DataFrame, threshold: float = 0.5,
              / (F.col("_sa") + F.col("_sb") - F.col("_inter"))).alias("jaccard"))
         .filter(F.col("jaccard") >= threshold)
     )
-    if return_handle:
-        return out, base
-    _STAGED_HANDLES.append(base)
-    return out
+    return (out, base) if return_handle else out
 
 
 # Memoized probe picks, keyed by the logical plan's semanticHash — the
@@ -635,7 +629,6 @@ def embedding_near_dups(df: DataFrame, threshold: float = 0.95,
         nbits = nbits if nbits is not None else auto_b
         tables = tables if tables is not None else auto_t
         d = dim or len(df.select(vector_col).first()[0])
-        from velesdb_spark.functions.staging import stage
 
         # (id, table, bucket) postings: one Arrow matmul computes all T
         # signatures, posexplode fans them out; one row per (vector, table).

@@ -39,8 +39,10 @@ _SEQ = "_veles_seq"
 
 def read_manifest(path: str) -> dict:
     """Load a log-store manifest; empty-state default when absent. Shared
-    by LogStore and the incremental BM25 postings log (functions/bm25.py),
-    which follow the same segment/manifest/compaction protocol."""
+    by LogStore and the incremental BM25 postings log (functions/bm25.py
+    IncrementalBm25Index), which follow the same segment/manifest/
+    compaction protocol and the same vacuum_dir; a BM25 manifest also
+    records its snapshot's ``term_buckets``."""
     try:
         with open(os.path.join(path, "MANIFEST.json")) as f:
             return json.load(f)
@@ -55,6 +57,26 @@ def commit_manifest(path: str, m: dict) -> None:
     with open(tmp, "w") as f:
         json.dump(m, f)
     os.replace(tmp, target)  # atomic commit point
+
+
+def vacuum_dir(path: str) -> None:
+    """Delete the snapshot versions and log segments under ``path`` that
+    its manifest no longer references."""
+    m = read_manifest(path)
+    snapdir = os.path.join(path, "snapshot")
+    live_snap = os.path.basename(m["snapshot"]) if m["snapshot"] else None
+    if os.path.isdir(snapdir):
+        for v in os.listdir(snapdir):
+            if v != live_snap:
+                shutil.rmtree(os.path.join(snapdir, v))
+    live_segs = {os.path.basename(s) for s in m["segments"]}
+    logdir = os.path.join(path, "log")
+    if not os.path.isdir(logdir):
+        return
+    for s in os.listdir(logdir):
+        if s not in live_segs:
+            seg = os.path.join(logdir, s)
+            shutil.rmtree(seg) if os.path.isdir(seg) else os.remove(seg)
 
 
 class LogStore:
@@ -154,18 +176,4 @@ class LogStore:
     def vacuum(self) -> None:
         """Remove snapshot versions and log segments no longer referenced
         by the manifest (safe once no reader holds an older manifest)."""
-        m = self._read_manifest()
-        snapdir = os.path.join(self.path, "snapshot")
-        live_snap = os.path.basename(m["snapshot"]) if m["snapshot"] else None
-        if os.path.isdir(snapdir):
-            for v in os.listdir(snapdir):
-                if v != live_snap:
-                    shutil.rmtree(os.path.join(snapdir, v))
-        live_segs = {os.path.basename(s) for s in m["segments"]}
-        logdir = os.path.join(self.path, "log")
-        if not os.path.isdir(logdir):
-            return
-        for s in os.listdir(logdir):
-            if s not in live_segs:
-                seg = os.path.join(logdir, s)
-                shutil.rmtree(seg) if os.path.isdir(seg) else os.remove(seg)
+        vacuum_dir(self.path)
