@@ -259,6 +259,156 @@ def test_collection_upsert_search_loop_incremental(spark, corpus):
     assert set(got) == set(top)
 
 
+def _plan_nodes(jplan):
+    """The operator nodes of a (logical or physical) plan, with AQE
+    wrappers and query stages unwrapped. A cached frame's relation/scan
+    is a leaf here: the plan that built its cache is not walked, though
+    the plan string prints it."""
+    out, stack = [], [jplan]
+    while stack:
+        node = stack.pop()
+        name = node.nodeName()
+        if name == "AdaptiveSparkPlan":
+            stack.append(node.executedPlan())
+            continue
+        if name.endswith("QueryStage"):
+            stack.append(node.plan())
+            continue
+        out.append(node)
+        kids = node.children()
+        stack.extend(kids.apply(i) for i in range(kids.size()))
+    return out
+
+
+def _left_antis(df):
+    return sum(1 for n in _plan_nodes(df._jdf.queryExecution().optimizedPlan())
+               if n.nodeName() == "Join"
+               and n.joinType().toString() == "LeftAnti")
+
+
+def test_collection_writes_keep_base_plus_one_delta(spark, corpus):
+    """upsert → upsert → delete on a Collection: each write leaves the
+    serving layout — the cached base minus the shadowed docs (ONE anti
+    join, however many writes) plus one cached delta — so a search
+    re-tokenizes nothing, the persisted-RDD count stays flat, and scores
+    equal a cold rebuild."""
+    from velesdb_spark.database import Collection
+
+    df, docs = corpus
+    col = Collection(spark, "c", df=df, text_col="text")
+    q = "rust programming"
+    col.text_search(q, k=10).collect()
+    jsc = spark.sparkContext._jsc
+    state = dict(docs)
+    writes = [("upsert", [(2, "rust data pipelines"), (8, "go rust rust")]),
+              ("upsert", [(8, "rust programming again"), (10, "more text")]),
+              ("delete", [4, 8, 99])]
+    persisted = []
+    for kind, batch in writes:
+        if kind == "upsert":
+            col.upsert([{"id": i, "text": t} for i, t in batch])
+            state.update(dict(batch))
+        else:
+            col.delete(batch)
+            for i in batch:
+                state.pop(i, None)
+        idx = col._bm25
+        assert idx._base is not None and idx._delta is not None
+        assert _left_antis(idx._postings_dl) == 1
+        res = col.text_search(q, k=10)
+        nodes = _plan_nodes(res._jdf.queryExecution().optimizedPlan())
+        assert not any("split(" in n.simpleString(100) for n in nodes)
+        got = {r.id: r.score for r in res.collect()}
+        want = _full_rebuild_scores(spark, state, q)
+        assert set(got) == set(want)
+        for i in got:
+            assert got[i] == pytest.approx(want[i], rel=1e-9)
+        persisted.append(jsc.getPersistentRDDs().size())
+    assert persisted[2] == persisted[0], persisted
+
+
+def test_delete_shadow_frame_is_local_table_scan(spark):
+    """Deleted ids reach the plan as an Arrow-backed LocalTableScan, not
+    an RDD of pickled rows a Python worker must decode on every scan."""
+    import pyarrow as pa
+
+    from velesdb_spark.functions.util import id_frame
+
+    ids = id_frame(spark, [3, 1, 2], "_doc_id")
+    assert ids.schema.simpleString() == "struct<_doc_id:bigint>"
+    plan = ids._jdf.queryExecution().executedPlan()
+    assert plan.nodeName() == "LocalTableScan", plan.toString()
+    assert sorted(r._doc_id for r in ids.collect()) == [1, 2, 3]
+    docs = spark.createDataFrame(pa.table({
+        "id": pa.array([1, 2, 3], pa.int64()),
+        "text": ["rust code", "rust data", "go code"]}))
+    upd = Bm25Index(docs).incremental_update(deleted_ids=[1])
+    plan = upd.doc_lengths._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
+    assert {r.id for r in upd.scores("rust").collect()} == {2}
+
+
+def test_text_search_unfiltered_takes_ordered_k(spark, corpus):
+    """The unfiltered text_search ends in limit(k): the final order is a
+    TakeOrderedAndProject, not a range-partitioned global sort, and the
+    rows are those of the sorted join."""
+    from velesdb_spark.database import Collection
+
+    df, _ = corpus
+    col = Collection(spark, "c", df=df, text_col="text")
+    res = col.text_search("rust programming", k=3)
+    got = [(r.id, r.score) for r in res.collect()]
+    nodes = _plan_nodes(res._jdf.queryExecution().executedPlan())
+    assert not any(n.nodeName() == "Exchange"
+                   and "rangepartitioning" in n.simpleString(100)
+                   for n in nodes)
+    scores = col._bm25_index().search("rust programming", 3)
+    want = [(r.id, r._bm25_score) for r in df.join(scores, "id")
+            .orderBy(F.desc("_bm25_score"), F.asc("id")).collect()]
+    assert got == want and len(got) == 3
+
+
+def test_bucketed_df_lookup_prunes_term_buckets(spark, corpus, tmp_path,
+                                                monkeypatch):
+    """On an 8-bucket snapshot with one upsert segment, the df lookup of
+    a search reads only the query terms' buckets: every snapshot-postings
+    scan it makes carries a `_tb IN (...)` partition filter, like the
+    scoring pass."""
+    from velesdb_spark.functions.bm25 import IncrementalBm25Index
+
+    df, docs = corpus
+    idx = IncrementalBm25Index.build(df, str(tmp_path / "bm25_tb"),
+                                     term_buckets=8)
+    idx.upsert_docs(spark.createDataFrame(
+        [(2, "rust data pipelines")], "id bigint, text string"))
+    plans = []
+    DataFrame = type(df)  # the session's concrete DataFrame class
+    collect = DataFrame.collect
+
+    def spy(self):
+        rows = collect(self)
+        plans.append(self._jdf.queryExecution().executedPlan().toString())
+        return rows
+
+    monkeypatch.setattr(DataFrame, "collect", spy)
+    view = idx.as_bm25()
+    scores = view.scores("rust programming")
+    monkeypatch.undo()
+    scans = [ln for p in plans for ln in p.splitlines()
+             if "FileScan" in ln and "_tb#" in ln]
+    assert scans, plans
+    for ln in scans:
+        pf = ln.split("PartitionFilters:", 1)[1].split("],", 1)[0]
+        assert "_tb" in pf and " IN (" in pf, ln
+    state = dict(docs)
+    state[2] = "rust data pipelines"
+    got = {r.id: r._bm25_score for r in scores.collect()}
+    want = _full_rebuild_scores(spark, state, "rust programming")
+    assert set(got) == set(want)
+    for i in got:
+        assert got[i] == pytest.approx(want[i], rel=1e-9)
+
+
 def test_incremental_bm25_differential_fuzz(spark, tmp_path):
     """Randomized upsert/delete/compact sequences: after every mutation the
     composed snapshot+delta index must score identically to a fresh

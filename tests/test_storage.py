@@ -32,6 +32,24 @@ def test_logstore_upsert_delete_lww(spark, tmp_path):
     assert _rows(st.read())[3]["v"] == "c2"
 
 
+def test_logstore_read_resolves_log_with_one_window(spark, tmp_path):
+    """Any log record shadows its snapshot row, so the shadowed set is the
+    log's ids; the last-writer-wins window runs once, for the survivors."""
+    st = LogStore(spark, str(tmp_path / "t"), id_col="id")
+    st.append_upsert(spark.createDataFrame(
+        [(1, "a"), (2, "b"), (3, "c")], "id bigint, v string"))
+    st.compact()
+    st.append_upsert(spark.createDataFrame(
+        [(2, "B"), (4, "d")], "id bigint, v string"))
+    st.append_delete([3, 4])
+    st.append_upsert(spark.createDataFrame([(4, "D")], "id bigint, v string"))
+    view = st.read()
+    plan = view._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("Window [") == 1, plan
+    assert {i: r["v"] for i, r in _rows(view).items()} == \
+        {1: "a", 2: "B", 4: "D"}
+
+
 def test_logstore_compact_and_reopen(spark, tmp_path):
     path = str(tmp_path / "t")
     st = LogStore(spark, path, id_col="id")

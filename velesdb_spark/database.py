@@ -288,13 +288,14 @@ class Collection:
 
     def _refresh_bm25(self, new_docs: DataFrame | None = None,
                       deleted_ids=None) -> None:
-        """Keep the text index warm across mutations: compose the existing
-        (cached) postings with a delta built from ONLY the mutated docs
-        (bm25.Bm25Index.incremental_update) instead of dropping the index
-        and re-tokenizing the corpus on the next search — the batch-scale
-        analogue of the reference's transactional per-upsert index update
-        (crud.rs:19-118). Falls back to rebuild-on-demand when the batch
-        lacks the indexed text column."""
+        """Keep the text index serving-ready across mutations: the write
+        composes the cached base index with ONE cached delta built from
+        ONLY the mutated docs, folding any earlier delta into it and
+        memoizing the corpus stats (bm25.Bm25Index.incremental_update), so
+        the next search neither re-tokenizes the corpus nor recomputes the
+        stats — the batch-scale analogue of the reference's transactional
+        per-upsert index update (crud.rs:19-118). Falls back to
+        rebuild-on-demand when the batch lacks the indexed text column."""
         if self._bm25 is None:
             return
         text_col = self._bm25_text_col
@@ -596,9 +597,11 @@ class Collection:
             filter_cond = filter_to_column(filter_cond)
         if filter_cond is None:
             scores = self._bm25_index().search(query, k)
+            # the score side holds at most k rows: limit(k) keeps the final
+            # order a TakeOrderedAndProject instead of a global sort
             return self.df.join(scores, on=self.id_col, how="inner") \
                 .withColumnRenamed("_bm25_score", "score") \
-                .orderBy(F.desc("score"), F.asc(self.id_col))
+                .orderBy(F.desc("score"), F.asc(self.id_col)).limit(k)
         # exact filtered top-k: restrict the score set to filtered ids, THEN
         # take k (the reference over-fetches 4× and can drop results;
         # filtering before top-k is both exact and cheaper here)

@@ -9,9 +9,10 @@ is BYTES, so single multi-byte chars survive; we use octet_length for parity).
 Duplicate query terms score multiply (scoring loop iterates the query bag,
 bm25.rs:348-360).
 
-Scale design: the corpus statistics (postings tf, per-term df, doc lengths,
-N/avgdl) are DataFrames produced by explode + groupBy — the classic
-distributed inverted-index build, one shuffle each, all map-side combinable.
+Scale design: the corpus statistics (postings tf with each doc's length
+inline, per-term df, N/avgdl) are DataFrames produced by explode + groupBy —
+the classic distributed inverted-index build, one shuffle each, all map-side
+combinable; doc lengths are a projection of the token arrays.
 A query is a tiny (terms × multiplicity) DataFrame broadcast against the
 postings; per-doc score is one partial aggregation. Nothing is collected to
 the driver except the optional top-k.
@@ -70,21 +71,26 @@ def term_bucket_py(term: str, n_buckets: int) -> int:
 
 def _tokenized(docs: DataFrame, id_col: str,
                text_col: str) -> tuple[DataFrame, DataFrame]:
-    """(postings, doc_lengths) of ``docs``: tf per (term, doc) and token
-    count per doc."""
+    """The one text → postings step: norms-in-postings
+    ``(term, _doc_id, tf, dl)`` of ``docs`` from one groupBy, with the
+    doc's token count ``dl`` inline, and ``(_doc_id, dl)`` for every doc,
+    a projection of the token arrays. ``dl`` is 0 for empty or NULL text;
+    such docs have no postings and are not indexed (bm25.rs:146-148), so
+    an index keeps the lengths with ``dl > 0``."""
     from velesdb_spark.functions.util import spread
 
     # Stage the token array before exploding (keeps the regex chain out
     # of the generator) and spread small single-file inputs across cores.
     toks = spread(docs).select(
         F.col(id_col).alias("_doc_id"),
-        tokenize(F.col(text_col)).alias("_toks"),
-    )
-    tokens = toks.select("_doc_id", F.explode("_toks").alias("term"))
-    # Per-doc length; empty docs are NOT indexed (bm25.rs:146-148)
-    doc_lengths = tokens.groupBy("_doc_id").agg(F.count("*").alias("dl"))
-    postings = tokens.groupBy("term", "_doc_id").agg(F.count("*").alias("tf"))
-    return postings, doc_lengths
+        tokenize(F.col(text_col)).alias("_toks"))
+    toks = toks.select(
+        "_doc_id", "_toks",
+        F.coalesce(F.size("_toks"), F.lit(0)).cast("long").alias("dl"))
+    postings = (toks.select("_doc_id", "dl", F.explode("_toks").alias("term"))
+                .groupBy("term", "_doc_id", "dl").agg(F.count("*").alias("tf"))
+                .select("term", "_doc_id", "tf", "dl"))
+    return postings, toks.select("_doc_id", "dl")
 
 
 class Bm25Index:
@@ -97,47 +103,60 @@ class Bm25Index:
     def __init__(self, docs: DataFrame, id_col: str = "id", text_col: str = "text",
                  cache: bool = False):
         spark = docs.sparkSession
-        self._attach(spark, id_col, *_tokenized(docs, id_col, text_col))
+        postings, lengths = _tokenized(docs, id_col, text_col)
+        doc_lengths = lengths.filter(F.col("dl") > 0)
         if cache:
-            self.postings = self.postings.cache()
-            self.doc_lengths = self.doc_lengths.cache()
-            self.stats = self.stats.cache()
             # Serving layout, built ONCE at add time (the reference's
             # add/search split, index/bm25.rs):
-            # - term_df and the search base are range-partitioned by term
-            #   and sorted within partitions — a sorted term dictionary —
-            #   so the in-memory scan's per-batch min/max stats prune a
-            #   query's In(term, ...) filter to the few batches actually
-            #   holding its terms (measured 2× on the sf0.1 corpus);
             # - the search base carries dl inline with the postings (the
             #   classic norms-in-postings layout), so a search needs NO
-            #   doc-side join: filter → map-lookup → one aggregation.
+            #   doc-side join: filter → map-lookup → one aggregation;
+            # - it and term_df are range-partitioned by term and sorted
+            #   within partitions — a sorted term dictionary — so the
+            #   in-memory scan's per-batch min/max stats prune a query's
+            #   In(term, ...) filter to the few batches actually holding
+            #   its terms (measured 2× on the sf0.1 corpus);
+            # - postings is a projection of the search base and term_df
+            #   an aggregate of it, so neither re-tokenizes nor holds a
+            #   second copy of the postings.
             # Partition counts track cluster width, not a constant, so the
             # layout survives a wide cluster; the range shuffle + sort are
             # paid once and amortized across every search.
             par = spark.sparkContext.defaultParallelism
+            postings = (postings.repartitionByRange(max(8, par // 4), "term")
+                        .sortWithinPartitions("term").cache())
+            doc_lengths = doc_lengths.cache()
+        self._attach(spark, id_col, postings, doc_lengths)
+        if cache:
             self.term_df = (self.term_df
                             .repartitionByRange(max(2, par // 16), "term")
                             .sortWithinPartitions("term").cache())
-            self._postings_dl = (self.postings
-                                 .join(self.doc_lengths, "_doc_id")
-                                 .repartitionByRange(max(8, par // 4), "term")
-                                 .sortWithinPartitions("term").cache())
+            self.stats = self.stats.cache()
+            self._base = self
 
     def _attach(self, spark, id_col: str, postings: DataFrame,
                 doc_lengths: DataFrame,
                 term_buckets: int | None = None) -> "Bm25Index":
-        """Set the index frames. Term df and the corpus stats are always
-        derived from (postings, doc_lengths) — for a fresh build, a
-        snapshot and a composed snapshot+delta view alike — so a df lookup
-        filtered on its terms pushes down to the postings scans."""
+        """Set the index frames. ``postings`` that carry each doc's ``dl``
+        (norms-in-postings) are also the search base ``_postings_dl``, and
+        ``postings`` is their projection. Term df and the corpus stats are
+        always derived from (postings, doc_lengths) — for a fresh build, a
+        snapshot and a composed view alike — so a df lookup filtered on its
+        terms pushes down to the postings scans. On a bucketed view term df
+        keeps the ``_tb`` bucket as a grouping key (it is a function of the
+        term), so the lookup also prunes snapshot partitions."""
         self.spark = spark
         self.id_col = id_col
         self.term_buckets = term_buckets
-        self.postings = postings
+        self._postings_dl = postings if "dl" in postings.columns else None
+        self.postings = postings.drop("dl")
         self.doc_lengths = doc_lengths
+        # serving base and its cached delta (incremental_update)
+        self._base = None
+        self._delta = None
         # Document frequency per term
-        self.term_df = postings.groupBy("term").agg(F.count("*").alias("df"))
+        keys = ["_tb", "term"] if "_tb" in postings.columns else ["term"]
+        self.term_df = postings.groupBy(*keys).agg(F.count("*").alias("df"))
         # Corpus stats: N and avgdl (1-row DataFrame, broadcastable)
         self.stats = doc_lengths.agg(
             F.count("*").alias("n_docs"), F.avg("dl").alias("avgdl"))
@@ -147,13 +166,19 @@ class Bm25Index:
                  add_dl: DataFrame | None) -> "Bm25Index":
         """This index minus the ``shadowed`` docs, plus a delta (none for a
         delete-only batch). The base is never shuffled — shadowed-doc
-        removal is a broadcast anti join — and delta postings get the
-        base's ``_tb`` bucket column so the union stays uniformly
-        bucketed."""
+        removal is a broadcast anti join, which needs no distinct keys. A
+        norms-in-postings base composes its search base, so the result
+        keeps that layout; over a snapshot's postings the delta's ``dl``
+        column is dropped. Delta postings get the base's ``_tb`` bucket
+        column so the union stays uniformly bucketed."""
         shadowed = F.broadcast(shadowed)
-        postings = self.postings.join(shadowed, "_doc_id", "left_anti")
+        base = self._postings_dl if self._postings_dl is not None \
+            else self.postings
+        postings = base.join(shadowed, "_doc_id", "left_anti")
         doc_lengths = self.doc_lengths.join(shadowed, "_doc_id", "left_anti")
         if add_postings is not None:
+            if "dl" not in base.columns:
+                add_postings = add_postings.drop("dl")
             if self.term_buckets:
                 add_postings = add_postings.withColumn(
                     "_tb", term_bucket_expr(F.col("term"), self.term_buckets))
@@ -211,10 +236,14 @@ class Bm25Index:
         n_docs, avgdl = self._corpus_stats()
         if n_docs == 0 or avgdl == 0.0:
             return self._empty_scores()
-        # bounded driver lookup: df for the query's terms only
+        # bounded driver lookup: df for the query's terms only (and, on a
+        # bucketed view, their literal buckets — partition pruning)
+        lookup = self.term_df
+        if self.term_buckets and "_tb" in lookup.columns:
+            lookup = lookup.filter(F.col("_tb").isin(
+                sorted({term_bucket_py(t, self.term_buckets) for t in terms})))
         dfs = {r["term"]: int(r["df"])
-               for r in self.term_df.filter(F.col("term").isin(terms))
-                                    .collect()}
+               for r in lookup.filter(F.col("term").isin(terms)).collect()}
         weights = {
             t: counts[t] * math.log(
                 (n_docs - dfs[t] + 0.5) / (dfs[t] + 0.5) + 1.0)
@@ -223,7 +252,7 @@ class Bm25Index:
         if not weights:
             return self._empty_scores()
 
-        base = getattr(self, "_postings_dl", None)
+        base = self._postings_dl
         src = base if base is not None else self.postings
         if self.term_buckets and "_tb" in src.columns:
             # literal bucket ids → PARTITION pruning on the snapshot layout,
@@ -262,25 +291,75 @@ class Bm25Index:
                            deleted_ids=None,
                            text_col: str = "text") -> "Bm25Index":
         """Composed index after an upsert/delete batch WITHOUT re-tokenizing
-        the corpus: only ``new_docs`` go through tokenize/explode; the
-        existing postings/doc_lengths (cached by the collection) are reused
-        behind a broadcast anti join on the mutated ids. The in-memory twin
-        of IncrementalBm25Index.as_bm25(); both go through _compose."""
-        shadow_parts = []
+        the corpus: only ``new_docs`` go through _tokenized, and each
+        mutated id shadows its old version (broadcast anti join, _compose).
+
+        On a serving index (``cache=True``, the one a Collection keeps) the
+        write leaves a serving-ready index: the base's cached
+        norms-in-postings layout minus the shadowed ids, plus ONE cached
+        delta. The delta holds the batch's postings-with-dl and one doc
+        row per mutated id (_doc_rows: its shadowed id and new length).
+        The write memoizes the composed (n_docs, avgdl), which fills the
+        delta's cache. A later write folds into that delta (old delta
+        minus the newly mutated ids, plus the batch) and releases the
+        superseded one, so however many writes a session makes, a search
+        plan keeps one anti join over the base and the cached frame count
+        stays constant. On an uncached index or a snapshot view the
+        composition stays lazy: the in-memory twin of
+        IncrementalBm25Index.as_bm25()."""
+        from functools import reduce
+
+        from velesdb_spark.functions.util import id_frame
+
+        ids, rows = [], []
         add_postings = add_dl = None
         if new_docs is not None:
-            add_postings, add_dl = _tokenized(new_docs, self.id_col, text_col)
-            shadow_parts.append(new_docs.select(
-                F.col(self.id_col).alias("_doc_id")))
+            add_postings, lengths = _tokenized(new_docs, self.id_col, text_col)
+            add_dl = lengths.filter(F.col("dl") > 0)
+            ids.append(new_docs.select(F.col(self.id_col).alias("_doc_id")))
+            rows += [add_postings, _doc_rows(lengths)]
         if deleted_ids:
-            shadow_parts.append(self.spark.createDataFrame(
-                [(int(i),) for i in deleted_ids], "_doc_id bigint"))
-        if not shadow_parts:
+            ids.append(id_frame(self.spark, deleted_ids, "_doc_id"))
+            rows.append(_doc_rows(ids[-1]))
+        if not ids:
             return self
-        shadowed = shadow_parts[0]
-        for p in shadow_parts[1:]:
-            shadowed = shadowed.unionByName(p)
-        return self._compose(shadowed.distinct(), add_postings, add_dl)
+        shadowed = reduce(DataFrame.unionByName, ids)
+        if self._base is None:
+            return self._compose(shadowed, add_postings, add_dl)
+        delta = reduce(DataFrame.unionByName, rows)
+        if self._delta is not None:
+            delta = (self._delta.join(F.broadcast(shadowed), "_doc_id",
+                                      "left_anti")
+                     .unionByName(delta))
+        # one partition per core, however many writes were folded in
+        delta = delta.coalesce(self.spark.sparkContext.defaultParallelism) \
+            .cache()
+        docs = delta.filter(F.col("term").isNull())
+        out = self._base._compose(
+            docs.select("_doc_id"), delta.filter(F.col("term").isNotNull()),
+            docs.filter(F.col("dl") > 0).select("_doc_id", "dl"))
+        out._base, out._delta = self._base, delta
+        out._corpus_stats()
+        if self._delta is not None:
+            self._delta.unpersist()
+        return out
+
+
+def _doc_rows(ids: DataFrame) -> DataFrame:
+    """Rows in the postings layout ``(_doc_id, term, tf, dl)`` that stand
+    for a whole doc rather than a posting: term and tf are NULL. They
+    shadow the doc's old postings; ``dl`` is the new version's length
+    when ``ids`` carries one, else NULL (a delete)."""
+    dl = F.col("dl") if "dl" in ids.columns else F.lit(None).cast("long")
+    return ids.select("_doc_id", F.lit(None).cast("string").alias("term"),
+                      F.lit(None).cast("long").alias("tf"), dl.alias("dl"))
+
+
+def _tombstones(ids: DataFrame) -> DataFrame:
+    """Postings-log rows that shadow each ``_doc_id`` of ``ids`` and add
+    no postings."""
+    return _doc_rows(ids.select("_doc_id")).withColumn(
+        "_op", F.lit("delete"))
 
 
 class IncrementalBm25Index:
@@ -329,7 +408,8 @@ class IncrementalBm25Index:
         join reads only its terms' buckets); small corpora can use fewer
         to cut per-directory write overhead."""
         idx = cls(docs.sparkSession, path, id_col, text_col)
-        idx._write_snapshot(*_tokenized(docs, id_col, text_col),
+        postings, lengths = _tokenized(docs, id_col, text_col)
+        idx._write_snapshot(postings, lengths.filter(F.col("dl") > 0),
                             version=1, seq=0, buckets=term_buckets)
         return idx
 
@@ -341,8 +421,7 @@ class IncrementalBm25Index:
 
         snap = f"snapshot/v={version}"
         base = os.path.join(self.path, snap)
-        if "_tb" in postings.columns:
-            postings = postings.drop("_tb")
+        postings = postings.select("term", "_doc_id", "tf")
         # repartition on the bucket key before the partitionBy write:
         # without it every upstream task writes a sliver into every
         # bucket directory (buckets x tasks files — 256 at 8 buckets
@@ -376,31 +455,19 @@ class IncrementalBm25Index:
     def upsert_docs(self, docs: DataFrame) -> "IncrementalBm25Index":
         """Append one postings-delta segment for ``docs`` (replaces any
         prior version of each doc). Tokenization touches only this batch."""
-        toks = docs.select(
-            F.col(self.id_col).alias("_doc_id"),
-            tokenize(F.col(self.text_col)).alias("_toks"))
-        tokens = toks.select("_doc_id", F.size("_toks").alias("dl"),
-                             F.explode_outer("_toks").alias("term"))
-        posting_rows = (
-            tokens.filter(F.col("term").isNotNull())
-            .groupBy("_doc_id", "dl", "term").agg(F.count("*").alias("tf"))
-            .select("_doc_id", "term", "tf", "dl", F.lit("upsert").alias("_op")))
+        postings, lengths = _tokenized(docs, self.id_col, self.text_col)
+        posting_rows = postings.select(
+            "_doc_id", "term", "tf", "dl", F.lit("upsert").alias("_op"))
         # a doc whose new text has no tokens (or NULL text) still shadows
         # its old postings
-        empty_rows = (
-            toks.filter(F.coalesce(F.size("_toks"), F.lit(0)) <= 0)
-            .select("_doc_id", F.lit(None).cast("string").alias("term"),
-                    F.lit(None).cast("long").alias("tf"),
-                    F.lit(None).cast("long").alias("dl"),
-                    F.lit("delete").alias("_op")))
+        empty_rows = _tombstones(lengths.filter(F.col("dl") <= 0))
         self._append_segment(posting_rows.unionByName(empty_rows))
         return self
 
     def delete_docs(self, ids) -> "IncrementalBm25Index":
-        rows = self.spark.createDataFrame(
-            [(int(i), None, None, None, "delete") for i in ids],
-            "_doc_id bigint, term string, tf bigint, dl bigint, _op string")
-        self._append_segment(rows)
+        from velesdb_spark.functions.util import id_frame
+
+        self._append_segment(_tombstones(id_frame(self.spark, ids, "_doc_id")))
         return self
 
     # ------------------------------------------------------------ reads
@@ -440,7 +507,7 @@ class IncrementalBm25Index:
         latest = (log.withColumn("_max_seq", F.max("_seq").over(w))
                   .filter(F.col("_seq") == F.col("_max_seq")))
         live = latest.filter(F.col("_op") != "delete")
-        return idx._compose(log.select("_doc_id").distinct(),
+        return idx._compose(log.select("_doc_id"),
                             live.select("term", "_doc_id", "tf"),
                             live.select("_doc_id", "dl").distinct())
 

@@ -18,3 +18,14 @@ def spread(df: DataFrame, min_factor: int = 2) -> DataFrame:
     if files and len(files) * min_factor <= target:
         return df.repartition(target)
     return df
+
+
+def id_frame(spark, ids, name: str) -> DataFrame:
+    """One ``bigint`` column ``name`` holding ``ids``, built from an Arrow
+    table so it plans as a LocalTableScan. A Python list passed to
+    createDataFrame becomes an RDD of pickled rows that a Python worker
+    deserializes on every scan; this frame needs no worker at all."""
+    import pyarrow as pa
+
+    return spark.createDataFrame(
+        pa.table({name: pa.array([int(i) for i in ids], pa.int64())}))

@@ -127,9 +127,9 @@ class LogStore:
         self._append_segment(df.dropDuplicates([self.id_col]), "upsert")
 
     def append_delete(self, ids: Sequence[int]) -> None:
-        df = self.spark.createDataFrame(
-            [(int(i),) for i in ids], f"{self.id_col} bigint")
-        self._append_segment(df, "delete")
+        from velesdb_spark.functions.util import id_frame
+
+        self._append_segment(id_frame(self.spark, ids, self.id_col), "delete")
 
     # ------------------------------------------------------------ reads
     def read(self) -> Optional[DataFrame]:
@@ -137,7 +137,7 @@ class LogStore:
 
         Plan shape at scale: the snapshot scan is untouched except one
         left_anti join against the (small) shadowed-id set; the window
-        resolution runs on the log only. No full-table shuffle."""
+        resolution runs on the log only, once. No full-table shuffle."""
         m = self._read_manifest()
         snap = None
         if m["snapshot"]:
@@ -153,7 +153,9 @@ class LogStore:
         survivors = latest.filter(F.col(_OP) != "delete").drop(_OP, _SEQ)
         if snap is None:
             return survivors
-        shadowed = latest.select(self.id_col)
+        # any log record for an id shadows its snapshot row: the window
+        # is needed only to resolve the survivors
+        shadowed = log.select(self.id_col)
         kept = snap.join(shadowed, on=self.id_col, how="left_anti")
         return kept.unionByName(survivors, allowMissingColumns=True)
 
