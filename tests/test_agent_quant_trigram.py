@@ -154,89 +154,6 @@ def test_combine_breakdown_boosts(spark):
     assert math.isclose(got[2], (0.5 * 0.2 + 0.3 * 0.0 + 0.2 * 0.1) * 2.0, rel_tol=1e-9)
 
 
-# ------------------------------------------------------------- json values
-
-def test_mixed_type_total_order(spark):
-    """ordering.rs:18-63: Null < Bool < Number < String < Array < Object."""
-    from velesdb_spark.functions.jsonval import mixed_order_key
-
-    rows = [
-        (1, '{"a": 1}'), (2, "[1,2]"), (3, '"zebra"'), (4, "3.5"),
-        (5, "true"), (6, "null"), (7, None), (8, "false"), (9, "-2"),
-        (10, '"apple"'),
-    ]
-    df = spark.createDataFrame(rows, "id bigint, v string")
-    got = [r.id for r in
-           df.orderBy(mixed_order_key(F.col("v")), F.col("id")).collect()]
-    # nulls (6,7) < bools false(8) < true(5) < numbers -2(9) < 3.5(4)
-    # < strings apple(10) < zebra(3) < array(2) < object(1)
-    assert got == [6, 7, 8, 5, 9, 4, 10, 3, 2, 1]
-
-
-def test_canonical_json_distinct(spark):
-    """distinct.rs: key-order-insensitive dedup via canonical JSON."""
-    from velesdb_spark.functions.jsonval import (canonical_json,
-                                                 canonical_map_json,
-                                                 distinct_by_canonical)
-
-    rows = [
-        (1, '{"b": 2, "a": 1}'), (2, '{"a": 1, "b": 2}'),
-        (3, '{"a": 1}'), (4, "not json"), (5, "not json"),
-    ]
-    df = spark.createDataFrame(rows, "id bigint, payload string")
-    out = distinct_by_canonical(df, ["payload"], {"payload"})
-    kept = sorted(r.payload for r in out.collect())
-    assert len(kept) == 3  # {a,b} dedups across key orders
-
-    canon = {r.id: r.c for r in
-             df.select("id", canonical_json(F.col("payload")).alias("c")).collect()}
-    assert canon[1] == canon[2] == '{"a":1,"b":2}'
-
-    m = spark.createDataFrame(
-        [(1,)], "id bigint").withColumn(
-        "m", F.create_map(F.lit("b"), F.lit("2"), F.lit("a"), F.lit("1")))
-    got = m.select(canonical_map_json(F.col("m")).alias("c")).collect()[0].c
-    assert got == '{"a":"1","b":"2"}'
-
-
-# ------------------------------------------------------------- migration
-
-def test_migration_sources(spark, tmp_path):
-    """crates/velesdb-migrate parity: Qdrant/Pinecone JSONL + pgvector CSV."""
-    import json
-
-    from velesdb_spark.sources.migrate import (read_pgvector_csv,
-                                               read_pinecone_export,
-                                               read_qdrant_export)
-
-    qd = tmp_path / "qdrant.jsonl"
-    qd.write_text("\n".join(json.dumps(r) for r in [
-        {"id": 1, "vector": [1.0, 0.0], "payload": {"cat": "a"}},
-        {"id": 2, "vector": [0.0, 1.0], "payload": {"cat": "b"}},
-    ]))
-    c = read_qdrant_export(spark, str(qd), dimension=2)
-    assert c.count() == 2
-    assert c.get(1)["cat"] == "a"
-    assert c.search([1.0, 0.1], 1).collect()[0].id == 1
-
-    pc = tmp_path / "pinecone.jsonl"
-    pc.write_text("\n".join(json.dumps(r) for r in [
-        {"id": "vec-a", "values": [1.0, 0.0], "metadata": {"src": "x"}},
-        {"id": "7", "values": [0.0, 1.0], "metadata": {"src": "y"}},
-    ]))
-    c2 = read_pinecone_export(spark, str(pc))
-    rows = {r.orig_id: r for r in c2.df.collect()}
-    assert rows["7"].id == 7           # numeric string id kept
-    assert rows["vec-a"].id >= 0       # surrogate for non-numeric
-    assert rows["vec-a"].src == "x"
-
-    pg = tmp_path / "pg.csv"
-    pg.write_text('id,name,embedding\n1,alpha,"[1.0,0.5]"\n2,beta,"[0.0,1.0]"\n')
-    c3 = read_pgvector_csv(spark, str(pg))
-    got = c3.get(1)
-    assert got["name"] == "alpha" and got["vector"] == [1.0, 0.5]
-
-
 def test_collection_explain(catalog, spark):
     """EXPLAIN surface (velesql/explain.rs → translation plan + df.explain)."""
     from velesdb_spark.database import Collection
@@ -420,35 +337,6 @@ def test_explain_sql_syntax(catalog):
     assert out.columns == ["plan"]
     text = out.collect()[0].plan
     assert "TableScan" in text and "Limit(5)" in text and "Catalyst" in text
-
-
-def test_bucketed_join_has_no_exchange(spark, catalog):
-    """Co-located bucketed join: SortMergeJoin with no shuffle on either
-    side (the 100 TB fact-fact join layout)."""
-    from velesdb_spark.operators.bucketing import colocated_join, write_bucketed
-
-    orders = catalog.resolve("orders").df.select("o_orderkey", "o_totalprice")
-    lineitem = catalog.resolve("lineitem").df.select("l_orderkey", "l_quantity")
-    write_bucketed(orders, "b_orders", ["o_orderkey"], buckets=8)
-    write_bucketed(lineitem, "b_lineitem", ["l_orderkey"], buckets=8)
-
-    prior = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        j = colocated_join(spark, "b_orders", "b_lineitem",
-                           "o_orderkey", "l_orderkey")
-        plan = j._jdf.queryExecution().executedPlan().toString()
-        assert "SortMergeJoin" in plan
-        assert "Exchange" not in plan  # bucket layout replaces the shuffle
-        # sanity: result matches the plain join
-        n_bucketed = j.count()
-        n_plain = orders.join(
-            lineitem, orders.o_orderkey == lineitem.l_orderkey).count()
-        assert n_bucketed == n_plain
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prior)
-        spark.sql("DROP TABLE IF EXISTS b_orders")
-        spark.sql("DROP TABLE IF EXISTS b_lineitem")
 
 
 def test_lsh_prunes_candidate_set(spark):

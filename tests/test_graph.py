@@ -254,46 +254,6 @@ def test_bfs_skew_salting_powerlaw(spark):
     assert "BroadcastHashJoin" in plain_plan
 
 
-def test_graph_schema_validation(spark):
-    """schema.rs strict/schemaless: per-item validate calls + the
-    distributed violations pass."""
-    import pytest as _pt
-
-    from velesdb_spark.operators.graph_schema import (
-        EdgeType, GraphSchema, NodeType, SchemaValidationError)
-
-    sch = (GraphSchema.strict()
-           .with_node_type(NodeType("Person", {"name": "string"}))
-           .with_node_type(NodeType("Doc"))
-           .with_edge_type(EdgeType("WROTE", "Person", "Doc")))
-
-    sch.validate_node_type("Person")
-    sch.validate_edge_type("WROTE", "Person", "Doc")
-    with _pt.raises(SchemaValidationError):
-        sch.validate_node_type("Alien")
-    with _pt.raises(SchemaValidationError):
-        sch.validate_edge_type("WROTE", "Doc", "Person")
-    with _pt.raises(SchemaValidationError):
-        sch.validate_edge_type("LIKES", "Person", "Doc")
-    with _pt.raises(SchemaValidationError):
-        NodeType("X", {"p": "decimal"})
-
-    # schemaless accepts anything
-    GraphSchema.schemaless_schema().validate_edge_type("ANY", "A", "B")
-
-    edges = spark.createDataFrame(
-        [(1, 10, 20, "WROTE"),    # ok
-         (2, 20, 10, "WROTE"),    # endpoints swapped
-         (3, 10, 20, "LIKES")],   # undeclared type
-        "id bigint, src bigint, dst bigint, label string")
-    nodes = spark.createDataFrame(
-        [(10, "Person"), (20, "Doc")], "id bigint, node_type string")
-    viol = {r.id: r.reason for r in sch.violations_df(edges, nodes).collect()}
-    assert set(viol) == {2, 3}
-    assert "undeclared" in viol[3] and "mismatch" in viol[2]
-    assert sch.violations_df(edges.filter("id = 1"), nodes).count() == 0
-
-
 def test_edge_count_and_has_edge(spark):
     from velesdb_spark.database import Collection
 
@@ -310,6 +270,56 @@ def test_edge_count_and_has_edge(spark):
     assert col.has_edge(1, 2, "KNOWS")
     assert not col.has_edge(1, 2, "CITES")
     assert not col.has_edge(3, 1)
+
+
+def test_add_edge_get_edges_bindings(spark):
+    """add_node/add_edge single upserts; get_edges returns bindings dicts
+    with edge metadata under ``properties`` and filters by label."""
+    from velesdb_spark.database import Collection
+
+    col = Collection(spark, "edge_bindings")
+    assert col.get_edges() == []
+    col.add_node(1, "PERSON", metadata={"name": "John", "age": 30})
+    col.add_node(2, "PERSON", metadata={"name": "Ada"})
+    col.add_edge(7, source=1, target=2, label="KNOWS",
+                 metadata={"since": "2024-01-01"})
+    assert col.get_edges(label="KNOWS") == [
+        {"id": 7, "source": 1, "target": 2, "label": "KNOWS",
+         "properties": {"since": "2024-01-01"}}]
+    assert col.get_edges(label="NOPE") == []
+    assert col.get(1)["labels"] == ["PERSON"]
+
+
+def test_add_node_metadata_cannot_shadow_reserved_fields(spark):
+    from velesdb_spark.database import Collection
+
+    col = Collection(spark, "shadow_nodes")
+    col.add_node(id=7, label="PERSON",
+                 metadata={"id": 42, "labels": "EVIL", "name": "alice"},
+                 vector=None)
+    row = col.df.first()
+    assert row["id"] == 7
+    assert row["labels"] == ["PERSON"]
+    assert row["name"] == "alice"
+
+
+def test_add_node_metadata_cannot_inject_vector(spark):
+    """vector=None must not let a metadata key named like the vector
+    column land as the stored vector."""
+    from velesdb_spark.database import Collection
+
+    col = Collection(spark, "shadow_vec_nodes")
+    col.add_node(id=1, label="PERSON",
+                 metadata={"vector": [9.0, 9.0], "name": "bob"},
+                 vector=None)
+    row = col.df.first()
+    assert row["name"] == "bob"
+    assert "vector" not in col.df.columns or row["vector"] is None
+    # the explicit vector argument still wins
+    col.add_node(id=2, label="PERSON",
+                 metadata={"vector": [9.0, 9.0]}, vector=[1.0, 2.0])
+    row2 = col.df.filter(col.df.id == 2).first()
+    assert [round(float(x), 3) for x in row2["vector"]] == [1.0, 2.0]
 
 
 def test_traverse_bfs_streaming_and_degree_bindings(spark):

@@ -1,5 +1,4 @@
-"""Query-time quantization hints (EPIC-055 US-005) + query routing +
-observable parse cache.
+"""Query-time quantization hints (EPIC-055 US-005) + query routing.
 
 Reference parity:
 - WITH (quantization='f32'|'int8'|'dual'|'auto', oversampling=N) parses
@@ -7,7 +6,6 @@ Reference parity:
   int8 scores on the SQ8 representation, dual does coarse-SQ8 →
   exact-f32 re-rank (index/hnsw/native/dual_precision.rs:260-330).
 - detect_query_type routing (velesdb-server handlers/query.rs:356-386).
-- QueryCache stats (velesql/cache.rs CacheStats).
 
 Ground truth for the quantized paths is NumPy re-derivation on the
 collected sf0.001 embeddings (same discipline as the distance fuzz).
@@ -295,41 +293,6 @@ def test_detect_query_type_routing():
         "SELECT * FROM docs WHERE price > 10").query_type() == "rows"
 
 
-# ----------------------------------------------------------- QueryCache
-
-def test_query_cache_stats_and_eviction():
-    from velesdb_spark.velesql.cache import QueryCache
-
-    c = QueryCache(capacity=2)
-    q1 = c.parse("SELECT * FROM docs LIMIT 1")
-    assert c.parse("SELECT * FROM docs LIMIT 1") is q1  # shared AST
-    s = c.stats()
-    assert (s.hits, s.misses, s.evictions) == (1, 1, 0)
-    assert s.hit_rate() == pytest.approx(50.0)
-    c.parse("SELECT * FROM docs LIMIT 2")
-    c.parse("SELECT * FROM docs LIMIT 3")  # evicts LIMIT 1 (LRU)
-    assert c.stats().evictions == 1
-    assert c.len() == 2
-    c.parse("SELECT * FROM docs LIMIT 1")  # re-parse: it was evicted
-    assert c.stats().misses == 4
-    c.clear()
-    s = c.stats()
-    assert (s.hits, s.misses, s.evictions) == (0, 0, 0)
-    assert c.is_empty()
-
-
-def test_query_cache_errors_not_cached():
-    from velesdb_spark.velesql.cache import QueryCache
-    from velesdb_spark.velesql.lexer import VelesQLSyntaxError
-
-    c = QueryCache()
-    for _ in range(2):
-        with pytest.raises(VelesQLSyntaxError):
-            c.parse("SELEKT nope")
-    s = c.stats()
-    assert s.hits == 0 and s.misses == 2 and c.len() == 0
-
-
 def test_explain_shows_quantization_nodes():
     from velesdb_spark.plans.explain import plan_tree
     from velesdb_spark.velesql.parser import parse
@@ -371,42 +334,3 @@ def test_auto_quantization_decision_rule(spark):
     a2 = [r.id for r in small.search(qv, 5, quantization="auto").collect()]
     e2 = [r.id for r in small.search(qv, 5).collect()]
     assert a2 == e2
-
-
-def test_query_cache_min_size_clamped():
-    """cache_tests.rs:131-142 test_cache_min_size: capacity 0 clamps to
-    1 — two distinct queries keep exactly one entry and record one
-    eviction (the reference clamps, never errors)."""
-    from velesdb_spark.velesql.cache import QueryCache
-
-    c = QueryCache(capacity=0)
-    c.parse("SELECT * FROM a")
-    c.parse("SELECT * FROM b")
-    assert c.len() == 1
-    assert c.stats().evictions == 1
-
-
-def test_query_cache_thread_safety():
-    """cache_tests.rs:145-175: concurrent parse() calls on one cache —
-    no lost counters, every thread gets the shared AST."""
-    import threading
-
-    from velesdb_spark.velesql.cache import QueryCache
-
-    c = QueryCache(capacity=100)
-    q = "SELECT * FROM docs LIMIT 3"
-    got = []
-
-    def worker():
-        for _ in range(50):
-            got.append(c.parse(q))
-
-    threads = [threading.Thread(target=worker) for _ in range(8)]
-    for t in threads:
-        t.start()
-    for t in threads:
-        t.join()
-    s = c.stats()
-    assert s.hits + s.misses == 400
-    assert s.misses >= 1 and c.len() == 1
-    assert all(a is got[0] for a in got)

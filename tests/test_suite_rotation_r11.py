@@ -145,71 +145,11 @@ def test_subquery_correlation_surface(catalog):
 
 
 # ------------------------------------------------------------------
-# hybrid_tests.rs (9 shapes) — two-list fusion on DataFrames
+# hybrid_tests.rs — intersect and normalize on DataFrames
 # ------------------------------------------------------------------
 
 def _res(spark, pairs):
     return spark.createDataFrame(list(pairs), "id bigint, score double")
-
-
-def test_hybrid_rrf_basic(spark):
-    """hybrid_tests.rs:12-23: ids 1 and 2 (present in both lists, top
-    ranks) lead; all 4 distinct ids survive."""
-    from velesdb_spark.functions.fusion import fuse_pair
-
-    v = _res(spark, [(1, 0.9), (2, 0.8), (3, 0.7)])
-    g = _res(spark, [(2, 1.0), (1, 0.5), (4, 0.3)])
-    fused = fuse_pair(v, g, "rrf", limit=10).collect()
-    assert len(fused) == 4
-    assert {fused[0].id, fused[1].id} == {1, 2}
-
-
-def test_hybrid_rrf_k_parameter(spark):
-    """hybrid_tests.rs:25-34: smaller k -> larger top score."""
-    from velesdb_spark.functions.fusion import fuse_pair
-
-    v = _res(spark, [(1, 0.9)])
-    g = _res(spark, [(1, 1.0)])
-    s60 = fuse_pair(v, g, "rrf", k=60).collect()[0].score
-    s1 = fuse_pair(v, g, "rrf", k=1).collect()[0].score
-    assert s1 > s60
-    assert abs(s60 - 2.0 / 61.0) < 1e-9 and abs(s1 - 1.0) < 1e-9
-
-
-def test_hybrid_weighted_fusion(spark):
-    """hybrid_tests.rs:36-45: symmetric 0.5/0.5 weights over mirrored
-    lists -> (near-)equal fused scores."""
-    from velesdb_spark.functions.fusion import fuse_pair
-
-    v = _res(spark, [(1, 1.0), (2, 0.5)])
-    g = _res(spark, [(2, 1.0), (1, 0.5)])
-    fused = fuse_pair(v, g, "weighted").collect()
-    assert abs(fused[0].score - fused[1].score) < 0.1
-
-
-def test_hybrid_weighted_vector_preference(spark):
-    """hybrid_tests.rs:47-56: 0.9 vector weight -> the vector-best id
-    wins."""
-    from velesdb_spark.functions.fusion import fuse_pair
-
-    v = _res(spark, [(1, 1.0), (2, 0.0)])
-    g = _res(spark, [(2, 1.0), (1, 0.0)])
-    fused = fuse_pair(v, g, "weighted",
-                      vector_weight=0.9, graph_weight=0.1).collect()
-    assert fused[0].id == 1
-
-
-def test_hybrid_maximum_fusion(spark):
-    """hybrid_tests.rs:58-70: per-list normalization first — the max of
-    each list scores 1.0 regardless of raw scale; 3 distinct ids out."""
-    from velesdb_spark.functions.fusion import fuse_pair
-
-    v = _res(spark, [(1, 0.9), (2, 0.3)])
-    g = _res(spark, [(2, 0.8), (3, 0.7)])
-    fused = fuse_pair(v, g, "maximum").collect()
-    assert len(fused) == 3
-    byid = {r.id: r.score for r in fused}
-    assert abs(byid[1] - 1.0) < 1e-9 and abs(byid[2] - 1.0) < 1e-9
 
 
 def test_hybrid_intersect_results(spark):
@@ -220,25 +160,6 @@ def test_hybrid_intersect_results(spark):
     g = _res(spark, [(2, 1.0), (3, 0.5), (4, 0.3)])
     got = {r.id for r in intersect_results(v, g).collect()}
     assert got == {2, 3}
-
-
-def test_hybrid_empty_results(spark):
-    """hybrid_tests.rs:84-92: an empty side is a no-op, not an error."""
-    from velesdb_spark.functions.fusion import fuse_pair
-
-    v = _res(spark, [(1, 0.9)])
-    empty = _res(spark, [])
-    fused = fuse_pair(v, empty, "rrf", limit=10).collect()
-    assert len(fused) == 1 and fused[0].id == 1
-
-
-def test_hybrid_limit_respected(spark):
-    """hybrid_tests.rs:94-101."""
-    from velesdb_spark.functions.fusion import fuse_pair
-
-    v = _res(spark, [(1, 0.9), (2, 0.8), (3, 0.7), (4, 0.6), (5, 0.5)])
-    g = _res(spark, [(6, 1.0), (7, 0.5)])
-    assert len(fuse_pair(v, g, "rrf", limit=3).collect()) == 3
 
 
 def test_hybrid_normalize_scores(spark):
@@ -480,66 +401,6 @@ def test_metadata_only_collection_lifecycle(spark):
     assert not v.is_metadata_only()
 
 
-# ------------------------------------------------------------------
-# collection/search/query/extraction_tests.rs (16) — prefilter planning
-# ------------------------------------------------------------------
-
-def _cmp(col, val):
-    return ast.Compare(col, "=", val)
-
-
-def _sim(field, thr):
-    return ast.Similarity(field, ast.Param("v"), ">", thr)
-
-
-def test_extract_match_query():
-    """extraction_tests.rs:38-78: direct / in-AND / nested-AND hits;
-    a bare comparison yields None."""
-    from velesdb_spark.velesql.extraction import extract_match_query
-
-    assert extract_match_query(ast.MatchText("text", "hello world")) \
-        == "hello world"
-    cond = ast.And((_cmp("a", 1), ast.MatchText("text", "search term")))
-    assert extract_match_query(cond) == "search term"
-    inner = ast.And((ast.MatchText("text", "inner query"), _cmp("b", 2)))
-    assert extract_match_query(ast.And((_cmp("a", 1), inner))) \
-        == "inner query"
-    assert extract_match_query(_cmp("a", 1)) is None
-
-
-def test_extract_metadata_filter():
-    """extraction_tests.rs:80-199: vector conditions strip; AND keeps the
-    extractable sides (partial is fine); OR requires EVERY side; NOT
-    survives only with a surviving inner condition."""
-    from velesdb_spark.velesql.extraction import extract_metadata_filter
-
-    meta = _cmp("category", 1)
-    assert extract_metadata_filter(meta) is meta
-    assert extract_metadata_filter(_sim("embedding", 0.8)) is None
-    assert extract_metadata_filter(ast.VectorSearch(ast.Param("v"))) is None
-    assert extract_metadata_filter(
-        ast.VectorFusedSearch((ast.Param("v"),))) is None
-    # AND with similarity: the metadata side survives, unwrapped
-    got = extract_metadata_filter(ast.And((_sim("embedding", 0.8), meta)))
-    assert got is meta
-    # AND both metadata: both kept
-    got = extract_metadata_filter(ast.And((_cmp("a", 1), _cmp("b", 2))))
-    assert isinstance(got, ast.And) and len(got.conditions) == 2
-    # AND both similarity: nothing remains
-    assert extract_metadata_filter(
-        ast.And((_sim("e1", 0.8), _sim("e2", 0.9)))) is None
-    # OR both metadata: kept
-    got = extract_metadata_filter(ast.Or((_cmp("a", 1), _cmp("b", 2))))
-    assert isinstance(got, ast.Or) and len(got.conditions) == 2
-    # OR with similarity: the whole disjunction drops (FLAG-13 asymmetry)
-    assert extract_metadata_filter(
-        ast.Or((_sim("embedding", 0.8), _cmp("category", 1)))) is None
-    # NOT metadata survives; NOT similarity drops
-    got = extract_metadata_filter(ast.Not(_cmp("deleted", 1)))
-    assert isinstance(got, ast.Not)
-    assert extract_metadata_filter(ast.Not(_sim("embedding", 0.8))) is None
-
-
 def test_agent_memory_recall_dim_mismatch(spark):
     """agent/memory_tests.rs test_semantic_dimension_mismatch +
     test_dimension_mismatch_on_existing_collection: both the WRITE side
@@ -556,87 +417,6 @@ def test_agent_memory_recall_dim_mismatch(spark):
         mem.recall("semantic", [1.0, 0.0], 5)
     # the right dim still recalls
     assert mem.recall("semantic", [1.0, 0.0, 0.0, 0.0], 5).count() == 1
-
-
-# ------------------------------------------------------------------
-# config_tests.rs (18) — VelesConfig parity (velesdb_spark/config.py)
-# ------------------------------------------------------------------
-
-def test_search_mode_table():
-    """config_tests.rs: ef_search per mode; default is Balanced."""
-    from velesdb_spark.config import SearchMode
-
-    assert SearchMode.ef_search(SearchMode.FAST) == 64
-    assert SearchMode.ef_search(SearchMode.BALANCED) == 128
-    assert SearchMode.ef_search(SearchMode.ACCURATE) == 256
-    assert SearchMode.ef_search(SearchMode.PERFECT) >= 2 ** 62
-    assert SearchMode.default() == SearchMode.BALANCED
-
-
-def test_config_defaults_and_effective_ef():
-    """config_tests.rs: default values; effective_ef_search from mode or
-    explicit override."""
-    from velesdb_spark.config import VelesConfig
-
-    c = VelesConfig()
-    assert c.search.default_mode == "balanced"
-    assert c.search.ef_search is None
-    assert c.search.max_results == 1000
-    assert c.search.query_timeout_ms == 30000
-    assert c.storage.storage_mode == "mmap"
-    assert c.logging.level == "info"
-    assert c.effective_ef_search() == 128
-    c.search.ef_search = 300
-    assert c.effective_ef_search() == 300
-    c.validate()  # defaults validate clean
-
-
-def test_config_toml_roundtrip():
-    """config_tests.rs: minimal TOML (defaults fill in), full TOML,
-    invalid mode rejected, to_toml -> from_toml round-trips."""
-    from velesdb_spark.config import ConfigError, VelesConfig
-
-    c = VelesConfig.from_toml('[search]\ndefault_mode = "fast"\n')
-    assert c.search.default_mode == "fast"
-    assert c.search.max_results == 1000  # default filled
-    full = VelesConfig.from_toml(
-        '[search]\ndefault_mode = "accurate"\nef_search = 200\n'
-        'max_results = 50\n[hnsw]\nm = 16\nef_construction = 150\n'
-        '[storage]\nstorage_mode = "memory"\n[server]\nport = 9000\n'
-        '[logging]\nlevel = "debug"\n')
-    assert full.search.ef_search == 200 and full.hnsw.m == 16
-    full.validate()
-    with pytest.raises(ConfigError):
-        VelesConfig.from_toml('[search]\ndefault_mode = "warp"\n')
-    back = VelesConfig.from_toml(full.to_toml())
-    assert back == full
-
-
-def test_config_validate_rules():
-    """config_tests.rs: the exact validation ranges and key names."""
-    from velesdb_spark.config import ConfigError, VelesConfig
-
-    def expect(key, mutate):
-        c = VelesConfig()
-        mutate(c)
-        with pytest.raises(ConfigError, match=key):
-            c.validate()
-
-    expect("search.ef_search", lambda c: setattr(c.search, "ef_search", 8))
-    expect("search.ef_search", lambda c: setattr(c.search, "ef_search", 5000))
-    expect("search.max_results", lambda c: setattr(c.search, "max_results", 0))
-    expect("search.max_results",
-           lambda c: setattr(c.search, "max_results", 20000))
-    expect("hnsw.m", lambda c: setattr(c.hnsw, "m", 2))
-    expect("hnsw.m", lambda c: setattr(c.hnsw, "m", 256))
-    expect("hnsw.ef_construction",
-           lambda c: setattr(c.hnsw, "ef_construction", 50))
-    expect("limits.max_dimensions",
-           lambda c: setattr(c.limits, "max_dimensions", 0))
-    expect("server.port", lambda c: setattr(c.server, "port", 80))
-    expect("storage.storage_mode",
-           lambda c: setattr(c.storage, "storage_mode", "cloud"))
-    expect("logging.level", lambda c: setattr(c.logging, "level", "loud"))
 
 
 def test_numpy_vector_inputs(spark):

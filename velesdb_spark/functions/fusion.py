@@ -188,47 +188,6 @@ def normalize_scores(df: DataFrame, id_col: str = "id",
     )
 
 
-def fuse_pair(vector_results: DataFrame, graph_results: DataFrame,
-              strategy: str = "rrf", k: int = RRF_K,
-              vector_weight: float = 0.5, graph_weight: float = 0.5,
-              limit: int | None = None, id_col: str = "id",
-              score_col: str = "score") -> DataFrame:
-    """Two-list hybrid fusion (velesql/hybrid.rs fuse_rrf/fuse_weighted/
-    fuse_maximum — the MATCH+NEAR merge surface):
-
-    - ``rrf``: score(d) = Σ 1/(k + rank_i(d)), 1-based rank per list —
-      no normalization, robust to heterogeneous score scales.
-    - ``weighted``: min-max normalize each list, then
-      vector_weight·v + graph_weight·g (an id missing from one list
-      contributes 0 for that side).
-    - ``maximum``: min-max normalize each list, take the larger side.
-
-    Returns (id, score) sorted descending (id tie-break for a
-    deterministic distributed order), limited when ``limit`` is given.
-    """
-    v = vector_results.select(F.col(id_col), F.col(score_col))
-    g = graph_results.select(F.col(id_col), F.col(score_col))
-    if strategy == "rrf":
-        tagged = (v.withColumn("_q", F.lit("v"))
-                  .unionByName(g.withColumn("_q", F.lit("g"))))
-        fused = fuse_rrf(tagged, k, "_q", id_col, score_col)
-    elif strategy in ("weighted", "maximum"):
-        vn = normalize_scores(v, id_col, score_col) \
-            .withColumnRenamed(score_col, "_vs")
-        gn = normalize_scores(g, id_col, score_col) \
-            .withColumnRenamed(score_col, "_os")
-        joined = vn.join(gn, id_col, "full_outer")
-        vs = F.coalesce(F.col("_vs"), F.lit(0.0))
-        os_ = F.coalesce(F.col("_os"), F.lit(0.0))
-        expr = (vector_weight * vs + graph_weight * os_
-                if strategy == "weighted" else F.greatest(vs, os_))
-        fused = joined.select(id_col, expr.alias(score_col))
-    else:
-        raise ValueError(f"unknown pair-fusion strategy: {strategy}")
-    out = fused.orderBy(F.desc(score_col), F.asc(id_col))
-    return out.limit(limit) if limit is not None else out
-
-
 def fuse_minmax_weighted(vector_results: DataFrame, other_results: DataFrame,
                          alpha: float, id_col: str = "id",
                          score_col: str = "score") -> DataFrame:

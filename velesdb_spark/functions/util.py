@@ -4,8 +4,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
+_SPREAD_MIN_FACTOR = 2
 
-def spread(df: DataFrame, min_factor: int = 2) -> DataFrame:
+
+def spread(df: DataFrame) -> DataFrame:
     """Repartition up to the cluster's default parallelism when the input
     is backed by too few files (e.g. a single small parquet file would
     otherwise run every downstream expression single-threaded). Decided
@@ -15,7 +17,7 @@ def spread(df: DataFrame, min_factor: int = 2) -> DataFrame:
     sc = df.sparkSession.sparkContext
     target = sc.defaultParallelism
     files = df.inputFiles()
-    if files and len(files) * min_factor <= target:
+    if files and len(files) * _SPREAD_MIN_FACTOR <= target:
         return df.repartition(target)
     return df
 
