@@ -67,8 +67,7 @@ def _resolve(dotted: str, bases: list[Path]) -> list[Path]:
 def _imports(path: Path) -> list[Path]:
     # A script runs with its own folder first on sys.path; a package module
     # resolves absolute imports from the repo root only.
-    in_pkg = PKG in path.parents
-    bases = [ROOT] if in_pkg else [path.parent, ROOT]
+    bases = [ROOT] if PKG in path.parents else [path.parent, ROOT]
     found = []
     for node in ast.walk(_parse(path)):
         if isinstance(node, ast.Import):
@@ -76,12 +75,10 @@ def _imports(path: Path) -> list[Path]:
                 found += _resolve(alias.name, bases)
         elif isinstance(node, ast.ImportFrom):
             here = [path.parents[node.level - 1]] if node.level else bases
-            module = node.module
-            if module:
-                found += _resolve(module, here)
-            prefix = f"{module}." if module else ""
+            prefix = f"{node.module}." if node.module else ""
             for alias in node.names:
-                # ``from pkg import sub`` imports the submodule ``pkg.sub``.
+                # ``pkg.name`` resolves to the submodule when ``name`` is
+                # one, else to ``pkg`` itself.
                 found += _resolve(prefix + alias.name, here)
         elif (isinstance(node, ast.Constant) and isinstance(node.value, str)
               and _MODULE_NAME.fullmatch(node.value)):
