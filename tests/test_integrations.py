@@ -1,477 +1,27 @@
-"""LangChain / LlamaIndex vector-store adapters + shared validation.
-
-Reference: integrations/langchain/src/langchain_velesdb/{vectorstore,
-security}.py and the llamaindex twin — surface and semantics ported
-over the Spark engine; these tests mirror the reference's own test
-strategy (integrations/*/tests/test_vectorstore.py): deterministic fake
-embeddings, structural assertions on Documents/Nodes, round-trips."""
+"""Collection behaviours a framework adapter builds on: single-node and
+single-edge writes through ``add_node``/``add_edge``, the bindings shape
+of ``get_edges``, reserved fields that metadata must not shadow, and the
+metric direction that decides where a missing score ranks."""
 
 from __future__ import annotations
 
-import numpy as np
-import pytest
-
-from velesdb_spark.integrations.langchain_store import (
-    Document,
-    VelesDBVectorStore as LCStore,
-    _stable_hash_id,
-)
-from velesdb_spark.integrations.llamaindex_store import (
-    TextNode,
-    VectorStoreQuery,
-    VelesDBVectorStore as LIStore,
-)
-from velesdb_spark.integrations.security import (
-    SecurityError,
-    validate_collection_name,
-    validate_metric,
-    validate_path,
-    validate_weight,
-)
-
-
-class FakeEmbeddings:
-    """Deterministic content-hash embeddings: identical text → identical
-    vector, so a query equal to a stored text ranks that doc first."""
-
-    dim = 8
-
-    def _vec(self, text: str):
-        seed = _stable_hash_id(text) % (2**31)
-        v = np.random.RandomState(seed).randn(self.dim)
-        return [float(x) for x in v]
-
-    def embed_documents(self, texts):
-        return [self._vec(t) for t in texts]
-
-    def embed_query(self, text):
-        return self._vec(text)
-
-
-TEXTS = ["spark engine joins tables", "vector search with graphs",
-         "bm25 text ranking engine", "streaming ingestion pipeline"]
-METAS = [{"lang": "en", "n": i} for i in range(len(TEXTS))]
-
-
-@pytest.fixture(scope="module")
-def lc_store(spark):
-    return LCStore.from_texts(TEXTS, FakeEmbeddings(), metadatas=METAS,
-                              spark=spark, collection_name="lc_test")
-
-
-# ------------------------------------------------------------- security
-
-def test_security_validators():
-    with pytest.raises(SecurityError):
-        validate_path("../../etc/passwd")
-    with pytest.raises(SecurityError):
-        validate_path("")
-    with pytest.raises(SecurityError):
-        validate_metric("manhattan")
-    assert validate_metric("COSINE") == "cosine"
-    with pytest.raises(SecurityError):
-        validate_collection_name("bad name!")
-    with pytest.raises(SecurityError):
-        validate_weight(1.5)
-    assert validate_weight(0.3) == 0.3
-
-
-# ------------------------------------------------------------- langchain
-
-def test_lc_similarity_search_ranks_exact_match_first(lc_store):
-    docs = lc_store.similarity_search(TEXTS[1], k=2)
-    assert len(docs) == 2
-    assert docs[0].page_content == TEXTS[1]
-    assert docs[0].metadata["lang"] == "en" and docs[0].metadata["n"] == 1
-
-
-def test_lc_with_score_sorted_and_thresholded(lc_store):
-    scored = lc_store.similarity_search_with_score(TEXTS[0], k=4)
-    scores = [s for _, s in scored]
-    assert scores == sorted(scores, reverse=True)
-    assert scored[0][1] == pytest.approx(1.0, abs=1e-6)  # cosine self-match
-    top = lc_store.similarity_search_with_relevance_scores(
-        TEXTS[0], k=4, score_threshold=0.99)
-    assert [d.page_content for d, _ in top] == [TEXTS[0]]
-
-
-def test_lc_filter_search(lc_store):
-    docs = lc_store.similarity_search_with_filter(
-        TEXTS[0], k=4, filter={"type": "gt", "field": "n", "value": 1})
-    assert docs and all(d.metadata["n"] > 1 for d in docs)
-
-
-def test_lc_text_and_hybrid_search(lc_store):
-    tres = lc_store.text_search("engine", k=4)
-    assert {d.page_content for d, _ in tres} == {TEXTS[0], TEXTS[2]}
-    assert all(s > 0 for _, s in tres)
-    hres = lc_store.hybrid_search(TEXTS[2], k=3, vector_weight=0.5)
-    assert hres[0][0].page_content == TEXTS[2]  # top in both legs
-
-
-def test_lc_batch_and_multi_query(lc_store):
-    per = lc_store.batch_search_with_score([TEXTS[0], TEXTS[3]], k=2)
-    assert len(per) == 2
-    assert per[0][0][0].page_content == TEXTS[0]
-    assert per[1][0][0].page_content == TEXTS[3]
-    fused = lc_store.multi_query_search_with_score(
-        [TEXTS[1], TEXTS[1]], k=3, fusion="rrf", fusion_params={"k": 60})
-    assert fused[0][0].page_content == TEXTS[1]
-    weighted = lc_store.multi_query_search(
-        [TEXTS[1], TEXTS[2]], k=2, fusion="weighted",
-        fusion_params={"avg_weight": 0.6, "max_weight": 0.3,
-                       "hit_weight": 0.1})
-    assert len(weighted) == 2
-    with pytest.raises(ValueError):
-        lc_store.multi_query_search([TEXTS[0]], fusion="bogus")
-
-
-def test_lc_velesql_query(lc_store):
-    docs = lc_store.query(
-        "SELECT * FROM lc_test WHERE n >= $lo ORDER BY n LIMIT 10",
-        {"lo": 2})
-    assert [d.metadata["n"] for d in docs] == [2, 3]
-
-
-def test_lc_retriever_and_info(lc_store):
-    r = lc_store.as_retriever(search_kwargs={"k": 1})
-    docs = r.invoke(TEXTS[2])
-    assert [d.page_content for d in docs] == [TEXTS[2]]
-    info = lc_store.get_collection_info()
-    assert info["count"] == 4 and info["metric"] == "cosine"
-    assert not lc_store.is_empty()
-
-
-def test_lc_ids_roundtrip_and_delete(spark):
-    store = LCStore(FakeEmbeddings(), spark=spark,
-                    collection_name="lc_ids")
-    ids = store.add_texts(["alpha", "beta"], ids=["doc-a", "doc-b"])
-    assert ids == ["doc-a", "doc-b"]
-    docs = store.get_by_ids(["doc-a"])
-    assert [d.page_content for d in docs] == ["alpha"]
-    assert store.delete(["doc-a"]) is True
-    assert store.get_by_ids(["doc-a"]) == []
-    assert store.get_by_ids(["doc-b"])[0].page_content == "beta"
-    assert store.delete([]) is None
-    # auto-generated numeric ids round-trip through delete too (the
-    # int()-first resolution deviation from the reference)
-    auto = store.add_texts(["gamma"])
-    assert store.delete(auto) is True
-    assert store.get_by_ids(auto) == []
-
-
-# ------------------------------------------------------------ llamaindex
-
-@pytest.fixture(scope="module")
-def li_store(spark):
-    store = LIStore(spark=spark, collection_name="li_test")
-    emb = FakeEmbeddings()
-    nodes = [TextNode(text=t, id_=f"node-{i}",
-                      metadata={"n": i}, embedding=emb._vec(t))
-             for i, t in enumerate(TEXTS)]
-    ids = store.add(nodes)
-    assert ids == [f"node-{i}" for i in range(4)]
-    return store
-
-
-def test_li_query(li_store):
-    emb = FakeEmbeddings()
-    res = li_store.query(VectorStoreQuery(
-        query_embedding=emb.embed_query(TEXTS[2]), similarity_top_k=2))
-    assert res.ids[0] == "node-2"
-    assert res.nodes[0].get_content() == TEXTS[2]
-    assert res.nodes[0].metadata == {"n": 2}
-    assert res.similarities[0] == pytest.approx(1.0, abs=1e-6)
-    thr = li_store.query_with_score_threshold(VectorStoreQuery(
-        query_embedding=emb.embed_query(TEXTS[2]), similarity_top_k=4),
-        score_threshold=0.99)
-    assert thr.ids == ["node-2"]
-
-
-def test_li_text_hybrid_batch(li_store):
-    tres = li_store.text_query("engine", similarity_top_k=4)
-    assert set(tres.ids) == {"node-0", "node-2"}
-    emb = FakeEmbeddings()
-    hres = li_store.hybrid_query(TEXTS[0], emb.embed_query(TEXTS[0]),
-                                 similarity_top_k=3)
-    assert hres.ids[0] == "node-0"
-    batch = li_store.batch_query([
-        VectorStoreQuery(query_embedding=emb.embed_query(TEXTS[1]),
-                         similarity_top_k=1),
-        VectorStoreQuery(query_embedding=None),
-        VectorStoreQuery(query_embedding=emb.embed_query(TEXTS[3]),
-                         similarity_top_k=1),
-    ])
-    assert batch[0].ids == ["node-1"]
-    assert batch[1].ids == []
-    assert batch[2].ids == ["node-3"]
-
-
-def test_li_multi_query_and_velesql(li_store):
-    emb = FakeEmbeddings()
-    fused = li_store.multi_query_search(
-        [emb.embed_query(TEXTS[1]), emb.embed_query(TEXTS[1])],
-        similarity_top_k=2, fusion="rrf")
-    assert fused.ids[0] == "node-1"
-    # unknown fusion name falls back to rrf (reference :707-708)
-    fb = li_store.multi_query_search(
-        [emb.embed_query(TEXTS[1])], similarity_top_k=2, fusion="nope")
-    assert fb.ids[0] == "node-1"
-    res = li_store.velesql(
-        "SELECT * FROM li_test WHERE n = 3 LIMIT 5")
-    assert res.ids == ["node-3"]
-
-
-# ---------------------------------------------------- memory + retriever
-
-def test_chat_memory_roundtrip(spark):
-    from velesdb_spark.integrations.memory import (
-        AIMessage, HumanMessage, VelesDBChatMemory)
-
-    mem = VelesDBChatMemory(spark=spark)
-    assert mem.memory_variables == ["history"]
-    assert mem.load_memory_variables({}) == {"history": ""}
-    mem.save_context({"input": "Hi"}, {"output": "Hello!"})
-    mem.save_context({"input": "How are you?"}, {"output": "Great."})
-    hist = mem.load_memory_variables({})["history"]
-    assert hist == ("Human: Hi\nAI: Hello!\n"
-                    "Human: How are you?\nAI: Great.")
-    mem.return_messages = True
-    msgs = mem.load_memory_variables({})["history"]
-    assert msgs[:2] == [HumanMessage("Hi"), AIMessage("Hello!")]
-
-
-def test_semantic_memory_facts(spark):
-    from velesdb_spark.integrations.memory import VelesDBSemanticMemory
-
-    mem = VelesDBSemanticMemory(FakeEmbeddings(), spark=spark)
-    assert mem.dimension == FakeEmbeddings.dim  # auto-detected
-    fid = mem.add_fact("Paris is the capital of France")
-    ids = mem.add_facts(["Spark shuffles on joins", "BM25 ranks text"])
-    assert len(ids) == 2 and ids[0] > fid
-    hits = mem.query("Paris is the capital of France", k=2)
-    assert hits[0]["id"] == fid
-    assert hits[0]["content"] == "Paris is the capital of France"
-    assert hits[0]["score"] == pytest.approx(1.0, abs=1e-6)
-
-
-@pytest.fixture(scope="module")
-def graph_store(spark):
-    """Docs 1..4 with a chain of edges 1→2→3 and 4 isolated."""
-    store = LCStore(FakeEmbeddings(), spark=spark,
-                    collection_name="lc_graph")
-    store.add_texts(TEXTS, metadatas=[{"doc_id": i + 1}
-                                      for i in range(len(TEXTS))])
-    col = store._collection
-    col.add_edges([
-        {"id": 1, "src": 1, "dst": 2, "label": "REL"},
-        {"id": 2, "src": 2, "dst": 3, "label": "REL"},
-    ])
-    return store
-
-
-def test_graph_retriever_expands_context(graph_store):
-    from velesdb_spark.integrations.graph_retriever import GraphRetriever
-
-    r = GraphRetriever(vector_store=graph_store, seed_k=1, expand_k=4,
-                       max_depth=2, score_threshold=0.99)
-    docs = r.invoke(TEXTS[0])  # seed = doc 1 (self-match); expands 2, 3
-    contents = [d.page_content for d in docs]
-    assert contents[0] == TEXTS[0]
-    assert set(contents) == {TEXTS[0], TEXTS[1], TEXTS[2]}
-    assert docs[0].metadata["graph_depth"] == 0
-    assert docs[0].metadata["retrieval_mode"] == "graph_expanded"
-    assert all(d.metadata["graph_depth"] == 1 for d in docs[1:])
-
-
-def test_graph_retriever_low_latency_mode(graph_store):
-    from velesdb_spark.integrations.graph_retriever import GraphRetriever
-
-    r = GraphRetriever(vector_store=graph_store, low_latency=True,
-                       expand_k=2, score_threshold=0.99)
-    docs = r.invoke(TEXTS[0])
-    assert [d.page_content for d in docs] == [TEXTS[0]]
-    assert docs[0].metadata["retrieval_mode"] == "vector_only"
-
-
-def test_graph_qa_retriever_dedup_and_rank(graph_store):
-    from velesdb_spark.integrations.graph_retriever import GraphQARetriever
-
-    r = GraphQARetriever(vector_store=graph_store, seed_k=1, expand_k=4,
-                         max_depth=2, score_threshold=0.99)
-    docs = r.invoke(TEXTS[0])
-    depths = [d.metadata["graph_depth"] for d in docs]
-    assert depths == sorted(depths)  # seeds first
-    assert len({d.page_content for d in docs}) == len(docs)  # deduped
-
 
 def test_graph_loader_and_edge_bindings(spark):
-    from velesdb_spark.integrations.graph_loader import (
-        GraphLoader, _generate_id)
+    """add_node/add_edge single upserts; get_edges returns bindings dicts
+    with edge metadata under ``properties`` and filters by label."""
+    from velesdb_spark.database import Collection
 
-    store = LIStore(spark=spark, collection_name="li_graphload")
-    emb = FakeEmbeddings()
-    store.add([TextNode(text="seed", id_="s0", embedding=emb._vec("seed"))])
-    loader = GraphLoader(store)
-    loader.add_node(1, "PERSON", metadata={"name": "John", "age": 30})
-    loader.add_node(2, "PERSON", metadata={"name": "Ada"})
-    loader.add_edge(7, source=1, target=2, label="KNOWS",
-                    metadata={"since": "2024-01-01"})
-    edges = loader.get_edges(label="KNOWS")
-    assert edges == [{"id": 7, "source": 1, "target": 2, "label": "KNOWS",
-                      "properties": {"since": "2024-01-01"}}]
-    assert loader.get_edges(label="NOPE") == []
-    # load_from_nodes: one batched upsert, deterministic SHA ids
-    counts = loader.load_from_nodes(
-        [TextNode(text="alpha " * 60, id_="n1", metadata={"lang": "en"}),
-         TextNode(text="beta", id_="n2")])
-    assert counts == {"nodes": 2, "edges": 0}
-    col = store._collection
-    nid = _generate_id("n1", "DOCUMENT")
-    row = col.get(nid)
-    assert row["labels"] == ["DOCUMENT"] and row["lang"] == "en"
-    assert len(row["text_preview"]) == 200  # preview truncation
-
-
-def test_li_get_nodes_delete_info(spark):
-    store = LIStore(spark=spark, collection_name="li_crud")
-    emb = FakeEmbeddings()
-    nodes = [TextNode(text=t, id_=f"d{i}", embedding=emb._vec(t))
-             for i, t in enumerate(["one", "two"])]
-    store.add(nodes)
-    got = store.get_nodes(["d1", "d0"])
-    assert [n.get_content() for n in got] == ["two", "one"]
-    store.delete("d0")
-    assert store.get_nodes(["d0"]) == []
-    info = store.get_collection_info()
-    assert info["count"] == 1
-    assert not store.is_empty()
-    assert Document("x").page_content == "x"  # stand-in sanity
-
-
-def test_llamaindex_graph_retriever(spark):
-    """LlamaIndex GraphRetriever/GraphQARetriever (llamaindex twin of
-    the seed+expand pattern): seeds via the store, expansion along the
-    collection's edges (hashed node ids), neighbors at fixed score 0.5."""
-    from velesdb_spark.integrations.llamaindex_retriever import (
-        GraphQARetriever, GraphRetriever, NodeWithScore)
-    from velesdb_spark.integrations.llamaindex_store import (
-        _stable_hash_id)
-
-    store = LIStore(spark=spark, collection_name="li_retr")
-    emb = FakeEmbeddings()
-    hids = {f"n{i}": _stable_hash_id(f"n{i}") for i in range(len(TEXTS))}
-    # only the anchor carries an extractable id: the reference drops
-    # id-less seeds from the result set and fills the freed expand_k
-    # slots with graph neighbors (graph_retriever.py:166-218)
-    nodes = [TextNode(text=t, id_=f"n{i}",
-                      metadata=({"doc_id": hids["n0"]} if i == 0 else {}),
-                      embedding=emb._vec(t))
-             for i, t in enumerate(TEXTS)]
-    store.add(nodes)
-    col = store._collection
-    col.add_edges([
-        {"id": 1, "src": hids["n0"], "dst": hids["n1"], "label": "REL"},
-        {"id": 2, "src": hids["n1"], "dst": hids["n2"], "label": "REL"},
-    ])
-
-    r = GraphRetriever(vector_store=store, embed_model=emb, seed_k=1,
-                       expand_k=4, max_depth=2)
-    # seed = n0 (the only id-bearing node); expands n1 (d1) and n2 (d2)
-    out = r.retrieve(TEXTS[0])
-    assert all(isinstance(x, NodeWithScore) for x in out)
-    by_id = {x.node.node_id: x for x in out}
-    assert set(by_id) == {"n0", "n1", "n2"}  # n3 unreachable, id-less
-    assert by_id["n0"].node.metadata["graph_depth"] == 0
-    assert by_id["n0"].score == pytest.approx(1.0, abs=1e-6)
-    assert by_id["n1"].score == 0.5  # reference's fixed expanded score
-    assert by_id["n1"].node.metadata["graph_depth"] == 1
-    assert by_id["n1"].node.metadata["retrieval_mode"] == "graph_expanded"
-
-    low = GraphRetriever(vector_store=store, embed_model=emb,
-                         low_latency=True, expand_k=2)
-    lout = low.retrieve(TEXTS[0])
-    assert lout[0].node.metadata["retrieval_mode"] == "vector_only"
-
-    qa = GraphQARetriever(vector_store=store, embed_model=emb, seed_k=1,
-                          expand_k=4, max_depth=2)
-    qout = qa.retrieve(TEXTS[0])
-    depths = [x.node.metadata["graph_depth"] for x in qout]
-    assert depths == sorted(depths)
-    assert len({x.node.node_id for x in qout}) == len(qout)
-
-
-# ------------------------------------------- metric-direction regressions
-
-def test_lc_batch_search_distance_metric_orders_ascending(spark):
-    """batch_search_with_score must sort with the metric's direction:
-    euclidean is lower-is-better, so a blanket descending sort would
-    return worst-first (reference adapter preserves engine order)."""
-    store = LCStore.from_texts(TEXTS, FakeEmbeddings(), metadatas=METAS,
-                               spark=spark, collection_name="lc_euclid",
-                               metric="euclidean")
-    per = store.batch_search_with_score([TEXTS[1], TEXTS[3]], k=3)
-    for pairs in per:
-        scores = [s for _, s in pairs]
-        assert scores == sorted(scores)  # ascending = best-first
-    # the query's own text is the exact match → distance 0 first
-    assert per[0][0][0].page_content == TEXTS[1]
-    assert per[0][0][1] == pytest.approx(0.0, abs=1e-5)
-
-
-def test_li_batch_query_distance_metric_orders_ascending(spark):
-    store = LIStore(spark=spark, collection_name="li_euclid",
-                    metric="euclidean")
-    emb = FakeEmbeddings()
-    nodes = [TextNode(text=t, id_=f"e-{i}", metadata={"n": i},
-                      embedding=emb._vec(t))
-             for i, t in enumerate(TEXTS)]
-    store.add(nodes)
-    out = store.batch_query([
-        VectorStoreQuery(query_embedding=emb._vec(TEXTS[2]),
-                         similarity_top_k=3),
-        VectorStoreQuery(query_embedding=emb._vec(TEXTS[0]),
-                         similarity_top_k=3)])
-    for res in out:
-        assert res.similarities == sorted(res.similarities)
-    assert out[0].ids[0] == "e-2"
-    assert out[1].ids[0] == "e-0"
-
-
-def test_lc_hydrate_ranked_skips_missing_id_without_shifting(lc_store):
-    """A ranked id missing from the collection drops only its own pair —
-    a positional zip with get_by_ids would shift every later pairing."""
-    col = lc_store._collection
-    ranked = [(999999999, 0.9),
-              (int(col.df.select(col.id_col).first()[0]), 0.5)]
-    pairs = lc_store._hydrate_ranked(col, ranked)
-    assert len(pairs) == 1
-    assert pairs[0][1] == 0.5
-    assert pairs[0][0].page_content in TEXTS
-
-
-def test_graph_loader_metadata_cannot_shadow_reserved_fields(spark):
-    from velesdb_spark.integrations.graph_loader import (GraphLoader,
-                                                         _generate_id)
-
-    store = LIStore(spark=spark, collection_name="gl_shadow")
-    emb = FakeEmbeddings()
-    store.add([TextNode(text=TEXTS[0], id_="seed", metadata={},
-                        embedding=emb._vec(TEXTS[0]))])
-    loader = GraphLoader(store)
-    evil = TextNode(text="payload", id_="victim",
-                    metadata={"id": 123, "node_id": "hijacked",
-                              "labels": "X", "text_preview": "fake",
-                              "lang": "en"})
-    loader.load_from_nodes([evil], node_label="DOCUMENT")
-    col = store._collection
-    want_id = _generate_id("victim", "DOCUMENT")
-    row = col.df.filter(col.df.id == want_id).first()
-    assert row is not None  # SHA256 id survived the metadata 'id' key
-    assert row["node_id"] == "victim"
-    assert row["labels"] == ["DOCUMENT"]
-    assert row["text_preview"].startswith("payload")
-    assert row["lang"] == "en"  # benign metadata still lands
+    col = Collection(spark, "edge_bindings")
+    assert col.get_edges() == []
+    col.add_node(1, "PERSON", metadata={"name": "John", "age": 30})
+    col.add_node(2, "PERSON", metadata={"name": "Ada"})
+    col.add_edge(7, source=1, target=2, label="KNOWS",
+                 metadata={"since": "2024-01-01"})
+    assert col.get_edges(label="KNOWS") == [
+        {"id": 7, "source": 1, "target": 2, "label": "KNOWS",
+         "properties": {"since": "2024-01-01"}}]
+    assert col.get_edges(label="NOPE") == []
+    assert col.get(1)["labels"] == ["PERSON"]
 
 
 def test_add_node_metadata_cannot_shadow_reserved_fields(spark):
@@ -489,7 +39,7 @@ def test_add_node_metadata_cannot_shadow_reserved_fields(spark):
 
 def test_add_node_metadata_cannot_inject_vector(spark):
     """vector=None must not let a metadata key named like the vector
-    column land as the stored vector (advisor r6)."""
+    column land as the stored vector."""
     from velesdb_spark.database import Collection
 
     col = Collection(spark, "shadow_vec_nodes")
@@ -509,7 +59,7 @@ def test_add_node_metadata_cannot_inject_vector(spark):
 def test_li_batch_query_null_score_ranks_last_both_directions(spark):
     """A missing/None score must rank LAST under either metric
     direction — coercing to 0.0 ranked it first (best) on distance
-    metrics (advisor r6)."""
+    metrics."""
     from velesdb_spark.functions.distance import higher_is_better
 
     for metric, hib in (("euclidean", False), ("cosine", True)):

@@ -162,6 +162,25 @@ def test_hybrid_intersect_results(spark):
     assert got == {2, 3}
 
 
+def test_hybrid_empty_results(spark):
+    """hybrid_tests.rs:84-92: an empty side is a no-op, not an error —
+    for both live two-list fusions (RRF over tagged lists, and the
+    min-max weighted blend)."""
+    from velesdb_spark.functions.fusion import fuse_minmax_weighted, fuse_rrf
+
+    v = _res(spark, [(1, 0.9)])
+    empty = _res(spark, [])
+    tagged = (v.withColumn("_q", F.lit("v"))
+              .unionByName(empty.withColumn("_q", F.lit("g"))))
+    fused = fuse_rrf(tagged, qid_col="_q").collect()
+    assert len(fused) == 1 and fused[0].id == 1
+    assert abs(fused[0].score - 1.0 / 61.0) < 1e-9
+    for a, b in ((v, empty), (empty, v)):
+        fused = fuse_minmax_weighted(a, b, 0.5).collect()
+        assert len(fused) == 1 and fused[0].id == 1
+        assert abs(fused[0].score - 0.5) < 1e-9
+
+
 def test_hybrid_normalize_scores(spark):
     """hybrid_tests.rs:103-111 + hybrid.rs:236-265: min-max to [0,1];
     all-equal -> 1.0; empty stays empty."""
