@@ -3999,6 +3999,21 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             F.col("sess_start").alias("win_start"),
             F.col("n_events").alias("n"), "sum_value")))
 
+    # Agent memory (agent/mod.rs semantic layer, bindings
+    # db.agent_memory): the embeddings land in the semantic layer as
+    # memories and recall is the layer's exact top-k over live rows.
+    def _agent_memory_recall(s, d):
+        from velesdb_spark.database import Database
+
+        mem = Database(s).agent_memory(dimension=64)
+        rows = _t(s, d, "embeddings").select("vec_id", "embedding").collect()
+        mem.remember("semantic", [{"id": r.vec_id, "vector": r.embedding}
+                                  for r in rows], now=0.0)
+        return mem.recall("semantic", QV2, 10).select(
+            F.col("id").alias("vec_id"), F.round("score", 6).alias("score"))
+
+    q["agent_memory_recall"] = _agent_memory_recall
+
     out = {k: q[k] for k in _GATE_ORDER}
     out.update({k: v for k, v in q.items() if k not in out})
     return out
@@ -4678,6 +4693,9 @@ GROUP BY c_nationkey ORDER BY c_nationkey"""
         f"SELECT vec_id, round(list_dot_product(embedding::DOUBLE[], {_sql_vec(QV3)}), 6) AS score "
         f"FROM embeddings ORDER BY list_dot_product(embedding::DOUBLE[], {_sql_vec(QV3)}) DESC, vec_id "
         f"LIMIT 10")
+    o["agent_memory_recall"] = (
+        f"SELECT vec_id, round({cos(QV2)}, 6) AS score FROM embeddings "
+        f"ORDER BY {cos(QV2)} DESC, vec_id LIMIT 10")
 
     # MMR: the same greedy recurrence unrolled — each step scores every
     # unselected pool row against the selected set and takes the

@@ -1,85 +1,76 @@
-"""Index advisor — property_index.rs:900-1102 parity (pattern tracking,
-improvement estimation, priority ranking, DDL) plus the distributed
-query-log aggregation form."""
-
-import pytest
-from pyspark.sql import functions as F
+"""Index advisor — property_index.rs:900-1102 parity (improvement
+estimation, skips, priority ranking, DDL) through the distributed
+query-log aggregation ``suggest_from_log``. The gated ``index_advisor``
+entry checks the same pipeline against DuckDB."""
 
 from velesdb_spark.plans import advisor as A
 
-
-def test_tracker_stats_and_ordering():
-    t = A.QueryPatternTracker()
-    p1 = A.QueryPattern(("User",), ("age",), ("range",))
-    p2 = A.QueryPattern(("Doc",), ("lang",), ("equality",))
-    t.record(p1, 50, now_ms=1)
-    t.record(p1, 150, now_ms=2)
-    t.record(p2, 500, now_ms=3)
-    s1 = t.patterns[p1]
-    assert s1.count == 2 and s1.total_time_ms == 200
-    assert s1.avg_time_ms == pytest.approx(100.0)
-    assert s1.last_seen_ms == 2
-    # expensive = by total time desc
-    assert [p for p, _ in t.expensive_patterns()] == [p2, p1]
-    # slow = avg above threshold (default 100 ms, strict)
-    assert [p for p, _ in t.slow_patterns()] == [p2]
-    t.set_threshold(99)
-    assert {p for p, _ in t.slow_patterns()} == {p1, p2}
+_SCHEMA = ("labels array<string>, properties array<string>, "
+           "predicates array<string>, ms bigint")
 
 
-def test_improvement_formula():
-    assert A.estimate_improvement(("equality",)) == pytest.approx(0.9)
-    assert A.estimate_improvement(("range",)) == pytest.approx(0.7)
-    assert A.estimate_improvement(("in",)) == pytest.approx(0.6)
-    assert A.estimate_improvement(("like",)) == pytest.approx(0.3)
-    assert A.estimate_improvement(("equality", "like")) == pytest.approx(0.6)
-    assert A.estimate_improvement(()) == 0.0
+def _suggest(spark, rows, existing=()):
+    """(ddl, query_count, avg_time_ms, improvement, priority) per
+    suggestion, in output order, floats rounded to 9 places."""
+    log = spark.createDataFrame(rows, _SCHEMA)
+    return [(r.ddl, r.query_count, round(r.avg_time_ms, 9),
+             round(r.estimated_improvement, 9), round(r.priority_score, 9))
+            for r in A.suggest_from_log(log, existing).collect()]
 
 
-def test_suggestions_rank_skip_and_ddl():
-    t = A.QueryPatternTracker()
-    hot = A.QueryPattern(("User",), ("age", "city"), ("range", "equality"))
-    weak = A.QueryPattern(("Doc",), ("title",), ())          # improvement 0
-    nolabel = A.QueryPattern((), ("x",), ("equality",))      # skipped
-    existing = A.QueryPattern(("Item",), ("sku",), ("equality",))
-    t.record(hot, 200, now_ms=1)
-    t.record(hot, 400, now_ms=2)
-    t.record(weak, 10_000, now_ms=3)
-    t.record(nolabel, 10_000, now_ms=4)
-    t.record(existing, 1_000, now_ms=5)
+def test_improvement_formula(spark, monkeypatch):
+    """Mean of the per-predicate values, unknown predicates count 0,
+    capped at 1.0."""
+    rows = [(["E"], ["p"], ["equality"], 100),
+            (["R"], ["p"], ["range"], 100),
+            (["I"], ["p"], ["in"], 100),
+            (["L"], ["p"], ["like"], 100),
+            (["M"], ["p"], ["equality", "like"], 100),
+            (["U"], ["p"], ["equality", "unknown"], 100)]
+    got = {ddl: imp for ddl, _, _, imp, _ in _suggest(spark, rows)}
+    assert got == {"CREATE INDEX idx_e_p ON :E(p)": 0.9,
+                   "CREATE INDEX idx_r_p ON :R(p)": 0.7,
+                   "CREATE INDEX idx_i_p ON :I(p)": 0.6,
+                   "CREATE INDEX idx_l_p ON :L(p)": 0.3,
+                   "CREATE INDEX idx_m_p ON :M(p)": 0.6,
+                   "CREATE INDEX idx_u_p ON :U(p)": 0.45}
 
-    adv = A.IndexAdvisor()
-    adv.register_index("idx_item_sku")
-    out = adv.suggest(t)
-    assert [s.ddl for s in out] == [
-        "CREATE INDEX idx_user_age_city ON :User(age, city)"]
-    s = out[0]
-    assert s.estimated_improvement == pytest.approx(0.8)
-    assert s.query_count == 2
-    assert s.priority_score == pytest.approx(2 * 0.8 * 300.0)
+    # the 1.0 cap: a per-predicate value above 1 never lifts the mean
+    # past it
+    monkeypatch.setitem(A.IMPROVEMENT, "equality", 1.5)
+    got = {ddl: imp for ddl, _, _, imp, _ in _suggest(spark, rows)}
+    assert got["CREATE INDEX idx_e_p ON :E(p)"] == 1.0
+    assert got["CREATE INDEX idx_m_p ON :M(p)"] == 0.9
+    assert got["CREATE INDEX idx_u_p ON :U(p)"] == 0.75
 
 
-def test_pattern_extraction_select_and_match():
-    p = A.pattern_from_velesql(
-        "SELECT * FROM orders WHERE o_orderstatus = 'F' AND o_totalprice "
-        "BETWEEN 10.0 AND 20.0 AND o_orderpriority IN ('1-URGENT') "
-        "AND o_comment LIKE '%x%'")
-    assert p.labels == ("orders",)
-    assert p.properties == ("o_orderstatus", "o_totalprice",
-                            "o_orderpriority", "o_comment")
-    assert p.predicates == ("equality", "range", "in", "like")
-
-    m = A.pattern_from_velesql(
-        "MATCH (a:Person {dept: 'eng'})-[:KNOWS]->(b:Person) "
-        "WHERE a.age > 30 RETURN a.id")
-    assert m.labels == ("Person",)
-    assert "dept" in m.properties and "a.age" in m.properties
-    assert "equality" in m.predicates and "range" in m.predicates
+def test_suggestions_rank_skip_and_ddl(spark):
+    rows = [
+        (["User"], ["age", "city"], ["range", "equality"], 200),
+        (["User"], ["age", "city"], ["range", "equality"], 400),
+        (["Doc"], ["lang"], ["in"], 1_000),
+        (["Doc"], ["body"], ["like"], 100),
+        (["A", "B"], ["x"], ["equality"], 10),
+        (["Doc"], ["title"], [], 10_000),           # improvement 0
+        (["Doc"], ["kind"], ["like", "other"], 10_000),  # 0.15 < 0.2
+        ([], ["x"], ["equality"], 10_000),          # no label
+        (["T"], [], ["equality"], 10_000),          # no property
+        (["Item"], ["sku"], ["equality"], 1_000),   # already indexed
+    ]
+    assert _suggest(spark, rows, ["idx_item_sku"]) == [
+        ("CREATE INDEX idx_doc_lang ON :Doc(lang)", 1, 1000.0, 0.6, 600.0),
+        ("CREATE INDEX idx_user_age_city ON :User(age, city)",
+         2, 300.0, 0.8, 480.0),
+        ("CREATE INDEX idx_doc_body ON :Doc(body)", 1, 100.0, 0.3, 30.0),
+        # multi-label: the name joins every label, the DDL uses the first
+        ("CREATE INDEX idx_a_b_x ON :A(x)", 1, 10.0, 0.9, 9.0),
+    ]
 
 
 def test_suggest_from_log_matches_driver_form(spark):
-    """The distributed aggregation must produce exactly what the
-    driver-side tracker + advisor produce from the same log."""
+    """The reference's worked shape: per-pattern count and mean time,
+    priority = count × improvement × avg_ms, highest priority first; an
+    existing index name drops only its own pattern."""
     rows = [
         (["User"], ["age"], ["range"], 200),
         (["User"], ["age"], ["range"], 400),
@@ -89,44 +80,10 @@ def test_suggest_from_log_matches_driver_form(spark):
         ([], ["x"], ["equality"], 9_000),          # no label → skipped
         (["T"], [], ["equality"], 9_000),          # no props → skipped
     ]
-    log = spark.createDataFrame(
-        rows, "labels array<string>, properties array<string>, "
-              "predicates array<string>, ms bigint")
-    got = A.suggest_from_log(log, ["idx_item_sku"]).collect()
-
-    t = A.QueryPatternTracker()
-    for labels, props, preds, ms in rows:
-        t.record(A.QueryPattern(tuple(labels), tuple(props), tuple(preds)),
-                 ms, now_ms=0)
-    want = A.IndexAdvisor(["idx_item_sku"]).suggest(t)
-    assert [r.ddl for r in got] == [s.ddl for s in want]
-    for r, s in zip(got, want):
-        assert r.query_count == s.query_count
-        assert r.estimated_improvement == pytest.approx(s.estimated_improvement)
-        assert r.priority_score == pytest.approx(s.priority_score)
-
-
-def test_collection_query_mining_and_suggestions(spark):
-    from velesdb_spark.database import Collection
-
-    df = spark.createDataFrame(
-        [(1, "a", 10.0), (2, "b", 20.0)], "id bigint, tag string, val double")
-    col = Collection(spark, "c", df=df)
-    sql = "SELECT id FROM c WHERE tag = 'a' AND val > 5.0"
-    col.query(sql)
-    col.record_query_time(sql, 250)
-    # one execution → ONE observation: query() counts it at 0 ms and
-    # record_query_time only attaches the duration (no doubled count /
-    # halved avg vs the reference's record-once-per-execution)
-    st = col.pattern_tracker.patterns[A.pattern_from_velesql(sql)]
-    assert st.count == 1
-    assert st.avg_time_ms == 250
-    sugg = col.suggest_indexes()
-    assert len(sugg) == 1
-    assert sugg[0].ddl == "CREATE INDEX idx_c_tag_val ON :c(tag, val)"
-    # declaring the index suppresses the suggestion... (single-property
-    # declarations produce idx_c_tag / idx_c_val names, so declare both —
-    # the composite suggestion remains because its name differs)
-    col.create_property_index("c", "tag")
-    names = [s.ddl for s in col.suggest_indexes()]
-    assert names  # composite name not shadowed by single-property index
+    title = ("CREATE INDEX idx_doc_title ON :Doc(title)",
+             1, 10000.0, 0.3, 3000.0)
+    sku = ("CREATE INDEX idx_item_sku ON :Item(sku)", 1, 1000.0, 0.9, 900.0)
+    age = ("CREATE INDEX idx_user_age ON :User(age)", 2, 300.0, 0.7, 420.0)
+    lang = ("CREATE INDEX idx_doc_lang ON :Doc(lang)", 1, 50.0, 0.9, 45.0)
+    assert _suggest(spark, rows) == [title, sku, age, lang]
+    assert _suggest(spark, rows, ["idx_item_sku"]) == [title, age, lang]

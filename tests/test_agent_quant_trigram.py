@@ -138,22 +138,6 @@ def test_fuse_minimum_product(spark):
     assert pr[3] == 0.0
 
 
-def test_combine_breakdown_boosts(spark):
-    from velesdb_spark.functions.fusion import combine_breakdown
-
-    df = spark.createDataFrame(
-        [(1, 0.8, 0.4, 0.6, 1.5, None), (2, 0.2, None, 0.1, None, 2.0)],
-        "id bigint, vector_similarity double, graph_distance double, "
-        "path_score double, meta_boost double, rec_boost double")
-    out = df.withColumn("s", F.round(combine_breakdown(
-        df, "weighted", {"vector_similarity": 0.5, "graph_distance": 0.3,
-                         "path_score": 0.2},
-        metadata_boost_col="meta_boost", recency_boost_col="rec_boost"), 9))
-    got = {r.id: r.s for r in out.collect()}
-    assert math.isclose(got[1], (0.5 * 0.8 + 0.3 * 0.4 + 0.2 * 0.6) * 1.5, rel_tol=1e-9)
-    assert math.isclose(got[2], (0.5 * 0.2 + 0.3 * 0.0 + 0.2 * 0.1) * 2.0, rel_tol=1e-9)
-
-
 def test_collection_explain(catalog, spark):
     """EXPLAIN surface (velesql/explain.rs → translation plan + df.explain)."""
     from velesdb_spark.database import Collection
@@ -163,15 +147,6 @@ def test_collection_explain(catalog, spark):
     txt = coll.explain("SELECT o_orderkey FROM orders "
                        "WHERE o_totalprice > 1000.0 LIMIT 5")
     assert "o_totalprice" in txt  # plan mentions the pushed predicate
-
-
-def test_intersect_results(spark):
-    from velesdb_spark.functions.fusion import intersect_results
-
-    a = spark.createDataFrame([(1, 0.9), (2, 0.8), (3, 0.7)], "id bigint, score double")
-    b = spark.createDataFrame([(2, 0.5), (3, 0.4), (4, 0.3)], "id bigint, score double")
-    got = {r.id: round(r.score, 6) for r in intersect_results(a, b).collect()}
-    assert got == {2: 1.3, 3: 1.1}
 
 
 # ------------------------------------------------------------- persistence

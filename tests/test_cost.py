@@ -1,69 +1,7 @@
-"""Cost model + collection statistics (EPIC-046 parity) and distributed
-stats collection."""
-
-import math
-
-import pytest
+"""Collection statistics (EPIC-046 stats parity): one distributed
+aggregation, cached per collection until a mutation."""
 
 from velesdb_spark.plans import cost as C
-
-
-def test_cost_factor_presets():
-    d = C.OperationCostFactors()
-    assert (d.seq_page_cost, d.random_page_cost) == (1.0, 4.0)
-    assert C.OperationCostFactors.ssd_optimized().random_page_cost == 1.5
-    mem = C.OperationCostFactors.in_memory()
-    assert mem.seq_page_cost == 0.1 and mem.random_page_cost == 0.1
-
-
-def test_estimator_formulas():
-    est = C.CostEstimator()
-    stats = C.CollectionStats(row_count=10_000, deleted_count=500,
-                              total_size_bytes=81_920)   # 10 pages
-    scan = est.estimate_scan(stats)
-    assert scan.total == pytest.approx(10 * 1.0 + 10_000 * 0.01)
-    assert scan.rows == 9_500 and scan.startup == 0.0
-
-    idx = est.estimate_index_lookup(C.IndexStats(entry_count=10_000, depth=3),
-                                    selectivity=0.01)
-    assert idx.startup == pytest.approx(3 * 4.0)
-    assert idx.total == pytest.approx(12.0 + 100 * 0.005)
-    assert idx.rows == 100
-    # selectivity clamps
-    tiny = est.estimate_index_lookup(C.IndexStats(10_000, 1), 0.0)
-    assert tiny.rows == 1
-
-    vs = est.estimate_vector_search(k=10, ef_search=64, dataset_size=1024)
-    distances = int(64 * math.log2(1024))
-    assert vs.total == pytest.approx(distances * 0.1)
-    assert vs.startup == pytest.approx(vs.total * 0.1)
-    assert vs.rows == 10
-
-    gt = est.estimate_graph_traversal(avg_degree=3.0, max_depth=2, limit=100)
-    assert gt.total == pytest.approx(9 * 3.0 * 0.02)
-
-    fl = est.estimate_filter(1000, 0.25)
-    assert fl.total == pytest.approx(10.0) and fl.rows == 250
-
-    a, b = C.OperationCost(0, 5, 1), C.OperationCost(0, 7, 1)
-    assert C.CostEstimator.cheaper(a, b) is a
-
-
-def test_plan_generator_picks_selective_filter():
-    """A highly selective filter makes filter_first the winner; with no
-    filter, vector_first beats the scan."""
-    gen = C.PlanGenerator()
-    stats = C.CollectionStats(
-        row_count=1_000_000, total_size_bytes=8_192_000_000,
-        column_cardinality={"tag": 100_000})
-    best = gen.optimize(stats, filter_col="tag", k=10)
-    assert best.plan_type == "filter_first"
-    nofilter = gen.optimize(stats, filter_col=None, k=10)
-    assert nofilter.plan_type == "vector_first"
-    # unknown column → default 0.1 selectivity still generates a plan
-    plans = gen.generate_plans(stats, filter_col="unknown")
-    assert {p.plan_type for p in plans} == {"scan", "filter_first",
-                                           "vector_first"}
 
 
 def test_collect_stats_distributed(spark):
@@ -83,16 +21,6 @@ def test_collect_stats_distributed(spark):
     assert st.selectivity("missing") == 0.1
 
 
-def test_plan_generator_ann_mode_uses_hnsw_estimate():
-    gen = C.PlanGenerator(exact=False)
-    stats = C.CollectionStats(row_count=1_000_000,
-                              total_size_bytes=8_192_000_000)
-    best = gen.optimize(stats, filter_col=None, k=10)
-    assert best.plan_type == "vector_first"
-    # sublinear: far below the exact-scan cost
-    assert best.cost.total < 1_000_000 * 0.1 / 10
-
-
 def test_collection_stats_and_query_cost(spark):
     from pyspark.sql import functions as F
 
@@ -109,16 +37,6 @@ def test_collection_stats_and_query_cost(spark):
     assert col.stats() is st            # cached
     assert col.stats(refresh=True) is not st
 
-    best, plans = col.estimate_query_cost(
-        "SELECT id FROM c WHERE vector NEAR $v AND status = '1' LIMIT 10")
-    assert {p.plan_type for p in plans} == {"scan", "filter_first",
-                                           "vector_first"}
-    assert best.cost.total == min(p.cost.total for p in plans)
-    # status selectivity 1/4 -> filter-first prunes 3/4 of distance work
-    ff = next(p for p in plans if p.plan_type == "filter_first")
-    vf = next(p for p in plans if p.plan_type == "vector_first")
-    assert ff.cost.total < vf.cost.total
-
 
 def test_stats_cache_cleared_on_mutation(spark):
     from velesdb_spark.database import Collection
@@ -130,79 +48,3 @@ def test_stats_cache_cleared_on_mutation(spark):
     assert col.stats().row_count == 3       # recomputed after mutation
     col.delete([1])
     assert col.stats().row_count == 2
-
-
-def test_plan_cache_and_query_optimizer():
-    """query_executor.rs parity: cached plan reuse by query
-    characteristics, least-accessed eviction, per-collection
-    invalidation."""
-    from velesdb_spark.plans.cost import (CollectionStats, PlanCache,
-                                          QueryOptimizer)
-
-    stats = CollectionStats(row_count=50_000, deleted_count=0)
-    opt = QueryOptimizer(cache=PlanCache(max_entries=2))
-    p1 = opt.optimize("docs", stats, filter_col=None, k=10)
-    assert p1 is not None
-    assert opt.optimize("docs", stats, filter_col=None, k=10) is p1  # hit
-    # different characteristics → different cache slot
-    p2 = opt.optimize("docs", stats, k=50)
-    assert p2 is not None and len(opt.cache) == 2
-    # capacity 2: inserting a third evicts the least-accessed (p2:
-    # accessed once vs p1: twice)
-    p3 = opt.optimize("other", stats, k=10)
-    assert len(opt.cache) == 2
-    assert opt.optimize("docs", stats, k=10) is p1  # survivor
-    # invalidation drops only that collection's plans
-    opt.invalidate("docs")
-    assert len(opt.cache) == 1
-    assert opt.optimize("other", stats, k=10) is p3
-    # generate_all_plans bypasses the cache
-    assert opt.generate_all_plans(stats, k=10)
-
-
-# ------------------------------------------------- bench calibration
-
-def test_calibration_rank_correlates_with_measured_bench():
-    """The fitted Spark cost surface must RANK the 18 headline queries
-    like the measured bench (recalibrated round 11 against the
-    quiet-host BENCH_LOCAL_r11_quiet line — the first table measured on
-    the post-optimizer-fix minhash/trigram/decontam plans). Spearman
-    >= 0.7 and MAPE bounded — 5 physically-interpretable coefficients
-    over 18 observations."""
-    from velesdb_spark.plans.calibration import (CalibratedCostModel,
-                                                 FEATURE_NAMES,
-                                                 HEADLINE_FEATURES,
-                                                 MEASURED_SEC_SF01)
-
-    assert set(HEADLINE_FEATURES) == set(MEASURED_SEC_SF01)
-    m = CalibratedCostModel.fit()
-    assert m.rank_correlation >= 0.7
-    assert m.mape <= 0.5
-    # weights must stay non-negative and physically plausible:
-    # codegen row cost well under 1 us, shuffle/job overhead under 1 s
-    w = dict(zip(FEATURE_NAMES, m.weights))
-    assert all(v >= 0 for v in w.values())
-    assert w["codegen_krows"] < 0.001      # < 1 us per row
-    assert 0.0 < w["n_jobs"] < 1.0         # job round-trip overhead
-    # a broadcast build is a small job: cheaper than an action round-trip
-    assert 0.0 <= w["n_broadcasts"] < w["n_jobs"]
-    # deterministic: refit gives identical weights
-    m2 = CalibratedCostModel.fit()
-    assert (m.weights == m2.weights).all()
-
-
-def test_candidate_plans_carry_calibrated_seconds():
-    """generate_plans attaches est_seconds from the calibrated model:
-    filter_first on a selective column predicts fewer seconds than the
-    unfiltered strategies, and magnitudes are bench-plausible."""
-    import velesdb_spark.plans.cost as C
-
-    stats = C.CollectionStats(row_count=600_000,
-                              total_size_bytes=10_000_000,
-                              column_cardinality={"cat": 1000})
-    plans = C.PlanGenerator().generate_plans(stats, filter_col="cat")
-    by = {p.plan_type: p for p in plans}
-    assert all(p.est_seconds is not None for p in plans)
-    assert by["filter_first"].est_seconds < by["scan"].est_seconds
-    # 600k-row scan+score at sf0.1 scale: sub-second, above job floor
-    assert 0.05 < by["scan"].est_seconds < 2.0

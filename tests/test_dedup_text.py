@@ -62,39 +62,6 @@ def test_ngram_jaccard_pairs(spark):
     assert (1, 3) not in pairs
 
 
-def test_simhash_dedup(spark):
-    rows = [
-        (1, "spark is a distributed engine for large scale data"),
-        (2, "spark is a distributed engine for large scale data"),  # identical
-        (3, "cats meow loudly at midnight whenever hungry"),
-    ]
-    df = spark.createDataFrame(rows, "id bigint, text string")
-    pairs = dedup.simhash_dedup_pairs(df, max_hamming=0).collect()
-    got = {(r.id_a, r.id_b) for r in pairs}
-    assert got == {(1, 2)}
-
-
-def test_simhash_pigeonhole_exact_recall(spark):
-    """Pigeonhole banding must find EVERY pair within the Hamming radius —
-    compare against brute-force all-pairs over real document text at
-    sf0.001 (max_hamming=3, the default, needs 4 blocks; the old 2-half
-    scheme was only exact for radius ≤ 1)."""
-    from itertools import combinations
-
-    from tests.conftest import SF_DIR
-
-    docs = (spark.read.parquet(f"{SF_DIR}/documents.parquet")
-            .select("doc_id", "text").limit(120))
-    sigs = {r._id: r._simhash for r in
-            dedup.simhash_df(docs, "text", "doc_id").collect()}
-    brute = {(a, b) for a, b in combinations(sorted(sigs), 2)
-             if bin(sigs[a] ^ sigs[b]).count("1") <= 3}
-    got = {(r.id_a, r.id_b) for r in
-           dedup.simhash_dedup_pairs(docs, max_hamming=3,
-                                     id_col="doc_id").collect()}
-    assert got == brute  # recall 1.0 AND no false positives past the filter
-
-
 def test_embedding_near_dups_brute_vs_lsh(spark):
     rows = [
         (1, [1.0, 0.0, 0.0, 0.0]),
@@ -435,41 +402,6 @@ def test_pii_scrub(spark):
     assert got[2] == "ssn [SSN] phone [PHONE] alt [PHONE]"
     assert got[3] == "server at [IP] port"
     assert got[4] == "clean text stays clean"
-
-
-def test_ivf_auto_reindex(spark):
-    """Divergence check + rebuild + recall-probe rollback
-    (auto_reindex/mod.rs semantics mapped to IVF nlist)."""
-    import numpy as np
-
-    from velesdb_spark.functions import similarity as S
-
-    assert S.optimal_nlist(10_000) == 100
-    assert S.optimal_nlist(0) == 1
-    assert S.optimal_nlist(10 ** 12) == 65_536
-
-    rng = np.random.RandomState(3)
-    rows = [(i, [float(round(x, 4)) for x in rng.randn(8)])
-            for i in range(400)]
-    df = spark.createDataFrame(rows, "vec_id bigint, embedding array<float>")
-    idx = S.IvfIndex(df, "embedding", "vec_id", n_centroids=4)
-
-    # conservative threshold: optimal 20 vs current 4 → ratio 5 ≥ 2
-    mgr = S.AutoReindexManager(S.AutoReindexConfig.conservative())
-    rep = mgr.check(idx, df)
-    assert rep["needs_reindex"] and rep["optimal_nlist"] == 20
-
-    new = mgr.maybe_reindex(idx, df, "embedding", "vec_id",
-                            probe_queries=2, nprobe=20)
-    last = mgr.events[-1]
-    if last["event"] == "reindexed":
-        assert len(new.centroids) == 20
-    else:                       # recall-probe rollback kept the old index
-        assert last["event"] == "rolled_back" and new is idx
-
-    # disabled config never triggers
-    off = S.AutoReindexManager(S.AutoReindexConfig.disabled())
-    assert off.maybe_reindex(idx, df, "embedding", "vec_id") is idx
 
 
 def test_ngram_jaccard_max_shingle_df_cap(spark):

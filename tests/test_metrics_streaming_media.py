@@ -312,18 +312,6 @@ def test_video_decoder_dispatch(spark):
         mm.decode_and_featurize(unknown).collect()
 
 
-def test_resize_meta(spark):
-    from velesdb_spark.multimodal.media import resize_meta
-    from velesdb_spark import multimodal as mm
-
-    rows = [(1, "image", b"x", ("png", 2048, 1024, None, None)),
-            (2, "image", b"y", ("png", 100, 50, None, None))]
-    out = {r.id: (r.target_width, r.target_height)
-           for r in resize_meta(mm.media_table(spark, rows), 512).collect()}
-    assert out[1] == (512, 256)
-    assert out[2] == (100, 50)
-
-
 def test_ndcg_binary_df_matches_scalar(spark):
     """DataFrame NDCG@k with binary relevance equals the scalar
     ndcg_at_k on the equivalent 0/1 gain list."""

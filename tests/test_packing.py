@@ -36,24 +36,6 @@ def test_pack_sequences_closed_form(spark):
                                                for i in range(40))
 
 
-def test_pack_stats_budget_property(spark):
-    rows = [(i, "w " * 20) for i in range(64)]
-    df = spark.createDataFrame(rows, "id bigint, text string")
-    packs = pk.pack_sequences(df, budget=50, n_shards=2)
-    stats = {(r.shard, r.pack_id): (r.n_docs, r.pack_tokens)
-             for r in pk.pack_stats(packs).collect()}
-    # offset bucketing: every pack except the shard's last spans >= budget
-    # tokens (a doc starting inside pack p pushes the running total past
-    # (p+1)*budget before pack p+1 opens)
-    last = {}
-    for (shard, pid) in stats:
-        last[shard] = max(last.get(shard, -1), pid)
-    for (shard, pid), (_, toks) in stats.items():
-        if pid < last[shard]:
-            assert toks >= 50 - 20 + 1  # a doc never splits: overflow bound
-    assert sum(t for _, t in stats.values()) == 64 * 20
-
-
 def test_dedup_spans_paragraph(spark):
     rows = [
         (1, "alpha one\n\nshared paragraph here\n\nbeta two"),

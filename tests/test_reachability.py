@@ -1,22 +1,33 @@
 """Every module in ``velesdb_spark/`` is reached from a non-test entry point.
 
-A static import walk (stdlib ``ast``, no Spark) starts from the programs
-that run the engine:
+A static walk (stdlib ``ast``, no Spark) starts from the programs that
+run the engine:
 
 - ``__spark_entry__.py`` (the ``queries()`` contract) and ``bench.py``;
 - ``tools/*.py``, ``perfbench/*.py`` (not its tests) and ``examples/*.py``;
 - every ``velesdb_spark`` module with a ``__main__`` block.
 
-It follows module-level and function-local imports, absolute and relative,
-and ``velesdb_spark.*`` module names held in string constants (the
-perfbench tracer imports the modules it wraps by name). Importing
-``a.b.c`` runs ``a/__init__.py`` and ``a/b/__init__.py`` too, so those
-count as reached. A module that no entry point reaches has no caller
-outside the tests: gate it with a ``queries()`` entry or delete it.
+It follows imports, absolute and relative, and ``velesdb_spark.*``
+module names held in string constants (the perfbench tracer imports the
+modules it wraps by name). Importing ``a.b.c`` runs ``a/__init__.py``
+and ``a/b/__init__.py`` too, so those count as reached.
+
+The walk is function-aware. Module-level code of a reached module runs
+on import, and every function of an entry point counts as run. Any other
+function counts only once its name is used by code that already counts:
+a name, an attribute, an imported name or a string constant (perfbench
+wraps functions by name). Dunder methods run implicitly, so they count
+with their module. A function-local import counts only inside a function
+that counts, so a module whose only importer is a method nothing calls
+is not reached.
+
+A module that no entry point reaches has no caller outside the tests:
+gate it with a ``queries()`` entry or delete it.
 """
 
 import ast
 import re
+from functools import lru_cache
 from pathlib import Path
 
 ROOT = Path(__file__).resolve().parent.parent
@@ -64,37 +75,83 @@ def _resolve(dotted: str, bases: list[Path]) -> list[Path]:
     return []
 
 
-def _imports(path: Path) -> list[Path]:
+class _Unit:
+    """One scope's code: the module level, or one function body (nested
+    functions are units of their own)."""
+
+    def __init__(self, name: str | None):
+        self.name = name
+        self.imports: list[Path] = []
+        self.names: set[str] = set()
+
+
+def _collect(node, unit: _Unit, units: list[_Unit], path: Path, bases):
+    if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+        body = _Unit(node.name)
+        units.append(body)
+        for stmt in node.body:
+            _collect(stmt, body, units, path, bases)
+        # decorators and defaults run where the function is defined
+        for part in node.decorator_list + node.args.defaults \
+                + [d for d in node.args.kw_defaults if d is not None]:
+            _collect(part, unit, units, path, bases)
+        return
+    if isinstance(node, ast.Name):
+        unit.names.add(node.id)
+    elif isinstance(node, ast.Attribute):
+        unit.names.add(node.attr)
+    elif isinstance(node, ast.Constant) and isinstance(node.value, str):
+        if node.value.isidentifier():
+            unit.names.add(node.value)
+        elif _MODULE_NAME.fullmatch(node.value):
+            unit.imports += _resolve(node.value, [ROOT])
+    elif isinstance(node, ast.Import):
+        for alias in node.names:
+            unit.imports += _resolve(alias.name, bases)
+    elif isinstance(node, ast.ImportFrom):
+        here = [path.parents[node.level - 1]] if node.level else bases
+        prefix = f"{node.module}." if node.module else ""
+        for alias in node.names:
+            # ``pkg.name`` resolves to the submodule when ``name`` is one,
+            # else to ``pkg`` itself, where ``name`` is then used
+            unit.imports += _resolve(prefix + alias.name, here)
+            unit.names.add(alias.name)
+    for child in ast.iter_child_nodes(node):
+        _collect(child, unit, units, path, bases)
+
+
+@lru_cache(maxsize=None)
+def _units(path: Path) -> tuple[_Unit, ...]:
+    """The module-level unit first, then every function's."""
     # A script runs with its own folder first on sys.path; a package module
     # resolves absolute imports from the repo root only.
     bases = [ROOT] if PKG in path.parents else [path.parent, ROOT]
-    found = []
-    for node in ast.walk(_parse(path)):
-        if isinstance(node, ast.Import):
-            for alias in node.names:
-                found += _resolve(alias.name, bases)
-        elif isinstance(node, ast.ImportFrom):
-            here = [path.parents[node.level - 1]] if node.level else bases
-            prefix = f"{node.module}." if node.module else ""
-            for alias in node.names:
-                # ``pkg.name`` resolves to the submodule when ``name`` is
-                # one, else to ``pkg`` itself.
-                found += _resolve(prefix + alias.name, here)
-        elif (isinstance(node, ast.Constant) and isinstance(node.value, str)
-              and _MODULE_NAME.fullmatch(node.value)):
-            found += _resolve(node.value, [ROOT])
-    return found
+    units = [_Unit(None)]
+    _collect(_parse(path), units[0], units, path, bases)
+    return tuple(units)
+
+
+def _is_dunder(name: str) -> bool:
+    return name.startswith("__") and name.endswith("__")
 
 
 def _reached() -> set[Path]:
-    seen: set[Path] = set()
-    todo = _entry_points()
-    while todo:
-        path = todo.pop()
-        if path not in seen:
-            seen.add(path)
-            todo += _imports(path)
-    return seen
+    entries = set(_entry_points())
+    modules, names, live = set(entries), set(), set()
+    changed = True
+    while changed:
+        changed = False
+        for path in list(modules):
+            for unit in _units(path):
+                if id(unit) in live:
+                    continue
+                if (unit.name is None or path in entries
+                        or unit.name in names or _is_dunder(unit.name)):
+                    live.add(id(unit))
+                    names |= unit.names
+                    modules.update(unit.imports)
+                    changed = True
+    return modules
 
 
 def test_every_engine_module_is_reached_from_an_entry_point():
@@ -102,5 +159,5 @@ def test_every_engine_module_is_reached_from_an_entry_point():
     unreached = sorted(str(p.relative_to(ROOT)) for p in PKG.rglob("*.py")
                        if p not in reached)
     assert not unreached, (
-        "modules no non-test entry point imports (gate them with a "
+        "modules no non-test entry point reaches (gate them with a "
         f"queries() entry or delete them): {unreached}")

@@ -152,16 +152,6 @@ def _res(spark, pairs):
     return spark.createDataFrame(list(pairs), "id bigint, score double")
 
 
-def test_hybrid_intersect_results(spark):
-    """hybrid_tests.rs:72-82: AND semantics keeps only ids in BOTH."""
-    from velesdb_spark.functions.fusion import intersect_results
-
-    v = _res(spark, [(1, 0.9), (2, 0.8), (3, 0.7)])
-    g = _res(spark, [(2, 1.0), (3, 0.5), (4, 0.3)])
-    got = {r.id for r in intersect_results(v, g).collect()}
-    assert got == {2, 3}
-
-
 def test_hybrid_empty_results(spark):
     """hybrid_tests.rs:84-92: an empty side is a no-op, not an error —
     for both live two-list fusions (RRF over tagged lists, and the

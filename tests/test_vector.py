@@ -380,64 +380,6 @@ def test_mmr_rerank_diversity_and_guards(spark):
         mmr_rerank(emb, q, k=5, pool=3)
 
 
-def test_path_scorer_reference_semantics(spark):
-    """PathScorer parity (reference score_fusion_tests.rs:162-245):
-    empty path = 1.0, shorter > longer, rel-type weights, default
-    weight, decay^i-per-hop product, score_length(n) = decay^n —
-    scalar form AND the distributed F.aggregate column form."""
-    from pyspark.sql import functions as F
-
-    from velesdb_spark.functions.fusion import PathScorer
-
-    s = PathScorer().with_decay(0.8)
-    assert s.score_path([]) == 1.0
-    assert s.score_path([(1, 2, "KNOWS")]) > \
-        s.score_path([(1, 2, "KNOWS"), (2, 3, "KNOWS"), (3, 4, "KNOWS")])
-    w = PathScorer(decay=1.0).with_rel_weight("AUTHORED", 1.0) \
-        .with_rel_weight("MENTIONS", 0.5)
-    assert abs(w.score_path([(1, 2, "AUTHORED")]) - 1.0) < 1e-9
-    assert abs(w.score_path([(1, 2, "MENTIONS")]) - 0.5) < 1e-9
-    d = PathScorer(decay=1.0).with_default_weight(0.7)
-    assert abs(d.score_path([(1, 2, "UNKNOWN")]) - 0.7) < 1e-9
-    ab = PathScorer(decay=0.8).with_rel_weight("A", 1.0) \
-        .with_rel_weight("B", 0.5)
-    assert abs(ab.score_rel_types(["A", "B"]) - 0.256) < 1e-3
-    sl = PathScorer(decay=0.5)
-    assert [sl.score_length(n) for n in range(4)] == \
-        [1.0, 0.5, 0.25, 0.125]
-    # distributed column form matches the scalar fold row-for-row
-    df = spark.createDataFrame(
-        [(1, ["A", "B"]), (2, []), (3, ["A", "X", "B"])],
-        "id long, rels array<string>")
-    got = {r.id: r.s for r in df.select(
-        "id", ab.rel_weight_col(F.col("rels")).alias("s")).collect()}
-    want = {1: ab.score_rel_types(["A", "B"]),
-            2: 1.0,
-            3: ab.score_rel_types(["A", "X", "B"])}
-    for k in want:
-        assert abs(got[k] - want[k]) < 1e-9, (k, got[k], want[k])
-
-def test_path_scorer_clamps_to_unit_interval(spark):
-    """Reference score_fusion.rs clamps every final score to [0, 1]:
-    weights > 1.0 must not push score_rel_types/score_length (or the
-    distributed rel_weight_col form) past 1.0."""
-    from pyspark.sql import functions as F
-
-    from velesdb_spark.functions.fusion import PathScorer
-
-    hot = PathScorer(decay=1.0).with_rel_weight("BOOST", 5.0)
-    assert hot.score_rel_types(["BOOST"]) == 1.0
-    assert hot.score_path([(1, 2, "BOOST"), (2, 3, "BOOST")]) == 1.0
-    dflt = PathScorer(decay=1.0).with_default_weight(3.0)
-    assert dflt.score_rel_types(["ANY"]) == 1.0
-    assert PathScorer(decay=1.0).score_length(0) == 1.0
-    df = spark.createDataFrame([(1, ["BOOST", "BOOST"]), (2, [])],
-                               "id long, rels array<string>")
-    got = {r.id: r.s for r in df.select(
-        "id", hot.rel_weight_col(F.col("rels")).alias("s")).collect()}
-    assert got == {1: 1.0, 2: 1.0}, got
-
-
 def test_mmr_first_pick_quantized(spark):
     """The 9-decimal determinism quantization applies to iteration 1
     too: two candidates whose relevance differs only past the 9th
@@ -482,8 +424,7 @@ def test_double_array_lit_bit_identical_and_fallback(spark):
     import math
     import random
 
-    from velesdb_spark.functions.sqlexpr import (double_array_lit,
-                                                 long_array_lit)
+    from velesdb_spark.functions.sqlexpr import double_array_lit
 
     rng = random.Random(3)
     vals = ([rng.uniform(-1e3, 1e3) for _ in range(64)]
@@ -502,10 +443,6 @@ def test_double_array_lit_bit_identical_and_fallback(spark):
     assert all((math.isnan(a) and math.isnan(b))
                or (a == b and math.copysign(1, a) == math.copysign(1, b))
                for a, b in zip(got, want))
-    # long variant
-    ls = [0, -1, 2**62, -2**62]
-    got = spark.range(1).select(long_array_lit(ls).alias("v")).first().v
-    assert got == ls
 
 
 def test_staged_score_sql_fastpath_identity(spark):

@@ -45,7 +45,7 @@ HELP = """Commands:
   .describe | .desc <name>   collection details
   .count <name>              row count
   .sample <name> [n]         first n rows (default 5)
-  .stats <name>              cost-model statistics (rows, bytes, NDV)
+  .stats <name>              collection statistics (rows, bytes, NDV)
   .browse <name> [n]         alias for .sample
   .timing on|off             print per-query wall time
   .format table|json         result rendering

@@ -88,9 +88,6 @@ class Collection:
         self._edges = edges
         self._bm25: Optional[Bm25Index] = None
         self._bm25_text_col: Optional[str] = None
-        from velesdb_spark.plans.advisor import QueryPatternTracker
-
-        self.pattern_tracker = QueryPatternTracker()
         # durable log-structured store (storage.py): source of truth when a
         # path is given and no explicit in-memory frame overrides it. A
         # legacy flat `points/` parquet dir (pre-log layout) keeps the old
@@ -165,17 +162,8 @@ class Collection:
             old = self._df.join(new.select(self.id_col), on=self.id_col, how="left_anti")
             self._df = old.unionByName(new, allowMissingColumns=True)
         self._refresh_bm25(new_docs=new)
-        self._stats = None  # cost statistics reflect the pre-mutation table
+        self._stats = None  # statistics reflect the pre-mutation table
         self._n_cached = None
-        self._invalidate_plans()
-        bloom = getattr(self, "_id_bloom", None)
-        if bloom is not None:
-            if isinstance(points, DataFrame):
-                self._id_bloom = None  # ids unknown without a job — rebuild
-            else:
-                for p in points:  # supersets are bloom-safe
-                    if self.id_col in p:
-                        bloom.insert(int(p[self.id_col]))
         return self
 
     upsert_bulk = upsert
@@ -283,7 +271,6 @@ class Collection:
         self._refresh_bm25(deleted_ids=[int(i) for i in ids])
         self._stats = None
         self._n_cached = None
-        self._invalidate_plans()
         return self
 
     def _refresh_bm25(self, new_docs: DataFrame | None = None,
@@ -310,21 +297,7 @@ class Collection:
         except Exception:
             self._bm25 = None  # next search rebuilds from scratch
 
-    def build_id_bloom(self, false_positive_rate: float = 0.01) -> "Collection":
-        """Existence cache for fast negative lookups (cache/bloom.rs):
-        distributed build over the id column; ``get`` consults it before
-        running any Spark job. Upserts extend it (a bloom is
-        superset-safe); deletes leave stale maybes, which get() verifies."""
-        from velesdb_spark.functions.bloom import build_bloom_df
-
-        self._id_bloom = build_bloom_df(self.df, self.id_col,
-                                        false_positive_rate=false_positive_rate)
-        return self
-
     def get(self, point_id: int) -> Optional[dict]:
-        bloom = getattr(self, "_id_bloom", None)
-        if bloom is not None and bloom.definitely_not_contains(int(point_id)):
-            return None  # definite miss — zero Spark jobs
         rows = self.df.filter(F.col(self.id_col) == int(point_id)).limit(1).collect()
         return rows[0].asDict(recursive=True) if rows else None
 
@@ -382,7 +355,6 @@ class Collection:
         self._declared_indexes = [
             i for i in self.list_indexes()
             if not (i["label"] == label and i["property"] == prop)]
-        self._invalidate_plans()  # DDL invalidates cached plans
         return self
 
     def flush(self) -> "Collection":
@@ -915,113 +887,18 @@ class Collection:
         """Execute VelesQL (SELECT or MATCH) against this collection.
 
         now_epoch pins NOW() for deterministic temporal predicates
-        (values.rs:102-122 resolves NOW()/INTERVAL to epoch seconds).
-
-        Every query's (labels, properties, predicates) pattern is recorded
-        in ``pattern_tracker`` (property_index.rs:932-995 QueryPattern
-        mining); callers that measure execution can attach the duration
-        with ``record_query_time``, and ``suggest_indexes()`` turns the
-        accumulated stats into ranked CREATE INDEX recommendations."""
-        try:
-            from velesdb_spark.plans.advisor import pattern_from_velesql
-
-            self._last_pattern = pattern_from_velesql(sql)
-            self.pattern_tracker.record(self._last_pattern, 0)
-        except Exception:
-            self._last_pattern = None  # pattern mining never blocks a query
+        (values.rs:102-122 resolves NOW()/INTERVAL to epoch seconds)."""
         return translate(sql, self._catalog(), params, now_epoch=now_epoch)
 
     def stats(self, refresh: bool = False):
-        """Collection statistics for cost-based planning (stats/mod.rs):
-        one distributed aggregation (HLL cardinalities + Catalyst size),
-        cached until refresh=True or a mutation clears it."""
+        """Collection statistics (stats/mod.rs) for the CLI ``.stats``
+        command: one distributed aggregation (HLL cardinalities + Catalyst
+        size), cached until refresh=True or a mutation clears it."""
         from velesdb_spark.plans.cost import collect_stats
 
         if refresh or getattr(self, "_stats", None) is None:
             self._stats = collect_stats(self.df)
         return self._stats
-
-    def _plan_optimizer(self):
-        """One QueryOptimizer per collection (query_executor.rs:128-188);
-        its plan cache invalidates on mutation/DDL via
-        _invalidate_plans."""
-        opt = getattr(self, "_optimizer", None)
-        if opt is None:
-            from velesdb_spark.plans.cost import QueryOptimizer
-
-            opt = self._optimizer = QueryOptimizer()
-        return opt
-
-    def _invalidate_plans(self) -> None:
-        opt = getattr(self, "_optimizer", None)
-        if opt is not None:
-            opt.invalidate(self.name)
-
-    def estimate_query_cost(self, sql: str, k: int = 10):
-        """Candidate access strategies with costs for a VelesQL query
-        (query_cost/plan_generator.rs): scan vs filter-first vs
-        vector-first, ranked by the cost model over this collection's
-        statistics. The best plan is served from the per-collection plan
-        cache when the query characteristics match (query_executor.rs).
-        Returns (best, all_candidates)."""
-        from velesdb_spark.plans.advisor import pattern_from_velesql
-
-        pattern = pattern_from_velesql(sql)
-        filter_col = next(
-            (p for p in pattern.properties
-             if p in self.df.columns), None)
-        opt = self._plan_optimizer()
-        best = opt.optimize(self.name, self.stats(), filter_col, k)
-        plans = opt.generate_all_plans(self.stats(), filter_col, k)
-        return best, plans
-
-    def guarded_query(self, sql: str, params: Optional[dict] = None,
-                      limits=None, rails=None, client_id: str = "default"):
-        """query() + collect under guard-rails (guardrails.rs EPIC-048):
-        rate/circuit pre-check, timeout watchdog cancelling the job group,
-        cardinality probe. Returns rows.
-
-        A ``WITH (timeout_ms = N)`` hint on the query overrides the
-        limits' timeout for THIS execution (VELESQL_SPEC.md WITH clause
-        — per-query timeout; floor 100ms per the spec's minimum)."""
-        import dataclasses
-
-        from velesdb_spark.guardrails import QueryLimits, guarded_collect
-
-        try:
-            from velesdb_spark.velesql.introspect import ParsedStatement
-
-            hint = ParsedStatement(parse(sql)).timeout_ms
-        except Exception:
-            hint = None  # hint extraction never blocks the query
-        if hint is not None and rails is None:
-            limits = dataclasses.replace(limits or QueryLimits(),
-                                         timeout_ms=max(int(hint), 100))
-        return guarded_collect(self.query(sql, params), limits=limits,
-                               rails=rails, client_id=client_id)
-
-    def record_query_time(self, sql: str, execution_time_ms: int) -> None:
-        """Attach a measured execution time to a query's pattern (the
-        reference records per-execution timings; Spark actions run outside
-        query(), so the caller reports the duration). query() already
-        counted the execution at 0 ms, so this only moves the timing
-        fields — one observation per execution, matching
-        property_index.rs."""
-        from velesdb_spark.plans.advisor import pattern_from_velesql
-
-        self.pattern_tracker.attach_time(pattern_from_velesql(sql),
-                                         execution_time_ms)
-
-    def suggest_indexes(self):
-        """Ranked IndexSuggestions from the mined patterns, excluding
-        indexes already declared on this collection
-        (property_index.rs:1013-1086)."""
-        from velesdb_spark.plans.advisor import IndexAdvisor
-
-        existing = [
-            f"idx_{i['label'].lower()}_{i['property'].lower()}"
-            for i in getattr(self, "_declared_indexes", [])]
-        return IndexAdvisor(existing).suggest(self.pattern_tracker)
 
     def query_ids(self, sql: str, params: Optional[dict] = None) -> DataFrame:
         out = self.query(sql, params)

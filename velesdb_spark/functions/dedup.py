@@ -11,9 +11,7 @@ Scale design notes:
   shuffle carries only (id, band_hash) pairs; exact Jaccard verifies
   candidates only. This is the standard near-dup pipeline (shingle → minhash
   → band → bucket-join) used on web-scale corpora.
-- SimHash: 32-bit signature via per-bit majority vote over token hashes;
-  near-dups = signatures at small Hamming distance (bucketed by signature
-  prefix at scale).
+- SimHash: 32-bit signature via per-bit majority vote over token hashes.
 - Embedding near-dup: brute-force cosine self-join for small N; LSH-bucketed
   (random-hyperplane) self-join as the scale path (see
   functions/similarity.py).
@@ -237,7 +235,6 @@ PROBE_MIN_KEYS = 200
 def ngram_jaccard_pairs(df: DataFrame, threshold: float = 0.5,
                         text_col: str = "text", id_col: str = "id",
                         n: int = DEFAULT_SHINGLE,
-                        return_handle: bool = False,
                         max_shingle_df: int | None = None,
                         prefix_filter: bool | None = None):
     """All-pairs exact n-gram Jaccard ≥ threshold via inverted shingle index.
@@ -291,9 +288,8 @@ def ngram_jaccard_pairs(df: DataFrame, threshold: float = 0.5,
     are the former. Mutually exclusive with max_shingle_df (exact vs
     documented-lossy).
 
-    With return_handle=True returns (pairs_df, persisted_shingles) so the
-    caller owns the cache lifetime; otherwise the handle is tracked in a
-    module registry released by release_staged()."""
+    The staged shingle table is tracked in a module registry released by
+    release_staged()."""
     # persist the shingle arrays: BOTH sides of the self-join derive from
     # them — unpersisted, the tokenize/shingle pipeline recomputes per side
     # and Catalyst loses the size stats that keep the join strategy sane
@@ -302,8 +298,7 @@ def ngram_jaccard_pairs(df: DataFrame, threshold: float = 0.5,
         raise ValueError("prefix_filter (exact) and max_shingle_df "
                          "(documented-lossy) are alternative strategies — "
                          "pick one")
-    base = staged_shingles(df, text_col, id_col, n)
-    base = base.persist() if return_handle else stage(base)
+    base = stage(staged_shingles(df, text_col, id_col, n))
     # exploded postings carry the doc's shingle-set size INLINE (8 bytes/row)
     # so |A∪B| falls out of the pair aggregate via first() — no post-agg
     # size joins, the whole op is one self-join + one groupBy. Join key is
@@ -320,8 +315,7 @@ def ngram_jaccard_pairs(df: DataFrame, threshold: float = 0.5,
         else:
             prefix_filter = _probe_cached(ex)
     if prefix_filter and threshold > 0.0:
-        out = _ngram_prefix_join(base, ex, float(threshold))
-        return (out, base) if return_handle else out
+        return _ngram_prefix_join(base, ex, float(threshold))
     if max_shingle_df is not None:
         # document frequency per shingle hash (shingles are distinct per
         # doc, so count(*) IS the df), then keep only sub-cap postings.
@@ -339,14 +333,13 @@ def ngram_jaccard_pairs(df: DataFrame, threshold: float = 0.5,
         .agg(F.count("*").alias("_inter"),
              F.first("_sa").alias("_sa"), F.first("_sb").alias("_sb"))
     )
-    out = (
+    return (
         inter.select(
             "id_a", "id_b",
             (F.col("_inter").cast("double")
              / (F.col("_sa") + F.col("_sb") - F.col("_inter"))).alias("jaccard"))
         .filter(F.col("jaccard") >= threshold)
     )
-    return (out, base) if return_handle else out
 
 
 # Memoized probe picks, keyed by the logical plan's semanticHash — the
@@ -460,13 +453,6 @@ def _ngram_prefix_join(base: DataFrame, ex: DataFrame,
             .select("id_a", "id_b", "jaccard"))
 
 
-def simhash32(col: Column) -> Column:
-    """32-bit SimHash over word tokens: per-bit majority vote of md5(token)
-    bits (first 8 hex chars = 32 bits). Pure JVM expressions; reproducible in
-    SQL with the same md5-nibble arithmetic."""
-    return simhash_from_tokens(word_tokens(normalized_text(col)))
-
-
 def simhash_from_tokens(toks: Column) -> Column:
     """32-bit SimHash from a pre-computed token array (see
     shingles_from_tokens for why staging matters: 32 per-bit aggregates would
@@ -497,45 +483,6 @@ def simhash_df(df: DataFrame, text_col: str = "text", id_col: str = "id") -> Dat
         F.col(id_col).alias("_id"),
         word_tokens(normalized_text(F.col(text_col))).alias("_toks"))
     return toks.select("_id", simhash_from_tokens(F.col("_toks")).alias("_simhash"))
-
-
-def hamming32(a: Column, b: Column) -> Column:
-    """Popcount of XOR for 32-bit values (bit_count is native in Spark)."""
-    return F.bit_count(a.bitwiseXOR(b))
-
-
-def simhash_dedup_pairs(df: DataFrame, max_hamming: int = 3,
-                        text_col: str = "text", id_col: str = "id") -> DataFrame:
-    """Near-dup pairs with SimHash Hamming distance ≤ max_hamming, found by
-    pigeonhole banding: the 32 bits split into (max_hamming + 1) contiguous
-    blocks, so a pair within the radius differs in at most max_hamming blocks
-    and MUST share at least one block exactly — recall 1.0 by construction,
-    candidate generation stays a bucketed equi-join on (block id, block
-    bits), never O(N²)."""
-    nblocks = max_hamming + 1
-    base, extra = divmod(32, nblocks)
-    sizes = [base + (1 if i < extra else 0) for i in range(nblocks)]
-    starts = [sum(sizes[:i]) for i in range(nblocks)]
-
-    sig = simhash_df(df, text_col, id_col).withColumnRenamed("_simhash", "_sh")
-    blocks = F.array(*[
-        F.struct(
-            F.lit(i).alias("_blk"),
-            F.shiftright(F.col("_sh"), starts[i])
-            .bitwiseAND(F.lit((1 << sizes[i]) - 1)).alias("_bkt"))
-        for i in range(nblocks)])
-    buckets = (sig.select("_id", "_sh", F.explode(blocks).alias("_e"))
-               .select("_id", "_sh", "_e._blk", "_e._bkt"))
-    a = buckets.select(F.col("_id").alias("id_a"), F.col("_sh").alias("_sha"),
-                       "_blk", "_bkt")
-    b = buckets.select(F.col("_id").alias("id_b"), F.col("_sh").alias("_shb"),
-                       "_blk", "_bkt")
-    return (
-        a.join(b, ["_blk", "_bkt"]).filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", hamming32(F.col("_sha"), F.col("_shb")).alias("hamming"))
-        .distinct()
-        .filter(F.col("hamming") <= max_hamming)
-    )
 
 
 def lsh_params_for(threshold: float, target_recall: float = 0.95,
@@ -826,7 +773,7 @@ def dedup_keep_representatives(df: DataFrame, pairs: DataFrame,
                                prefer: str = "max") -> DataFrame:
     """Drop every near-duplicate except one representative per
     component: the keep/drop decision layer over any pair generator
-    (minhash, ngram, simhash, embedding). Docs in no pair are kept.
+    (minhash, ngram, embedding). Docs in no pair are kept.
 
     Default representative = minimum id (deterministic, join-free).
     ``prefer_col`` picks by QUALITY instead — e.g. keep the longest /

@@ -128,47 +128,6 @@ def fuse_product(results: DataFrame, qid_col: str = "qid", id_col: str = "id",
     )
 
 
-def combine_breakdown(df: DataFrame, strategy: str = "weighted",
-                      weights: dict | None = None,
-                      vector_col: str = "vector_similarity",
-                      graph_col: str = "graph_distance",
-                      path_col: str = "path_score",
-                      metadata_boost_col: str | None = None,
-                      recency_boost_col: str | None = None) -> Column:
-    """ScoreBreakdown combination (score_fusion.rs:14-227): blend the
-    component score columns by strategy, then apply multiplicative boosts.
-    Returns a Column; caller attaches it with withColumn."""
-    comps = [F.coalesce(F.col(c), F.lit(0.0))
-             for c in (vector_col, graph_col, path_col) if c in df.columns]
-    if not comps:
-        raise ValueError("no component score columns present")
-    strategy = strategy.lower()
-    if strategy == "average":
-        base = sum(comps[1:], comps[0]) / float(len(comps))
-    elif strategy in ("maximum", "max"):
-        base = F.greatest(*comps) if len(comps) > 1 else comps[0]
-    elif strategy == "minimum":
-        base = F.least(*comps) if len(comps) > 1 else comps[0]
-    elif strategy == "product":
-        base = comps[0]
-        for c in comps[1:]:
-            base = base * c
-    elif strategy == "weighted":
-        w = weights or {}
-        names = [c for c in (vector_col, graph_col, path_col) if c in df.columns]
-        base = F.lit(0.0)
-        for name, col in zip(names, comps):
-            base = base + float(w.get(name, 1.0 / len(comps))) * col
-    else:  # rrf over score proxies (score_fusion.rs:191-196)
-        base = F.lit(0.0)
-        for c in comps:
-            base = base + 1.0 / (60.0 + 1.0 / F.greatest(c, F.lit(1e-9)))
-    for bc in (metadata_boost_col, recency_boost_col):
-        if bc and bc in df.columns:
-            base = base * F.coalesce(F.col(bc), F.lit(1.0))
-    return base
-
-
 def normalize_scores(df: DataFrame, id_col: str = "id",
                      score_col: str = "score") -> DataFrame:
     """Min-max normalize a result list's scores to [0, 1]
@@ -210,16 +169,6 @@ def fuse_minmax_weighted(vector_results: DataFrame, other_results: DataFrame,
             ).alias("score"),
         )
     )
-
-
-def intersect_results(a: DataFrame, b: DataFrame, id_col: str = "id",
-                      score_col: str = "score") -> DataFrame:
-    """AND semantics (velesql/hybrid.rs intersect_results): keep only ids
-    present in BOTH result lists; scores sum."""
-    left = a.select(F.col(id_col), F.col(score_col).alias("_sa"))
-    right = b.select(F.col(id_col), F.col(score_col).alias("_sb"))
-    return left.join(right, id_col, "inner").select(
-        id_col, (F.col("_sa") + F.col("_sb")).alias(score_col))
 
 
 def fuse(strategy: str, results: DataFrame, params: dict | None = None,
@@ -317,75 +266,3 @@ def mmr_rerank(emb: DataFrame, query_vec, k: int = 5, pool: int = 40,
     id_type = dict(emb.dtypes)[id_col]
     return spark.createDataFrame(
         out, f"rank long, {id_col} {id_type}, rel double")
-
-
-class PathScorer:
-    """Graph-path relevance scoring for hybrid MATCH+NEAR results —
-    reference ``search/query/score_fusion.rs:666-780`` (PathScorer):
-    hop i (1-indexed) contributes ``decay^i * weight(rel_type_i)`` and
-    the path score is the product over hops; an empty path (direct
-    match) scores 1.0; ``score_length(n)`` is the pure distance factor
-    ``decay^n``.
-
-    ``rel_weight_col`` gives the distributed form: score an
-    ARRAY<STRING> column of relationship types per row with one
-    F.aggregate fold — JVM-side, no UDF — for scoring variable-length
-    MATCH paths at scale.
-    """
-
-    def __init__(self, decay: float = 0.8,
-                 rel_type_weights: dict | None = None,
-                 default_weight: float = 1.0):
-        self.distance_decay = min(max(float(decay), 0.0), 1.0)
-        self.rel_type_weights = dict(rel_type_weights or {})
-        self.default_weight = float(default_weight)
-
-    def with_decay(self, decay: float) -> "PathScorer":
-        self.distance_decay = min(max(float(decay), 0.0), 1.0)
-        return self
-
-    def with_rel_weight(self, rel_type: str, weight: float) -> "PathScorer":
-        self.rel_type_weights[rel_type] = float(weight)
-        return self
-
-    def with_default_weight(self, weight: float) -> "PathScorer":
-        self.default_weight = float(weight)
-        return self
-
-    def score_rel_types(self, rel_types) -> float:
-        score = 1.0
-        for i, rel in enumerate(rel_types, start=1):
-            w = self.rel_type_weights.get(rel, self.default_weight)
-            score *= (self.distance_decay ** i) * w
-        # reference clamps every final score (score_fusion.rs applies
-        # clamp(0.0, 1.0)); weights > 1.0 would otherwise overshoot
-        return min(max(score, 0.0), 1.0)
-
-    def score_path(self, path) -> float:
-        """path = [(src, dst, rel_type), ...]; [] = direct match = 1.0."""
-        return self.score_rel_types([rel for _, _, rel in path])
-
-    def score_length(self, n_hops: int) -> float:
-        return min(max(self.distance_decay ** n_hops, 0.0), 1.0)
-
-    def rel_weight_col(self, rel_types_col) -> "F.Column":
-        """Distributed score_rel_types over an ARRAY<STRING> column."""
-        wmap = F.create_map(*[F.lit(x) for kv in
-                              self.rel_type_weights.items() for x in kv]) \
-            if self.rel_type_weights else None
-        decay, dflt = self.distance_decay, self.default_weight
-
-        def step(acc, rel):
-            w = F.coalesce(wmap[rel], F.lit(dflt)) if wmap is not None \
-                else F.lit(dflt)
-            # acc = (score, hop_index): struct fold carries the 1-based
-            # hop exponent through the aggregate
-            return F.struct(
-                (acc["s"] * F.pow(F.lit(decay), acc["i"] + 1) * w)
-                .alias("s"), (acc["i"] + 1).alias("i"))
-
-        init = F.struct(F.lit(1.0).alias("s"), F.lit(0).cast("int")
-                        .alias("i"))
-        raw = F.aggregate(rel_types_col, init, step)["s"]
-        # same clamp(0.0, 1.0) as the scalar forms / score_fusion.rs
-        return F.least(F.lit(1.0), F.greatest(F.lit(0.0), raw))

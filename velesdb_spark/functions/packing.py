@@ -78,14 +78,6 @@ def pack_sequences(df: DataFrame, budget: int = DEFAULT_BUDGET,
                         F.floor(F.col("tok_start") / budget).cast("long")))
 
 
-def pack_stats(packs: DataFrame) -> DataFrame:
-    """Per-pack rollup of a pack_sequences result:
-    (shard, pack_id, n_docs, pack_tokens)."""
-    return packs.groupBy("shard", "pack_id").agg(
-        F.count("*").alias("n_docs"),
-        F.sum("n_tokens").alias("pack_tokens"))
-
-
 def _token_blocks(col: Column, block: int) -> Column:
     """Non-overlapping ``block``-token spans as ARRAY<STRING> (each span
     the space-joined token run; trailing short span kept; empty text →

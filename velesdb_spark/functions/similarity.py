@@ -393,108 +393,3 @@ def cosine_topk_join(left: DataFrame, right: DataFrame, k: int,
         .select(F.col("_lid").alias(left_id + "_l"),
                 F.col("_rid").alias(right_id + "_r"), "score", F.col("_rn").alias("rank"))
     )
-
-
-# ---------------------------------------------------------------- auto-reindex
-
-def optimal_nlist(n_rows: int) -> int:
-    """IVF list count that keeps per-list scan work balanced: ~sqrt(n)
-    (FAISS guideline; the analogue of the reference's dataset-size-derived
-    optimal HNSW M — collection/auto_reindex/mod.rs). Clamped to [1, 65536]."""
-    import math
-
-    return max(1, min(int(math.sqrt(max(n_rows, 1))), 65_536))
-
-
-class AutoReindexConfig:
-    """auto_reindex/types.rs:85-158 — divergence-ratio trigger with
-    default 1.5, ``sensitive`` 1.25, ``conservative`` 2.0, ``disabled``."""
-
-    def __init__(self, param_divergence_threshold: float = 1.5,
-                 enabled: bool = True):
-        self.param_divergence_threshold = param_divergence_threshold
-        self.enabled = enabled
-
-    @classmethod
-    def disabled(cls) -> "AutoReindexConfig":
-        return cls(enabled=False)
-
-    @classmethod
-    def with_threshold(cls, threshold: float) -> "AutoReindexConfig":
-        return cls(param_divergence_threshold=threshold)
-
-    @classmethod
-    def sensitive(cls) -> "AutoReindexConfig":
-        return cls(param_divergence_threshold=1.25)
-
-    @classmethod
-    def conservative(cls) -> "AutoReindexConfig":
-        return cls(param_divergence_threshold=2.0)
-
-
-class AutoReindexManager:
-    """Detects when a saved IVF index's list count has diverged from the
-    optimal for the CURRENT row count and rebuilds it, with a recall-probe
-    rollback (auto_reindex/mod.rs: mismatch detection, rebuild, revert if
-    the new index performs worse).
-
-    Spark shape: the check is one count + arithmetic; the rebuild is the
-    normal distributed assignment scan; the rollback probe compares
-    recall@k of old vs new on a deterministic query sample against exact
-    ground truth.
-    """
-
-    def __init__(self, config: AutoReindexConfig | None = None):
-        self.config = config or AutoReindexConfig()
-        self.events: list[dict] = []
-
-    def check(self, idx: "IvfIndex", df: DataFrame) -> dict:
-        """Divergence report: {needs_reindex, current, optimal, ratio}."""
-        n = df.count()
-        current = len(idx.centroids)
-        optimal = optimal_nlist(n)
-        ratio = optimal / max(current, 1)
-        needs = (self.config.enabled
-                 and ratio >= self.config.param_divergence_threshold)
-        report = {"needs_reindex": bool(needs), "current_nlist": current,
-                  "optimal_nlist": optimal, "ratio": ratio, "rows": n}
-        self.events.append({"event": "checked", **report})
-        return report
-
-    def maybe_reindex(self, idx: "IvfIndex", df: DataFrame,
-                      vector_col: str = "embedding", id_col: str = "id",
-                      probe_queries: int = 3, k: int = 10,
-                      nprobe: int = 4, seed: int = LSH_SEED) -> "IvfIndex":
-        """Rebuild when diverged; keep the old index if the new one's
-        mean recall@k on a deterministic probe sample is worse."""
-        report = self.check(idx, df)
-        if not report["needs_reindex"]:
-            return idx
-        new = IvfIndex(df, vector_col, id_col,
-                       n_centroids=report["optimal_nlist"], seed=seed)
-        qs = [r[0] for r in df.select(vector_col).limit(probe_queries)
-              .collect()]
-
-        def mean_recall(index: "IvfIndex") -> float:
-            from velesdb_spark.operators.topk import knn
-
-            total = 0.0
-            for q in qs:
-                exact = {r[0] for r in knn(df, list(q), k, "cosine",
-                                           vector_col, id_col)
-                         .select(id_col).collect()}
-                approx = {r[0] for r in index.search(list(q), k,
-                                                     nprobe=nprobe)
-                          .select(id_col).collect()}
-                total += len(exact & approx) / max(len(exact), 1)
-            return total / max(len(qs), 1)
-
-        old_r, new_r = mean_recall(idx), mean_recall(new)
-        if new_r < old_r:
-            self.events.append({"event": "rolled_back", "old_recall": old_r,
-                                "new_recall": new_r})
-            return idx
-        self.events.append({"event": "reindexed", "old_recall": old_r,
-                            "new_recall": new_r,
-                            "nlist": report["optimal_nlist"]})
-        return new

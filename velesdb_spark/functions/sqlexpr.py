@@ -63,23 +63,6 @@ def double_array_lit(values: Sequence[float]) -> Column:
     return F.expr(double_array_sql(values))
 
 
-def long_array_lit(values: Sequence[int]) -> Column:
-    """ARRAY<BIGINT> literal."""
-    xs = [int(x) for x in values]
-    if not xs:
-        return F.array().cast("array<bigint>")
-    return F.expr("array(" + ",".join(f"{x}L" for x in xs) + ")")
-
-
-def int_array_lit(values: Sequence[int]) -> Column:
-    """ARRAY<INT> literal (matches ``F.array(*[F.lit(int)])``, which
-    types Python ints that fit in 32 bits as INT)."""
-    xs = [int(x) for x in values]
-    if not xs:
-        return F.array().cast("array<int>")
-    return F.expr("array(" + ",".join(str(x) for x in xs) + ")")
-
-
 def double_matrix_lit(rows: Sequence[Sequence[float]]) -> Column:
     """ARRAY<ARRAY<DOUBLE>> literal (PQ codebooks, centroid tables)."""
     body = [double_array_sql(r) for r in rows]

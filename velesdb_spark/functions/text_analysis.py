@@ -34,20 +34,6 @@ def token_count(col: Column) -> Column:
     return F.size(word_tokens(col))
 
 
-def bpe_ish_token_count(col: Column) -> Column:
-    """BPE-like subword estimate: word-piece regex (runs of letters up to 4
-    chars count as multiple pieces) — a deterministic proxy for tokenizer
-    budgeting: ceil(chars_in_words / 4) + punctuation marks."""
-    word_chars = F.aggregate(
-        word_tokens(col), F.lit(0), lambda acc, t: acc + F.length(t))
-    punct = F.size(F.filter(F.split(col, ""), lambda c: c.rlike(r"[^\w\s]")))
-    return (F.ceil(word_chars / F.lit(4.0)) + punct).cast("long")
-
-
-def char_count(col: Column) -> Column:
-    return F.length(col)
-
-
 def avg_word_length(col: Column) -> Column:
     toks = word_tokens(col)
     total = F.aggregate(toks, F.lit(0), lambda acc, t: acc + F.length(t))
@@ -193,14 +179,6 @@ def repetition_stats_df(df, text_col: str = "text", id_col: str = "id",
         "_id", F.col("_r.n_grams").alias("n_grams"),
         F.col("_r.top_frac").alias("top_frac"),
         F.col("_r.dup_frac").alias("dup_frac"))
-
-
-def fingerprint64(col: Column) -> Column:
-    """Deterministic 64-bit document fingerprint: first 16 hex chars of md5
-    → BIGINT (reference has no fingerprinting; rolling-hash analog for
-    dedup joins). Reproducible in DuckDB as
-    CAST(('0x' || substr(md5(x),1,15)) AS BIGINT)."""
-    return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("bigint")
 
 
 def normalized_text(col: Column) -> Column:

@@ -2,10 +2,9 @@
 
 The multimodal twin of the text MinHash/SimHash family: a 64-bit
 difference hash per image (dHash — row-wise gradient sign over a pooled
-8×9 luminance grid), then Hamming-banded candidate generation exactly
-like functions/dedup.simhash — pigeonhole on 4×16-bit bands guarantees
-recall 1.0 for Hamming ≤ 3, an exact bit_count verify drops the false
-candidates.
+8×9 luminance grid), then Hamming-banded candidate generation —
+pigeonhole on 4×16-bit bands guarantees recall 1.0 for Hamming ≤ 3, an
+exact bit_count verify drops the false candidates.
 
 Reference treats images as opaque payloads (SURVEY §4); this is the
 standard training-data image-dedup stage (near-identical crops,

@@ -616,15 +616,3 @@ def frame_sample(media: DataFrame, every_ms: int = 1000) -> DataFrame:
                 F.sequence(F.lit(0), F.greatest(F.col("meta.duration_ms") - 1, F.lit(0)),
                            F.lit(every_ms))).alias("frame_ms"))
     )
-
-
-def resize_meta(media: DataFrame, max_side: int = 512) -> DataFrame:
-    """Compute target resize dims from metadata (pure column arithmetic —
-    the byte-level resize is decoder work)."""
-    w, h = F.col("meta.width"), F.col("meta.height")
-    scale = F.when(F.greatest(w, h) > max_side,
-                   max_side / F.greatest(w, h).cast("double")).otherwise(F.lit(1.0))
-    return media.select(
-        "id", "modality",
-        F.round(w * scale).cast("long").alias("target_width"),
-        F.round(h * scale).cast("long").alias("target_height"))

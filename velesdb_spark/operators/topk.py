@@ -222,14 +222,3 @@ def knn_batch(df: DataFrame, queries: Iterable[tuple[int, Sequence[float]]],
         .filter(F.col("_rn") <= k)
         .drop("_rn")
     )
-
-
-def similarity_filter(df: DataFrame, query_vector: Sequence[float], op: str,
-                      threshold: float, metric: str = "cosine",
-                      vector_col: str = "vector", score_col: str = "score") -> DataFrame:
-    """similarity(field,$v) op t as an exact scored filter — no over-fetch
-    (vs. the reference's 10×-per-condition cascade, query/mod.rs:163-293)."""
-    from velesdb_spark.functions.distance import similarity_passes
-
-    scored = with_score(df, query_vector, metric, vector_col, score_col)
-    return scored.filter(similarity_passes(F.col(score_col), op, threshold, metric))

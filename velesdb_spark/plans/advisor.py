@@ -1,29 +1,23 @@
-"""Index advisor: mine query patterns, recommend property indexes.
+"""Index advisor: recommend property indexes from a query log.
 
 Reference semantics: collection/graph/property_index.rs:900-1102 —
-QueryPattern (labels, properties, predicate types), PatternStats
-(count / total / avg / last-seen), QueryPatternTracker (slow-query
-threshold, default 100 ms), IndexAdvisor.suggest():
+IndexAdvisor.suggest():
   improvement = mean over predicates of {Equality 0.9, Range 0.7,
   In 0.6, Like 0.3}, capped at 1.0; skip if < 0.2, skip patterns with no
   labels/properties, skip existing ``idx_<labels>_<props>`` names;
   priority = count × improvement × avg_ms; DDL
   ``CREATE INDEX idx_... ON :Label(prop, ...)``; sorted by priority.
 
-Two forms:
-- Driver-side tracker (same shape as the reference) for interactive
-  sessions — patterns are tiny, a dict is the right structure.
-- ``suggest_from_log``: the SAME formula as one DataFrame aggregation
-  over a (labels, properties, predicates, ms) query-log table — the
-  100 TB path where the log is a fleet's worth of query telemetry:
-  one groupBy shuffle on the pattern key, everything else map-side.
+``suggest_from_log`` computes that formula as one DataFrame aggregation
+over a (labels, properties, predicates, ms) query-log table — the
+100 TB path where the log is a fleet's worth of query telemetry: one
+groupBy shuffle on the pattern key, everything else map-side. Mining
+the patterns of live queries is left to the query log's producer.
 """
 
 from __future__ import annotations
 
-import time
-from dataclasses import dataclass, field
-from typing import Iterable, Optional, Sequence
+from typing import Iterable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -31,120 +25,6 @@ from pyspark.sql import functions as F
 # predicate type → estimated improvement (property_index.rs:1088-1101)
 IMPROVEMENT = {"equality": 0.9, "range": 0.7, "in": 0.6, "like": 0.3}
 MIN_IMPROVEMENT = 0.2
-DEFAULT_SLOW_MS = 100
-
-
-@dataclass(frozen=True)
-class QueryPattern:
-    labels: tuple[str, ...]
-    properties: tuple[str, ...]
-    predicates: tuple[str, ...]  # values from IMPROVEMENT's key set
-
-
-@dataclass
-class PatternStats:
-    count: int = 0
-    total_time_ms: int = 0
-    avg_time_ms: float = 0.0
-    last_seen_ms: int = 0
-
-
-@dataclass
-class IndexSuggestion:
-    ddl: str
-    pattern: QueryPattern
-    estimated_improvement: float
-    query_count: int
-    priority_score: float
-
-
-class QueryPatternTracker:
-    """Per-pattern execution statistics (property_index.rs:932-995)."""
-
-    def __init__(self, slow_query_threshold_ms: int = DEFAULT_SLOW_MS):
-        self.patterns: dict[QueryPattern, PatternStats] = {}
-        self.slow_query_threshold_ms = slow_query_threshold_ms
-
-    def set_threshold(self, threshold_ms: int) -> None:
-        self.slow_query_threshold_ms = threshold_ms
-
-    def record(self, pattern: QueryPattern, execution_time_ms: int,
-               now_ms: Optional[int] = None) -> None:
-        st = self.patterns.setdefault(pattern, PatternStats())
-        st.count += 1
-        st.total_time_ms += int(execution_time_ms)
-        st.avg_time_ms = st.total_time_ms / st.count
-        st.last_seen_ms = int(time.time() * 1000) if now_ms is None else now_ms
-
-    def attach_time(self, pattern: QueryPattern, execution_time_ms: int,
-                    now_ms: Optional[int] = None) -> None:
-        """Attach a measured duration to an already-recorded execution
-        WITHOUT adding a new observation — the reference records once per
-        execution (property_index.rs:932-995); here query() counts the
-        execution at 0 ms and the caller reports the timing afterwards,
-        so only the timing fields move."""
-        st = self.patterns.setdefault(pattern, PatternStats())
-        if st.count == 0:  # timing reported for a query never record()ed
-            st.count = 1
-        st.total_time_ms += int(execution_time_ms)
-        st.avg_time_ms = st.total_time_ms / st.count
-        st.last_seen_ms = int(time.time() * 1000) if now_ms is None else now_ms
-
-    def expensive_patterns(self) -> list[tuple[QueryPattern, PatternStats]]:
-        return sorted(self.patterns.items(),
-                      key=lambda kv: -kv[1].total_time_ms)
-
-    def slow_patterns(self) -> list[tuple[QueryPattern, PatternStats]]:
-        return [(p, s) for p, s in self.patterns.items()
-                if s.avg_time_ms > self.slow_query_threshold_ms]
-
-
-def estimate_improvement(predicates: Sequence[str]) -> float:
-    if not predicates:
-        return 0.0
-    total = sum(IMPROVEMENT.get(p, 0.0) for p in predicates)
-    return min(total / len(predicates), 1.0)
-
-
-def _index_name(pattern: QueryPattern) -> str:
-    return ("idx_" + "_".join(pattern.labels).lower()
-            + "_" + "_".join(pattern.properties).lower())
-
-
-def _ddl(pattern: QueryPattern) -> str:
-    label = pattern.labels[0] if pattern.labels else ""
-    return (f"CREATE INDEX {_index_name(pattern)} ON :{label}"
-            f"({', '.join(pattern.properties)})")
-
-
-class IndexAdvisor:
-    """Suggestion generation (property_index.rs:1013-1086)."""
-
-    def __init__(self, existing_indexes: Iterable[str] = ()):
-        self.existing_indexes = set(existing_indexes)
-
-    def register_index(self, name: str) -> None:
-        self.existing_indexes.add(name)
-
-    def suggest(self, tracker: QueryPatternTracker) -> list[IndexSuggestion]:
-        out = []
-        for pattern, stats in tracker.expensive_patterns():
-            if not pattern.properties or not pattern.labels:
-                continue
-            if _index_name(pattern) in self.existing_indexes:
-                continue
-            improvement = estimate_improvement(pattern.predicates)
-            if improvement < MIN_IMPROVEMENT:
-                continue
-            out.append(IndexSuggestion(
-                ddl=_ddl(pattern),
-                pattern=pattern,
-                estimated_improvement=improvement,
-                query_count=stats.count,
-                priority_score=stats.count * improvement * stats.avg_time_ms,
-            ))
-        out.sort(key=lambda s: -s.priority_score)
-        return out
 
 
 def suggest_from_log(log: DataFrame,
@@ -194,56 +74,3 @@ def suggest_from_log(log: DataFrame,
                       "predicates", "query_count", "avg_time_ms",
                       "estimated_improvement", "priority_score") \
         .orderBy(F.desc("priority_score"), F.asc("index_name"))
-
-
-# ------------------------------------------------------------ extraction
-
-def pattern_from_velesql(sql: str) -> QueryPattern:
-    """Extract (labels, properties, predicate types) from a VelesQL query —
-    the recording hook the reference applies per executed query. MATCH
-    queries contribute node labels + WHERE properties; SELECT queries use
-    the FROM table as the label."""
-    from velesdb_spark.velesql import ast
-    from velesdb_spark.velesql.parser import parse
-
-    q = parse(sql)
-    labels: list[str] = []
-    props: list[str] = []
-    preds: list[str] = []
-
-    def walk(cond):
-        if cond is None:
-            return
-        if isinstance(cond, (ast.And, ast.Or)):
-            for t in cond.conditions:
-                walk(t)
-        elif isinstance(cond, ast.Not):
-            walk(cond.condition)
-        elif isinstance(cond, ast.Compare):
-            props.append(cond.column)
-            preds.append("equality" if cond.op in ("=", "!=", "<>")
-                         else "range")
-        elif isinstance(cond, ast.In):
-            props.append(cond.column)
-            preds.append("in")
-        elif isinstance(cond, ast.Between):
-            props.append(cond.column)
-            preds.append("range")
-        elif isinstance(cond, ast.Like):
-            props.append(cond.column)
-            preds.append("like")
-
-    if isinstance(q, ast.MatchQuery):
-        for node in q.nodes:
-            labels.extend(node.labels)
-            for k, _v in (node.properties or ()):
-                props.append(k)
-                preds.append("equality")
-        walk(q.where)
-    elif isinstance(q, ast.Select):
-        labels.append(q.table)
-        walk(q.where)
-    # dedup preserving order
-    return QueryPattern(tuple(dict.fromkeys(labels)),
-                        tuple(dict.fromkeys(props)),
-                        tuple(preds))

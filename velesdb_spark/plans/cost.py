@@ -1,39 +1,22 @@
-"""Cost-based planning: collection statistics + operation cost model.
+"""Collection statistics for the CLI ``.stats`` command.
 
 Reference: crates/velesdb-core/src/collection/stats/mod.rs (EPIC-046
-US-001 — row/deleted counts, column cardinality, size metrics, index
-stats) and collection/query_cost/cost_model.rs (US-002 — page/tuple/
-index/distance/edge cost factors, per-operation estimates,
-cheaper-plan selection).
+US-001 — row/deleted counts, column cardinality, size metrics).
 
 Spark-first: statistics come from ONE distributed aggregation
 (approx_count_distinct = HyperLogLog, the 100 TB cardinality path) plus
-Catalyst's own optimized-plan sizeInBytes; the cost formulas themselves
-are driver-side arithmetic, used to annotate EXPLAIN output and to pick
-between candidate access paths (scan vs pre-filter vs vector-first) the
-same way the reference's PlanGenerator does. Catalyst still owns
-physical planning of the chosen DataFrame program — this model ranks
-OUR strategy choices (e.g. vector-first vs filter-first MATCH), which
-sit above Catalyst.
+Catalyst's own optimized-plan sizeInBytes. The reference's cost model,
+plan generator and plan cache have no counterpart here: Catalyst's CBO
+and AQE plan the physical operators.
 """
 
 from __future__ import annotations
 
-import math
-import threading
 from dataclasses import dataclass, field
 from typing import Optional
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-@dataclass
-class IndexStats:
-    """stats/mod.rs IndexStats — entry count + structure depth."""
-
-    entry_count: int = 0
-    depth: int = 1
 
 
 @dataclass
@@ -45,7 +28,6 @@ class CollectionStats:
     total_size_bytes: int = 0
     avg_row_size: float = 0.0
     column_cardinality: dict = field(default_factory=dict)
-    indexes: dict = field(default_factory=dict)
 
     def live_row_count(self) -> int:
         return max(self.row_count - self.deleted_count, 0)
@@ -81,241 +63,3 @@ def collect_stats(df: DataFrame, cardinality_cols: Optional[list] = None,
         column_cardinality={c: int(row[f"_c_{i}"])
                             for i, c in enumerate(cols)},
     )
-
-
-# ------------------------------------------------------------ cost model
-
-@dataclass
-class OperationCostFactors:
-    """cost_model.rs:13-60 — calibrated defaults + presets."""
-
-    seq_page_cost: float = 1.0
-    random_page_cost: float = 4.0
-    cpu_tuple_cost: float = 0.01
-    cpu_index_cost: float = 0.005
-    cpu_distance_cost: float = 0.1
-    cpu_edge_cost: float = 0.02
-
-    @classmethod
-    def ssd_optimized(cls) -> "OperationCostFactors":
-        return cls(random_page_cost=1.5)
-
-    @classmethod
-    def in_memory(cls) -> "OperationCostFactors":
-        return cls(seq_page_cost=0.1, random_page_cost=0.1)
-
-
-@dataclass
-class OperationCost:
-    startup: float = 0.0
-    total: float = 0.0
-    rows: int = 0
-
-
-PAGE_SIZE = 8192
-
-
-class CostEstimator:
-    """cost_model.rs:107-229 formulas, verbatim."""
-
-    def __init__(self, factors: Optional[OperationCostFactors] = None):
-        self.factors = factors or OperationCostFactors()
-        self.page_size = PAGE_SIZE
-
-    def estimate_scan(self, stats: CollectionStats) -> OperationCost:
-        pages = math.ceil(stats.total_size_bytes / self.page_size)
-        io = pages * self.factors.seq_page_cost
-        cpu = stats.row_count * self.factors.cpu_tuple_cost
-        return OperationCost(0.0, io + cpu, stats.live_row_count())
-
-    def estimate_index_lookup(self, index: IndexStats,
-                              selectivity: float) -> OperationCost:
-        selectivity = min(max(selectivity, 0.0001), 1.0)
-        entries = int(index.entry_count * selectivity)
-        io = index.depth * self.factors.random_page_cost
-        cpu = entries * self.factors.cpu_index_cost
-        return OperationCost(io, io + cpu, max(entries, 1))
-
-    def estimate_vector_search(self, k: int, ef_search: int,
-                               dataset_size: int) -> OperationCost:
-        log_n = math.log2(dataset_size) if dataset_size > 1 else 1.0
-        distances = int(ef_search * log_n)
-        cpu = distances * self.factors.cpu_distance_cost
-        return OperationCost(cpu * 0.1, cpu, k)
-
-    def estimate_graph_traversal(self, avg_degree: float, max_depth: int,
-                                 limit: int) -> OperationCost:
-        max_nodes = min(int(avg_degree ** max_depth), limit * 10)
-        edges = max_nodes * avg_degree
-        return OperationCost(0.0, edges * self.factors.cpu_edge_cost, limit)
-
-    def estimate_filter(self, input_rows: int,
-                        selectivity: float) -> OperationCost:
-        selectivity = min(max(selectivity, 0.0001), 1.0)
-        cpu = input_rows * self.factors.cpu_tuple_cost
-        return OperationCost(0.0, cpu, max(int(input_rows * selectivity), 1))
-
-    @staticmethod
-    def cheaper(a: OperationCost, b: OperationCost) -> OperationCost:
-        return a if a.total <= b.total else b
-
-
-# ------------------------------------------------------------ plan choice
-
-@dataclass
-class CandidatePlan:
-    """plan_generator.rs CandidatePlan — a strategy with its cost.
-
-    ``est_seconds`` is the bench-calibrated wall-clock estimate
-    (plans/calibration.py) attached by generate_plans; the reference
-    units in ``cost`` still decide plan choice (relative ranking within
-    one query), the seconds make the choice auditable against reality.
-    """
-
-    plan_type: str          # "scan" | "filter_first" | "vector_first"
-    cost: OperationCost
-    description: str = ""
-    est_seconds: Optional[float] = None
-
-
-class PlanGenerator:
-    """plan_generator.rs shape: enumerate candidate strategies for a
-    filtered vector query, pick the cheapest. The chosen strategy maps to
-    how we assemble the DataFrame program (pre-filter then score vs score
-    then filter); Catalyst plans the physical operators underneath."""
-
-    def __init__(self, estimator: Optional[CostEstimator] = None,
-                 exact: bool = True):
-        """``exact=True`` (our engine's default path) costs vector scoring
-        as one distance per candidate row; ``exact=False`` uses the
-        reference's HNSW ef·log(n) estimate (when an ANN index — LSH/IVF —
-        serves the vector leg)."""
-        self.estimator = estimator or CostEstimator()
-        self.exact = exact
-
-    def _vector_cost(self, k: int, ef_search: int,
-                     n: int) -> OperationCost:
-        if not self.exact:
-            return self.estimator.estimate_vector_search(k, ef_search, n)
-        cpu = n * self.estimator.factors.cpu_distance_cost
-        return OperationCost(0.0, cpu, k)
-
-    def generate_plans(self, stats: CollectionStats,
-                       filter_col: Optional[str] = None, k: int = 10,
-                       ef_search: int = 64) -> list[CandidatePlan]:
-        from velesdb_spark.plans.calibration import get_model
-
-        est = self.estimator
-        model = get_model()
-        n = stats.live_row_count()
-        out = [CandidatePlan(
-            "scan", est.estimate_scan(stats), "full scan + score all rows",
-            est_seconds=model.plan_seconds("scan", stats))]
-        if filter_col is not None:
-            sel = stats.selectivity(filter_col)
-            filt = est.estimate_filter(stats.row_count, sel)
-            vec = self._vector_cost(k, ef_search, max(filt.rows, 1))
-            out.append(CandidatePlan(
-                "filter_first",
-                OperationCost(filt.startup,
-                              filt.total + vec.total, k),
-                f"filter on {filter_col} (sel {sel:.4f}) then score "
-                f"{filt.rows} rows",
-                est_seconds=model.plan_seconds("filter_first", stats, sel)))
-        out.append(CandidatePlan(
-            "vector_first", self._vector_cost(k, ef_search, n),
-            f"score {n} rows, top-{k}",
-            est_seconds=model.plan_seconds("vector_first", stats)))
-        return out
-
-    def select_best(self, plans: list[CandidatePlan]) \
-            -> Optional[CandidatePlan]:
-        return min(plans, key=lambda p: p.cost.total) if plans else None
-
-    def optimize(self, stats: CollectionStats,
-                 filter_col: Optional[str] = None, k: int = 10,
-                 ef_search: int = 64) -> Optional[CandidatePlan]:
-        return self.select_best(
-            self.generate_plans(stats, filter_col, k, ef_search))
-
-
-class PlanCache:
-    """Least-accessed plan cache (query_cost/query_executor.rs:12-106):
-    keys are query characteristics, values CandidatePlans; at capacity
-    the least-accessed entry evicts; ``invalidate_collection`` drops
-    every plan cached for that collection (call after DDL)."""
-
-    def __init__(self, max_entries: int = 1000):
-        if max_entries < 1:
-            raise ValueError("max_entries must be >= 1")
-        self.max_entries = int(max_entries)
-        self._cache: dict = {}   # key -> [plan, access_count]
-        self._lock = threading.Lock()
-
-    def get(self, key) -> Optional[CandidatePlan]:
-        with self._lock:
-            hit = self._cache.get(key)
-            if hit is None:
-                return None
-            hit[1] += 1
-            return hit[0]
-
-    def insert(self, key, plan: CandidatePlan) -> None:
-        with self._lock:
-            if key not in self._cache and \
-                    len(self._cache) >= self.max_entries:
-                evict = min(self._cache, key=lambda k: self._cache[k][1])
-                del self._cache[evict]
-            self._cache[key] = [plan, 1]
-
-    def invalidate_collection(self, collection: str) -> None:
-        with self._lock:
-            self._cache = {k: v for k, v in self._cache.items()
-                           if k[0] != collection}
-
-    def clear(self) -> None:
-        with self._lock:
-            self._cache.clear()
-
-    def __len__(self) -> int:
-        with self._lock:
-            return len(self._cache)
-
-
-class QueryOptimizer:
-    """PlanGenerator + PlanCache (query_executor.rs:128-188): optimize()
-    returns the cached best plan for matching query characteristics, or
-    generates-and-caches; generate_all_plans bypasses the cache."""
-
-    def __init__(self, generator: Optional[PlanGenerator] = None,
-                 cache: Optional[PlanCache] = None):
-        # explicit None checks: an EMPTY PlanCache is falsy (__len__ 0),
-        # so `cache or PlanCache()` would silently discard it
-        self.generator = generator if generator is not None \
-            else PlanGenerator()
-        self.cache = cache if cache is not None else PlanCache()
-
-    @staticmethod
-    def _key(collection: str, filter_col, k: int, ef_search: int):
-        return (collection, filter_col, int(k), int(ef_search))
-
-    def optimize(self, collection: str, stats: CollectionStats,
-                 filter_col: Optional[str] = None, k: int = 10,
-                 ef_search: int = 64) -> Optional[CandidatePlan]:
-        key = self._key(collection, filter_col, k, ef_search)
-        cached = self.cache.get(key)
-        if cached is not None:
-            return cached
-        best = self.generator.optimize(stats, filter_col, k, ef_search)
-        if best is not None:
-            self.cache.insert(key, best)
-        return best
-
-    def generate_all_plans(self, stats: CollectionStats,
-                           filter_col: Optional[str] = None, k: int = 10,
-                           ef_search: int = 64) -> list:
-        return self.generator.generate_plans(stats, filter_col, k,
-                                             ef_search)
-
-    def invalidate(self, collection: str) -> None:
-        self.cache.invalidate_collection(collection)

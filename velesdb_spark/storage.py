@@ -112,7 +112,7 @@ class LogStore:
             _SEQ, F.lit(seq).cast("long"))
         # parquet-native row-group bloom filter on the key column: point
         # lookups over the log prune row groups without an engine-side
-        # structure (pairs with functions/bloom.py's driver-side filter)
+        # structure
         tagged.write.mode("overwrite") \
             .option(f"parquet.bloom.filter.enabled#{self.id_col}", "true") \
             .parquet(os.path.join(self.path, seg))
