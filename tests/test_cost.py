@@ -17,8 +17,6 @@ def test_collect_stats_distributed(spark):
     # HLL cardinalities are near-exact at these sizes
     assert st.column_cardinality["tag"] in range(9, 12)
     assert st.column_cardinality["status"] == 3
-    assert 0.05 <= st.selectivity("tag") * 100 <= 12  # ~1/10
-    assert st.selectivity("missing") == 0.1
 
 
 def test_collection_stats_and_query_cost(spark):

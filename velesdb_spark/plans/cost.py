@@ -32,14 +32,6 @@ class CollectionStats:
     def live_row_count(self) -> int:
         return max(self.row_count - self.deleted_count, 0)
 
-    def selectivity(self, column: str) -> float:
-        """1/NDV equality selectivity from the cardinality stats (the
-        classic System-R default when a column is known)."""
-        ndv = self.column_cardinality.get(column)
-        if not ndv:
-            return 0.1  # unknown-column default
-        return 1.0 / max(ndv, 1)
-
 
 def collect_stats(df: DataFrame, cardinality_cols: Optional[list] = None,
                   deleted_count: int = 0) -> CollectionStats:
