@@ -280,16 +280,16 @@ def _plan_nodes(jplan):
     return out
 
 
-def _left_antis(df):
+def _joins(df):
     return sum(1 for n in _plan_nodes(df._jdf.queryExecution().optimizedPlan())
-               if n.nodeName() == "Join"
-               and n.joinType().toString() == "LeftAnti")
+               if n.nodeName() == "Join")
 
 
 def test_collection_writes_keep_base_plus_one_delta(spark, corpus):
     """upsert → upsert → delete on a Collection: each write leaves the
-    serving layout — the cached base minus the shadowed docs (ONE anti
-    join, however many writes) plus one cached delta — so a search
+    serving layout — the cached base minus the shadowed docs (a literal
+    shadow-id filter, no join, however many writes) plus one cached
+    delta — so a search
     re-tokenizes nothing, the persisted-RDD count stays flat, and scores
     equal a cold rebuild."""
     from velesdb_spark.database import Collection
@@ -314,7 +314,7 @@ def test_collection_writes_keep_base_plus_one_delta(spark, corpus):
                 state.pop(i, None)
         idx = col._bm25
         assert idx._base is not None and idx._delta is not None
-        assert _left_antis(idx._postings_dl) == 1
+        assert _joins(idx._postings_dl) == 0
         res = col.text_search(q, k=10)
         nodes = _plan_nodes(res._jdf.queryExecution().optimizedPlan())
         assert not any("split(" in n.simpleString(100) for n in nodes)

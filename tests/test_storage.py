@@ -32,9 +32,10 @@ def test_logstore_upsert_delete_lww(spark, tmp_path):
     assert _rows(st.read())[3]["v"] == "c2"
 
 
-def test_logstore_read_resolves_log_with_one_window(spark, tmp_path):
-    """Any log record shadows its snapshot row, so the shadowed set is the
-    log's ids; the last-writer-wins window runs once, for the survivors."""
+def test_logstore_read_has_no_window_and_no_join(spark, tmp_path):
+    """The write resolves last-writer-wins: read() filters the snapshot
+    and each log segment on literal shadow-id sets, so its plan holds no
+    Window and no Join, whatever mix of segments the log holds."""
     st = LogStore(spark, str(tmp_path / "t"), id_col="id")
     st.append_upsert(spark.createDataFrame(
         [(1, "a"), (2, "b"), (3, "c")], "id bigint, v string"))
@@ -45,9 +46,89 @@ def test_logstore_read_resolves_log_with_one_window(spark, tmp_path):
     st.append_upsert(spark.createDataFrame([(4, "D")], "id bigint, v string"))
     view = st.read()
     plan = view._jdf.queryExecution().optimizedPlan().toString()
-    assert plan.count("Window [") == 1, plan
+    assert "Window" not in plan and "Join" not in plan, plan
     assert {i: r["v"] for i, r in _rows(view).items()} == \
         {1: "a", 2: "B", 4: "D"}
+
+
+def _view(df):
+    """A read view as a sorted list of (id, v); NULL ids sort first."""
+    return sorted(((r["id"], r["v"]) for r in df.collect()),
+                  key=lambda t: (t[0] is not None, t[0] or 0, t[1]))
+
+
+def test_logstore_differential_against_dict_model(spark, tmp_path):
+    """Seeded multi-segment write sequences against a dict model, checked
+    after every write, after compact() and through a fresh handle on the
+    same path. The script covers a re-upsert after a delete, a delete of
+    an absent id, an empty delete and NULL-id rows. NULL ids keep the
+    semantics of the last-writer-wins window and anti join the store
+    used before: among log segments the newest NULL-id row wins like any
+    id, but no log record shadows a NULL-id snapshot row, since NULL
+    matches no id."""
+    import random
+
+    rng = random.Random(20261019)
+    path = str(tmp_path / "t")
+    st = LogStore(spark, path, id_col="id")
+    live: dict = {}        # non-NULL id -> v
+    snap_nulls: list = []  # v of NULL-id rows folded into the snapshot
+    log_null = None        # v of the newest NULL-id row in the log
+
+    def want():
+        rows = list(live.items()) + [(None, v) for v in snap_nulls]
+        if log_null is not None:
+            rows.append((None, log_null))
+        return sorted(rows, key=lambda t: (t[0] is not None, t[0] or 0, t[1]))
+
+    def check(step):
+        assert _view(st.read()) == want(), step
+        assert _view(LogStore(spark, path, id_col="id").read()) == want(), \
+            f"{step} (fresh handle)"
+
+    def upsert(rows, step):
+        nonlocal log_null
+        st.append_upsert(spark.createDataFrame(rows, "id bigint, v string"))
+        for i, v in rows:
+            if i is None:
+                log_null = v
+            else:
+                live[i] = v
+        check(step)
+
+    def delete(ids, step):
+        st.append_delete(ids)
+        for i in ids:
+            live.pop(i, None)
+        check(step)
+
+    def compact(step):
+        nonlocal log_null
+        st.compact()
+        if log_null is not None:
+            snap_nulls.append(log_null)
+            log_null = None
+        check(step)
+
+    upsert([(1, "a"), (2, "b"), (3, "c"), (None, "n1")], "load")
+    delete([2], "delete")
+    upsert([(2, "b2")], "re-upsert after delete")
+    delete([99], "delete absent id")
+    delete([], "empty delete")
+    upsert([(None, "n2"), (3, "c2")], "NULL id in a later segment")
+    compact("compact")
+    upsert([(None, "n3"), (1, "a2")], "NULL id over a snapshot NULL")
+    for step in range(6):
+        kind = rng.choice(["upsert", "upsert", "delete", "compact"])
+        if kind == "upsert":
+            ids = rng.sample(range(8), rng.randint(1, 4))
+            upsert([(i, f"s{step}") for i in ids], f"random upsert {step}")
+        elif kind == "delete":
+            delete(rng.sample(range(10), rng.randint(0, 3)),
+                   f"random delete {step}")
+        else:
+            compact(f"random compact {step}")
+    compact("final compact")
 
 
 def test_logstore_compact_and_reopen(spark, tmp_path):
@@ -257,3 +338,76 @@ def test_storage_mode_binary_raw_int_vectors_still_quantized(spark):
     again = col.df.filter(col.df.id == 1).select("vector").first()[0]
     assert list(again) == list(packed_row["vector"])
     assert col.count() == 20
+
+
+def test_durable_collection_reupsert_after_delete_without_flush(spark,
+                                                                tmp_path):
+    """upsert → delete → re-upsert of one id on a durable collection with
+    a warm text index, no flush between. After each write: text_search
+    scores are bit-equal to a fresh Bm25Index over the model rows, search
+    and get match the model, the composed index's search plan broadcasts
+    nothing, and the persisted-RDD count stays flat."""
+    import numpy as np
+
+    from tests.test_bm25 import _plan_nodes
+    from velesdb_spark.functions.bm25 import Bm25Index
+
+    rng = np.random.RandomState(4)
+    words = ["rust", "spark", "index", "query", "vector", "log", "store"]
+
+    def point(text=None):
+        return {"vector": [float(x) for x in rng.randn(4)],
+                "text": text or " ".join(rng.choice(words, 5))}
+
+    model = {i: point() for i in range(40)}
+    col = Database(spark, str(tmp_path / "db")).create_collection(
+        "docs", dimension=4, text_col="text")
+    col.upsert([{"id": i, **p} for i, p in model.items()])
+    col.flush()
+    # at most two distinct terms per query: a doc's score then sums at
+    # most two term scores, and a + b == b + a bitwise, so any plan gives
+    # the same bits
+    queries = ["rust spark", "log", "vector store"]
+    qv = [0.5, -1.0, 0.25, 2.0]
+    col.text_search(queries[0], k=10).collect()
+    jsc = spark.sparkContext._jsc
+
+    def check(step):
+        fresh = Bm25Index(spark.createDataFrame(
+            [(i, p["text"]) for i, p in model.items()],
+            "id bigint, text string"))
+        for q in queries:
+            got = {r.id: r.score for r in col.text_search(q, k=10).collect()}
+            want = {r.id: r._bm25_score
+                    for r in fresh.search(q, 10).collect()}
+            assert got == want, (step, q)
+        res = col._bm25.search(queries[0], 10)
+        res.collect()
+        nodes = _plan_nodes(res._jdf.queryExecution().executedPlan())
+        assert not any("Broadcast" in n.nodeName() for n in nodes), step
+        ids = sorted(model)
+        V = np.array([model[i]["vector"] for i in ids])
+        cos = V @ np.array(qv) / (np.linalg.norm(V, axis=1)
+                                  * np.linalg.norm(qv))
+        want = [ids[j] for j in np.argsort(-cos, kind="stable")[:5]]
+        assert [r.id for r in col.search(qv, k=5).collect()] == want, step
+        for i in (7, 8):
+            got = col.get(i)
+            if i in model:
+                assert (got["text"], got["vector"]) == \
+                    (model[i]["text"], model[i]["vector"]), (step, i)
+            else:
+                assert got is None, (step, i)
+        return jsc.getPersistentRDDs().size()
+
+    model[7] = point("rust rust log")
+    model[50] = point()
+    col.upsert([{"id": i, **model[i]} for i in (7, 50)])
+    persisted = [check("upsert")]
+    del model[7]
+    col.delete([7])
+    persisted.append(check("delete"))
+    model[7] = point("spark vector store")
+    col.upsert([{"id": 7, **model[7]}])
+    persisted.append(check("re-upsert"))
+    assert len(set(persisted)) == 1, persisted

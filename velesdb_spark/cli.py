@@ -221,7 +221,7 @@ class Repl:
             st = self._col(parts[1]).stats()
         except KeyError as e:
             return str(e), False
-        lines = [f"  rows: {st.live_row_count()}",
+        lines = [f"  rows: {st.row_count}",
                  f"  size: {st.total_size_bytes} bytes",
                  f"  avg row: {st.avg_row_size:.1f} bytes"]
         for c, ndv in sorted(st.column_cardinality.items()):

@@ -19,14 +19,14 @@ import os
 import warnings
 from typing import Iterable, Optional, Sequence
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from velesdb_spark.functions.bm25 import Bm25Index
 from velesdb_spark.functions.distance import higher_is_better
 from velesdb_spark.operators import graph as graph_ops
 from velesdb_spark.operators import topk as topk_ops
-from velesdb_spark.velesql.translator import Catalog, Translator, translate
+from velesdb_spark.velesql.translator import Catalog, translate
 from velesdb_spark.velesql.parser import parse
 from dataclasses import dataclass
 
@@ -150,10 +150,13 @@ class Collection:
                 raise ValueError(
                     f"vector dimension mismatch (expected {self.dimension})")
         new = self._quantize_on_write(new)
+        ids = None
         if self.store is not None:
             # durable path: append an immutable log segment, commit the
-            # manifest, re-resolve the read view (read-your-writes)
-            self.store.append_upsert(new)
+            # manifest, re-resolve the read view (read-your-writes); the
+            # segment's ids, collected once by the store, are the text
+            # index's shadow set too
+            ids = self.store.append_upsert(new)
             self._df = self.store.read()
         elif self._df is None:
             self._df = new
@@ -161,7 +164,7 @@ class Collection:
             # last-writer-wins by id: new batch shadows old rows
             old = self._df.join(new.select(self.id_col), on=self.id_col, how="left_anti")
             self._df = old.unionByName(new, allowMissingColumns=True)
-        self._refresh_bm25(new_docs=new)
+        self._refresh_bm25(new_docs=new, new_ids=ids)
         self._stats = None  # statistics reflect the pre-mutation table
         self._n_cached = None
         return self
@@ -274,15 +277,18 @@ class Collection:
         return self
 
     def _refresh_bm25(self, new_docs: DataFrame | None = None,
-                      deleted_ids=None) -> None:
+                      deleted_ids=None, new_ids=None) -> None:
         """Keep the text index serving-ready across mutations: the write
         composes the cached base index with ONE cached delta built from
         ONLY the mutated docs, folding any earlier delta into it and
         memoizing the corpus stats (bm25.Bm25Index.incremental_update), so
         the next search neither re-tokenizes the corpus nor recomputes the
         stats — the batch-scale analogue of the reference's transactional
-        per-upsert index update (crud.rs:19-118). Falls back to
-        rebuild-on-demand when the batch lacks the indexed text column."""
+        per-upsert index update (crud.rs:19-118). The write's ids
+        (``new_ids``, ``deleted_ids``) are the index's literal shadow-id
+        set; a durable write hands on the ids its log store learned, so
+        they are collected once. Falls back to rebuild-on-demand when the
+        batch lacks the indexed text column."""
         if self._bm25 is None:
             return
         text_col = self._bm25_text_col
@@ -293,7 +299,7 @@ class Collection:
                 raise ValueError("delta lacks indexed columns")
             self._bm25 = self._bm25.incremental_update(
                 new_docs=new_docs, deleted_ids=deleted_ids,
-                text_col=text_col)
+                text_col=text_col, new_ids=new_ids)
         except Exception:
             self._bm25 = None  # next search rebuilds from scratch
 

@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from velesdb_spark.functions.sqlexpr import double_lit, ident, str_lit
+from velesdb_spark.functions.sqlexpr import double_lit, ident, in_sql, str_lit
 
 K1 = 1.2
 B = 0.75
@@ -135,47 +135,72 @@ class Bm25Index:
             self._base = self
 
     def _attach(self, spark, id_col: str, postings: DataFrame,
-                doc_lengths: DataFrame,
-                term_buckets: int | None = None) -> "Bm25Index":
+                doc_lengths: DataFrame, term_buckets: int | None = None,
+                df_parts: DataFrame | None = None) -> "Bm25Index":
         """Set the index frames. ``postings`` that carry each doc's ``dl``
         (norms-in-postings) are also the search base ``_postings_dl``, and
         ``postings`` is their projection. Term df and the corpus stats are
-        always derived from (postings, doc_lengths) — for a fresh build, a
-        snapshot and a composed view alike — so a df lookup filtered on its
-        terms pushes down to the postings scans. On a bucketed view term df
-        keeps the ``_tb`` bucket as a grouping key (it is a function of the
-        term), so the lookup also prunes snapshot partitions."""
+        derived from (postings, doc_lengths) — for a fresh build and a
+        snapshot alike — so a df lookup filtered on its terms pushes down
+        to the postings scans; a composed view passes its signed
+        ``df_parts`` instead (_compose), and term df is their sum. On a
+        bucketed view term df keeps the ``_tb`` bucket as a grouping key
+        (it is a function of the term), so the lookup also prunes
+        snapshot partitions."""
         self.spark = spark
         self.id_col = id_col
         self.term_buckets = term_buckets
         self._postings_dl = postings if "dl" in postings.columns else None
         self.postings = postings.drop("dl")
         self.doc_lengths = doc_lengths
-        # serving base and its cached delta (incremental_update)
+        # serving base, its cached delta and the docs the delta shadows
+        # (incremental_update)
         self._base = None
         self._delta = None
+        self._shadow = frozenset()
         # Document frequency per term
         keys = ["_tb", "term"] if "_tb" in postings.columns else ["term"]
-        self.term_df = postings.groupBy(*keys).agg(F.count("*").alias("df"))
+        self._df_parts = df_parts
+        if df_parts is None:
+            self.term_df = postings.groupBy(*keys).agg(
+                F.count("*").alias("df"))
+        else:
+            self.term_df = (df_parts.groupBy(*keys)
+                            .agg(F.sum("df").alias("df")).filter("df > 0"))
         # Corpus stats: N and avgdl (1-row DataFrame, broadcastable)
         self.stats = doc_lengths.agg(
             F.count("*").alias("n_docs"), F.avg("dl").alias("avgdl"))
         return self
 
-    def _compose(self, shadowed: DataFrame, add_postings: DataFrame | None,
+    def _compose(self, shadow, add_postings: DataFrame | None,
                  add_dl: DataFrame | None) -> "Bm25Index":
-        """This index minus the ``shadowed`` docs, plus a delta (none for a
-        delete-only batch). The base is never shuffled — shadowed-doc
-        removal is a broadcast anti join, which needs no distinct keys. A
-        norms-in-postings base composes its search base, so the result
-        keeps that layout; over a snapshot's postings the delta's ``dl``
-        column is dropped. Delta postings get the base's ``_tb`` bucket
-        column so the union stays uniformly bucketed."""
-        shadowed = F.broadcast(shadowed)
+        """This index minus the docs in ``shadow``, a literal shadow-id
+        set, plus a delta (none for a delete-only batch). The base is
+        never shuffled or joined: removal is a ``NOT _doc_id IN (…)``
+        filter that Spark hashes as InSet. The set holds the delta's docs
+        (Collection writes) or the log's (as_bm25): the ids a broadcast
+        anti join would collect to the driver for every search.
+
+        Term df is not regrouped from the base postings: the view keeps
+        signed rows (base df, +1 per delta posting, −1 per base posting
+        of a shadowed doc), which a df lookup sums on the driver in one
+        shuffle-free collect. A norms-in-postings base composes its
+        search base, so the result keeps that layout; over a snapshot's
+        postings the delta's ``dl`` column is dropped. Delta postings get
+        the base's ``_tb`` bucket column so the union stays uniformly
+        bucketed."""
         base = self._postings_dl if self._postings_dl is not None \
             else self.postings
-        postings = base.join(shadowed, "_doc_id", "left_anti")
-        doc_lengths = self.doc_lengths.join(shadowed, "_doc_id", "left_anti")
+        keys = ["_tb", "term"] if "_tb" in base.columns else ["term"]
+        parts = self._df_parts if self._df_parts is not None \
+            else self.term_df
+        postings, doc_lengths = base, self.doc_lengths
+        gone = in_sql("_doc_id", shadow)
+        if gone:
+            postings = base.filter(f"NOT {gone}")
+            doc_lengths = doc_lengths.filter(f"NOT {gone}")
+            parts = parts.unionByName(base.filter(gone).select(
+                *keys, F.lit(-1).cast("long").alias("df")))
         if add_postings is not None:
             if "dl" not in base.columns:
                 add_postings = add_postings.drop("dl")
@@ -184,8 +209,13 @@ class Bm25Index:
                     "_tb", term_bucket_expr(F.col("term"), self.term_buckets))
             postings = postings.unionByName(add_postings)
             doc_lengths = doc_lengths.unionByName(add_dl)
-        return Bm25Index.__new__(Bm25Index)._attach(
-            self.spark, self.id_col, postings, doc_lengths, self.term_buckets)
+            parts = parts.unionByName(add_postings.select(
+                *keys, F.lit(1).cast("long").alias("df")))
+        out = Bm25Index.__new__(Bm25Index)._attach(
+            self.spark, self.id_col, postings, doc_lengths, self.term_buckets,
+            parts)
+        out._shadow = frozenset(shadow)
+        return out
 
     def _corpus_stats(self) -> tuple[int, float]:
         """(n_docs, avgdl), collected once per index instance. The
@@ -237,17 +267,20 @@ class Bm25Index:
         if n_docs == 0 or avgdl == 0.0:
             return self._empty_scores()
         # bounded driver lookup: df for the query's terms only (and, on a
-        # bucketed view, their literal buckets — partition pruning)
-        lookup = self.term_df
+        # bucketed view, their literal buckets — partition pruning); a
+        # composed view's signed parts are summed here, not shuffled
+        lookup = self._df_parts if self._df_parts is not None \
+            else self.term_df
         if self.term_buckets and "_tb" in lookup.columns:
             lookup = lookup.filter(F.col("_tb").isin(
                 sorted({term_bucket_py(t, self.term_buckets) for t in terms})))
-        dfs = {r["term"]: int(r["df"])
-               for r in lookup.filter(F.col("term").isin(terms)).collect()}
+        dfs: dict[str, int] = {}
+        for r in lookup.filter(F.col("term").isin(terms)).collect():
+            dfs[r["term"]] = dfs.get(r["term"], 0) + int(r["df"])
         weights = {
             t: counts[t] * math.log(
                 (n_docs - dfs[t] + 0.5) / (dfs[t] + 0.5) + 1.0)
-            for t in terms if t in dfs
+            for t in terms if dfs.get(t, 0) > 0
         }
         if not weights:
             return self._empty_scores()
@@ -288,11 +321,14 @@ class Bm25Index:
         return self.scores(query).orderBy(F.desc("_bm25_score"), F.asc(self.id_col)).limit(k)
 
     def incremental_update(self, new_docs: DataFrame | None = None,
-                           deleted_ids=None,
-                           text_col: str = "text") -> "Bm25Index":
+                           deleted_ids=None, text_col: str = "text",
+                           new_ids=None) -> "Bm25Index":
         """Composed index after an upsert/delete batch WITHOUT re-tokenizing
         the corpus: only ``new_docs`` go through _tokenized, and each
-        mutated id shadows its old version (broadcast anti join, _compose).
+        mutated id shadows its old version through a literal shadow-id
+        set (_compose). ``new_ids`` are the ids of ``new_docs`` when the
+        caller already holds them (a Collection write gets them from its
+        log store); otherwise they are collected in one job.
 
         On a serving index (``cache=True``, the one a Collection keeps) the
         write leaves a serving-ready index: the base's cached
@@ -302,41 +338,44 @@ class Bm25Index:
         The write memoizes the composed (n_docs, avgdl), which fills the
         delta's cache. A later write folds into that delta (old delta
         minus the newly mutated ids, plus the batch) and releases the
-        superseded one, so however many writes a session makes, a search
-        plan keeps one anti join over the base and the cached frame count
-        stays constant. On an uncached index or a snapshot view the
-        composition stays lazy: the in-memory twin of
-        IncrementalBm25Index.as_bm25()."""
+        superseded one, so the shadow set is every doc the delta holds —
+        bounded by the delta, not the corpus — a search plan filters the
+        base once and joins nothing, and the cached frame count stays
+        constant. On an uncached index or a snapshot view the composition
+        stays lazy: the in-memory twin of IncrementalBm25Index.as_bm25()."""
         from functools import reduce
 
         from velesdb_spark.functions.util import id_frame
 
-        ids, rows = [], []
+        shadow, rows = set(), []
         add_postings = add_dl = None
         if new_docs is not None:
+            if new_ids is None:
+                new_ids = [r[0] for r in
+                           new_docs.select(self.id_col).collect()]
+            shadow.update(new_ids)
             add_postings, lengths = _tokenized(new_docs, self.id_col, text_col)
             add_dl = lengths.filter(F.col("dl") > 0)
-            ids.append(new_docs.select(F.col(self.id_col).alias("_doc_id")))
             rows += [add_postings, _doc_rows(lengths)]
         if deleted_ids:
-            ids.append(id_frame(self.spark, deleted_ids, "_doc_id"))
-            rows.append(_doc_rows(ids[-1]))
-        if not ids:
+            shadow.update(int(i) for i in deleted_ids)
+            rows.append(_doc_rows(id_frame(self.spark, deleted_ids,
+                                           "_doc_id")))
+        if not rows:
             return self
-        shadowed = reduce(DataFrame.unionByName, ids)
         if self._base is None:
-            return self._compose(shadowed, add_postings, add_dl)
+            return self._compose(shadow, add_postings, add_dl)
         delta = reduce(DataFrame.unionByName, rows)
+        gone = in_sql("_doc_id", shadow)
         if self._delta is not None:
-            delta = (self._delta.join(F.broadcast(shadowed), "_doc_id",
-                                      "left_anti")
-                     .unionByName(delta))
+            old = self._delta.filter(f"NOT {gone}") if gone else self._delta
+            delta = old.unionByName(delta)
         # one partition per core, however many writes were folded in
         delta = delta.coalesce(self.spark.sparkContext.defaultParallelism) \
             .cache()
         docs = delta.filter(F.col("term").isNull())
         out = self._base._compose(
-            docs.select("_doc_id"), delta.filter(F.col("term").isNotNull()),
+            self._shadow | shadow, delta.filter(F.col("term").isNotNull()),
             docs.filter(F.col("dl") > 0).select("_doc_id", "dl"))
         out._base, out._delta = self._base, delta
         out._corpus_stats()
@@ -375,8 +414,8 @@ class IncrementalBm25Index:
       shadowed docs, union the log's last-writer-wins postings — the same
       composition Bm25Index.incremental_update runs in memory. Term df
       and corpus stats are aggregated from the composed frames. The
-      snapshot is never shuffled — shadowed-doc removal is a broadcast
-      anti join.
+      snapshot is never shuffled — shadowed-doc removal filters on the
+      log's doc ids, collected as a literal shadow-id set.
     - ``compact()`` folds the log into a new snapshot version and
       truncates the log atomically (manifest rename is the commit point);
       ``vacuum()`` then deletes what the manifest no longer references.
@@ -475,7 +514,8 @@ class IncrementalBm25Index:
         """Open the live index view as a Bm25Index (same scores/search).
 
         Plan shape: the snapshot's bucketed postings/doc_lengths minus the
-        (small, broadcast) set of docs the log shadows, union the log's
+        docs the log shadows (a literal shadow-id set, collected from the
+        log in one job), union the log's
         last-writer-wins postings (Bm25Index._compose, shared with
         incremental_update). Term df and corpus stats are aggregated from
         that composed view, so a df lookup's term filter reaches the
@@ -507,8 +547,10 @@ class IncrementalBm25Index:
         latest = (log.withColumn("_max_seq", F.max("_seq").over(w))
                   .filter(F.col("_seq") == F.col("_max_seq")))
         live = latest.filter(F.col("_op") != "delete")
-        return idx._compose(log.select("_doc_id"),
-                            live.select("term", "_doc_id", "tf"),
+        # the log's doc ids, the shadow set: bounded by the log since the
+        # last compaction
+        shadow = {r[0] for r in log.select("_doc_id").collect()}
+        return idx._compose(shadow, live.select("term", "_doc_id", "tf"),
                             live.select("_doc_id", "dl").distinct())
 
     def scores(self, query: str) -> DataFrame:

@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 
 from velesdb_spark.functions.sqlexpr import double_array_lit
 
-from velesdb_spark.functions.distance import cosine_similarity, metric_score
+from velesdb_spark.functions.distance import cosine_similarity
 from velesdb_spark.operators.topk import vector_lit
 
 DEFAULT_NBITS = 8

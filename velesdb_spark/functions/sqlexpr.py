@@ -16,13 +16,15 @@ SQL, and every helper returns a spelling for any input:
   round-tripping form and Spark's double parser rounds correctly, so the
   parsed value equals ``F.lit(float(x))`` bitwise. Non-finite values are
   spelled ``CAST('NaN'|'Infinity'|'-Infinity' AS DOUBLE)``, which
-  constant-folds to the same double.
+  constant-folds to the same double;
+- ``in_sql``: membership in a literal set, as a predicate that is never
+  NULL, or no predicate at all for an empty set.
 """
 
 from __future__ import annotations
 
 import math
-from typing import Sequence
+from typing import Iterable, Optional, Sequence
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -46,6 +48,21 @@ def double_lit(x: float) -> str:
     if math.isfinite(x):
         return repr(x) + "D"
     return f"CAST('{_NON_FINITE[repr(x)]}' AS DOUBLE)"
+
+
+def in_sql(name: str, values: Iterable) -> Optional[str]:
+    """``name IN (…)`` over the distinct non-NULL integers or strings of
+    ``values``, or None when there are none, so the caller adds no
+    predicate. The predicate is FALSE, never NULL, for a NULL ``name``
+    (NULL matches no value, as in a join), so ``NOT`` of it keeps NULL
+    rows. Spark hashes a list of more than ten literals as InSet: one
+    lookup per row, not a scan of the list."""
+    lits = sorted({str_lit(v) if isinstance(v, str) else str(int(v))
+                   for v in values if v is not None})
+    if not lits:
+        return None
+    col = ident(name)
+    return f"({col} IS NOT NULL AND {col} IN ({','.join(lits)}))"
 
 
 def double_array_sql(values: Sequence[float]) -> str:

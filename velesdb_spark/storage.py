@@ -10,11 +10,17 @@ flush in collection/core/crud.rs:19-118) — onto Spark-native primitives:
   version and the ordered list of log segments; readers resolve a
   consistent view from whatever manifest they opened (snapshot isolation),
   and the manifest rename is the commit point
-- read() = snapshot minus ids shadowed by the log, union the log's
-  last-writer-wins survivors. The snapshot (the 100 TB side at scale) is
-  never shuffled: shadowed ids are removed with a left_anti join against
-  the log's key set, which stays small because compaction bounds the log —
-  AQE broadcasts it
+- the write, not every read, resolves last-writer-wins: the store keeps
+  each live segment's ids, learned once (a delete holds them, an upsert
+  collects its batch ids in one job, a reopened store collects them once
+  per manifest)
+- read() = snapshot WHERE NOT id IN (all log ids), union each segment's
+  rows WHERE NOT id IN (ids a later segment rewrites), deletes dropped.
+  The id lists are literal shadow-id sets, which Spark hashes as InSet:
+  the view has no window, no shuffle and no join, and the snapshot (the
+  100 TB side at scale) is only scanned. A set holds at most the log
+  since the last compaction, the key set a broadcast anti join would
+  collect to the driver on every read
 - compact() (the reference's flush/snapshot) folds the log into a new
   snapshot version and truncates the log atomically; superseded snapshot
   directories remain on disk until vacuum() so readers holding the
@@ -30,8 +36,10 @@ import os
 import shutil
 from typing import Optional, Sequence
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from velesdb_spark.functions.sqlexpr import ident, in_sql
 
 _OP = "_veles_op"
 _SEQ = "_veles_seq"
@@ -87,6 +95,9 @@ class LogStore:
         self.spark = spark
         self.path = path
         self.id_col = id_col
+        # segment seq -> the ids it writes (None for a NULL id); entries
+        # of segments a compaction dropped are pruned by read()
+        self._seg_ids: dict[int, frozenset] = {}
 
     # ------------------------------------------------------------ manifest
     @property
@@ -103,7 +114,7 @@ class LogStore:
         return os.path.exists(self._manifest_path)
 
     # ------------------------------------------------------------ writes
-    def _append_segment(self, df: DataFrame, op: str) -> None:
+    def _append_segment(self, df: DataFrame, op: str) -> int:
         os.makedirs(os.path.join(self.path, "log"), exist_ok=True)
         m = self._read_manifest()
         seq = m["seq"] + 1
@@ -119,44 +130,87 @@ class LogStore:
         m["seq"] = seq
         m["segments"] = m["segments"] + [seg]
         self._commit_manifest(m)
+        return seq
 
-    def append_upsert(self, df: DataFrame) -> None:
+    def append_upsert(self, df: DataFrame) -> list:
         """One immutable log segment per batch. Within a batch, ids are
         deduped (a batch is one logical write, like the reference's
-        upsert_bulk); across batches, later segments win."""
-        self._append_segment(df.dropDuplicates([self.id_col]), "upsert")
+        upsert_bulk); across batches, later segments win. The segment's
+        ids are collected once, in one job over its key column, and
+        returned: the write's shadow set, which the caller may hand on."""
+        from pyspark.sql.types import StructType
+
+        seq = self._append_segment(df.dropDuplicates([self.id_col]), "upsert")
+        key = StructType([df.schema[self.id_col]])
+        ids = [r[0] for r in self.spark.read.schema(key).parquet(
+            os.path.join(self.path, f"log/{seq:06d}.parquet")).collect()]
+        self._seg_ids[seq] = frozenset(ids)
+        return ids
 
     def append_delete(self, ids: Sequence[int]) -> None:
         from velesdb_spark.functions.util import id_frame
 
-        self._append_segment(id_frame(self.spark, ids, self.id_col), "delete")
+        ids = [int(i) for i in ids]
+        seq = self._append_segment(id_frame(self.spark, ids, self.id_col),
+                                   "delete")
+        self._seg_ids[seq] = frozenset(ids)
 
     # ------------------------------------------------------------ reads
-    def read(self) -> Optional[DataFrame]:
-        """Last-writer-wins resolved view of snapshot + log.
+    def _segment_ids(self, log: DataFrame, seqs: list) -> list:
+        """The ids each segment writes, in segment order. Segments this
+        handle did not write (a reopened store) are collected once, in
+        one job over the log's (id, seq) columns."""
+        missing = [q for q in seqs if q not in self._seg_ids]
+        if missing:
+            found: dict = {q: set() for q in missing}
+            rows = log.filter(F.col(_SEQ).isin(missing)) \
+                .select(self.id_col, _SEQ).collect()
+            for i, q in rows:
+                found[q].add(i)
+            self._seg_ids.update((q, frozenset(v)) for q, v in found.items())
+        self._seg_ids = {q: self._seg_ids[q] for q in seqs}
+        return [self._seg_ids[q] for q in seqs]
 
-        Plan shape at scale: the snapshot scan is untouched except one
-        left_anti join against the (small) shadowed-id set; the window
-        resolution runs on the log only, once. No full-table shuffle."""
+    def read(self) -> Optional[DataFrame]:
+        """Last-writer-wins resolved view of snapshot + log, from literal
+        shadow-id sets: the snapshot minus every id the log writes, union
+        each segment's upserts minus the ids a later segment writes. Plan
+        shape: filtered scans and a union — no window, no shuffle, no
+        join. Each set holds at most the log since the last compaction.
+
+        A NULL id is one key among log segments (the newest NULL-id row
+        wins), but shadows no snapshot row, since NULL matches no id."""
         m = self._read_manifest()
         snap = None
         if m["snapshot"]:
             snap = self.spark.read.parquet(
                 os.path.join(self.path, m["snapshot"]))
         if not m["segments"]:
+            self._seg_ids = {}
             return snap
         log = (self.spark.read.option("mergeSchema", "true")
                .parquet(*[os.path.join(self.path, s) for s in m["segments"]]))
-        w = Window.partitionBy(self.id_col).orderBy(F.desc(_SEQ))
-        latest = (log.withColumn("_veles_rn", F.row_number().over(w))
-                  .filter(F.col("_veles_rn") == 1).drop("_veles_rn"))
-        survivors = latest.filter(F.col(_OP) != "delete").drop(_OP, _SEQ)
+        seqs = [int(os.path.basename(s).split(".")[0])
+                for s in m["segments"]]
+        later: set = set()
+        shadowed = []
+        for seq, ids in reversed(list(zip(seqs, self._segment_ids(log, seqs)))):
+            gone = ids & later
+            cond = in_sql(self.id_col, gone)
+            if None in gone:
+                cond = " OR ".join(filter(None, [
+                    cond, f"{ident(self.id_col)} IS NULL"]))
+            if cond:
+                shadowed.append(f"({ident(_SEQ)} = {seq} AND ({cond}))")
+            later |= ids
+        keep = f"{ident(_OP)} <> 'delete'"
+        if shadowed:
+            keep += f" AND NOT ({' OR '.join(shadowed)})"
+        survivors = log.filter(keep).drop(_OP, _SEQ)
         if snap is None:
             return survivors
-        # any log record for an id shadows its snapshot row: the window
-        # is needed only to resolve the survivors
-        shadowed = log.select(self.id_col)
-        kept = snap.join(shadowed, on=self.id_col, how="left_anti")
+        cond = in_sql(self.id_col, later)
+        kept = snap.filter(f"NOT {cond}") if cond else snap
         return kept.unionByName(survivors, allowMissingColumns=True)
 
     # ------------------------------------------------------------ maintenance
