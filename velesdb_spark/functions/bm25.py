@@ -128,9 +128,9 @@ class Bm25Index:
             doc_lengths = doc_lengths.cache()
         self._attach(spark, id_col, postings, doc_lengths)
         if cache:
-            self.term_df = (self.term_df
-                            .repartitionByRange(max(2, par // 16), "term")
-                            .sortWithinPartitions("term").cache())
+            self.term_df = self._df_parts = (
+                self.term_df.repartitionByRange(max(2, par // 16), "term")
+                .sortWithinPartitions("term").cache())
             self.stats = self.stats.cache()
             self._base = self
 
@@ -160,11 +160,11 @@ class Bm25Index:
         self._shadow = frozenset()
         # Document frequency per term
         keys = ["_tb", "term"] if "_tb" in postings.columns else ["term"]
-        self._df_parts = df_parts
         if df_parts is None:
-            self.term_df = postings.groupBy(*keys).agg(
+            self.term_df = self._df_parts = postings.groupBy(*keys).agg(
                 F.count("*").alias("df"))
         else:
+            self._df_parts = df_parts
             self.term_df = (df_parts.groupBy(*keys)
                             .agg(F.sum("df").alias("df")).filter("df > 0"))
         # Corpus stats: N and avgdl (1-row DataFrame, broadcastable)
@@ -192,8 +192,7 @@ class Bm25Index:
         base = self._postings_dl if self._postings_dl is not None \
             else self.postings
         keys = ["_tb", "term"] if "_tb" in base.columns else ["term"]
-        parts = self._df_parts if self._df_parts is not None \
-            else self.term_df
+        parts = self._df_parts
         postings, doc_lengths = base, self.doc_lengths
         gone = in_sql("_doc_id", shadow)
         if gone:
@@ -269,8 +268,7 @@ class Bm25Index:
         # bounded driver lookup: df for the query's terms only (and, on a
         # bucketed view, their literal buckets — partition pruning); a
         # composed view's signed parts are summed here, not shuffled
-        lookup = self._df_parts if self._df_parts is not None \
-            else self.term_df
+        lookup = self._df_parts
         if self.term_buckets and "_tb" in lookup.columns:
             lookup = lookup.filter(F.col("_tb").isin(
                 sorted({term_bucket_py(t, self.term_buckets) for t in terms})))
