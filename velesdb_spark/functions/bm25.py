@@ -153,11 +153,11 @@ class Bm25Index:
         self._postings_dl = postings if "dl" in postings.columns else None
         self.postings = postings.drop("dl")
         self.doc_lengths = doc_lengths
-        # serving base, its cached delta and the docs the delta shadows
+        # serving base, its cached delta and the ids the delta shadows
         # (incremental_update)
         self._base = None
         self._delta = None
-        self._shadow = frozenset()
+        self._shadow = set()
         # Document frequency per term
         keys = ["_tb", "term"] if "_tb" in postings.columns else ["term"]
         if df_parts is None:
@@ -210,11 +210,9 @@ class Bm25Index:
             doc_lengths = doc_lengths.unionByName(add_dl)
             parts = parts.unionByName(add_postings.select(
                 *keys, F.lit(1).cast("long").alias("df")))
-        out = Bm25Index.__new__(Bm25Index)._attach(
+        return Bm25Index.__new__(Bm25Index)._attach(
             self.spark, self.id_col, postings, doc_lengths, self.term_buckets,
             parts)
-        out._shadow = frozenset(shadow)
-        return out
 
     def _corpus_stats(self) -> tuple[int, float]:
         """(n_docs, avgdl), collected once per index instance. The
@@ -372,10 +370,11 @@ class Bm25Index:
         delta = delta.coalesce(self.spark.sparkContext.defaultParallelism) \
             .cache()
         docs = delta.filter(F.col("term").isNull())
+        shadow |= self._shadow
         out = self._base._compose(
-            self._shadow | shadow, delta.filter(F.col("term").isNotNull()),
+            shadow, delta.filter(F.col("term").isNotNull()),
             docs.filter(F.col("dl") > 0).select("_doc_id", "dl"))
-        out._base, out._delta = self._base, delta
+        out._base, out._delta, out._shadow = self._base, delta, shadow
         out._corpus_stats()
         if self._delta is not None:
             self._delta.unpersist()
@@ -513,9 +512,8 @@ class IncrementalBm25Index:
 
         Plan shape: the snapshot's bucketed postings/doc_lengths minus the
         docs the log shadows (a literal shadow-id set, collected from the
-        log in one job), union the log's
-        last-writer-wins postings (Bm25Index._compose, shared with
-        incremental_update). Term df and corpus stats are aggregated from
+        log in one job), union the log's last-writer-wins postings
+        (Bm25Index._compose, shared with incremental_update). Term df and corpus stats are aggregated from
         that composed view, so a df lookup's term filter reaches the
         snapshot postings scan; nothing is tokenized."""
         import os
