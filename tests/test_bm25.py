@@ -213,14 +213,138 @@ def test_incremental_update_no_retokenize(spark, corpus, tmp_path):
     idx.upsert_docs(spark.createDataFrame(
         [(9, "spark spark indexes")], "id bigint, text string"))
 
-    # the delta segment holds exactly the new doc's postings
+    # the delta segment holds exactly the new doc's postings and its
+    # doc row (term NULL)
     seg = spark.read.parquet(f"{path}/log/000001.parquet")
     rows = {(r._doc_id, r.term, r.tf) for r in seg.collect()}
-    assert rows == {(9, "spark", 2), (9, "indexes", 1)}
+    assert rows == {(9, "spark", 2), (9, "indexes", 1), (9, None, None)}
 
     plan = idx.search("spark rust", 5) \
         ._jdf.queryExecution().optimizedPlan().toString()
     assert "split(" not in plan and "lower(" not in plan
+
+
+def test_incremental_upsert_indexes_a_doc_named_twice_once(spark, tmp_path):
+    """A batch is one logical write: a batch that names a doc twice
+    indexes it once, so the view equals a rebuild with one of its two
+    texts — corpus stats and scores."""
+    from velesdb_spark.functions.bm25 import IncrementalBm25Index
+
+    base = {1: "rust systems programming", 2: "python data tools",
+            3: "go rust tooling"}
+    schema = "id bigint, text string"
+    idx = IncrementalBm25Index.build(
+        spark.createDataFrame(list(base.items()), schema),
+        str(tmp_path / "bm25_dup"), term_buckets=4)
+    texts = ["rust", "rust rust rust go"]
+    idx.upsert_docs(spark.createDataFrame([(2, t) for t in texts], schema))
+    view = idx.as_bm25()
+    q = "rust go"
+    got = {r.id: r._bm25_score for r in view.scores(q).collect()}
+
+    def matches(text):
+        fresh = Bm25Index(spark.createDataFrame(
+            list({**base, 2: text}.items()), schema))
+        want = {r.id: r._bm25_score for r in fresh.scores(q).collect()}
+        return (fresh._corpus_stats() == view._corpus_stats()
+                and set(got) == set(want)
+                and all(got[i] == pytest.approx(want[i], rel=1e-9)
+                        for i in got))
+
+    assert any(matches(t) for t in texts), (view._corpus_stats(), got)
+
+
+def _incremental_with_log(spark, df, path):
+    """A 4-bucket index over ``df`` with an upsert and a delete segment."""
+    from velesdb_spark.functions.bm25 import IncrementalBm25Index
+
+    idx = IncrementalBm25Index.build(df, path, term_buckets=4)
+    idx.upsert_docs(spark.createDataFrame(
+        [(2, "rust data pipelines"), (8, "go and rust tooling")],
+        "id bigint, text string"))
+    idx.delete_docs([1])
+    return idx
+
+
+def test_incremental_search_plan_has_no_window(spark, corpus, tmp_path):
+    """The log is resolved by literal id filters learned at write time:
+    over a view with an upsert and a delete segment, the executed search
+    plan has no Window, and its only hash Exchange is the score
+    aggregate's (on _doc_id)."""
+    df, _ = corpus
+    idx = _incremental_with_log(spark, df, str(tmp_path / "bm25_plan"))
+    plan = idx.search("rust programming", 5) \
+        ._jdf.queryExecution().executedPlan().toString()
+    assert "Window" not in plan, plan
+    hashed = [ln for ln in plan.splitlines()
+              if "Exchange hashpartitioning" in ln]
+    assert len(hashed) == 1 and "_doc_id" in hashed[0], plan
+
+
+def test_incremental_search_reuses_learned_log_ids(spark, corpus, tmp_path,
+                                                   monkeypatch):
+    """The log's doc ids are learned once per write, not per view: the
+    writing handle's search collects none, and a reopened handle collects
+    them on its first search only, so its second search launches at least
+    one job fewer and collects no log ids. Both score alike."""
+    import uuid
+
+    from velesdb_spark.functions.bm25 import IncrementalBm25Index
+
+    df, _ = corpus
+    path = str(tmp_path / "bm25_ids")
+    idx = _incremental_with_log(spark, df, path)
+    DataFrame = type(df)  # the session's concrete DataFrame class
+    collect = DataFrame.collect
+    id_collects = []
+
+    def spy(self):
+        if "_veles_seq" in self.columns:
+            id_collects.append(self)
+        return collect(self)
+
+    monkeypatch.setattr(DataFrame, "collect", spy)
+    sc = spark.sparkContext
+
+    def search(handle):
+        group = f"bm25-ids-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            rows = handle.search("rust programming", 5).collect()
+        finally:
+            sc.setJobGroup("", "")
+        return rows, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    want, _ = search(idx)
+    assert id_collects == []
+    reopened = IncrementalBm25Index(spark, path)
+    rows1, jobs1 = search(reopened)
+    assert len(id_collects) == 1
+    rows2, jobs2 = search(reopened)
+    assert len(id_collects) == 1
+    assert jobs2 <= jobs1 - 1, (jobs1, jobs2)
+    assert rows1 == rows2 == want
+
+
+def test_incremental_compact_keeps_term_buckets(spark, corpus, tmp_path):
+    """``term_buckets`` is a manifest key of the index, not of the log
+    store: it survives compact(), including a compact through a reopened
+    handle, and the compacted view still prunes on it."""
+    from velesdb_spark.functions.bm25 import IncrementalBm25Index
+    from velesdb_spark.storage import read_manifest
+
+    df, _ = corpus
+    path = str(tmp_path / "bm25_keys")
+    _incremental_with_log(spark, df, path).compact()
+    assert read_manifest(path)["term_buckets"] == 4
+    reopened = IncrementalBm25Index(spark, path)
+    reopened.upsert_docs(spark.createDataFrame(
+        [(3, "rust again")], "id bigint, text string"))
+    reopened.compact()
+    m = read_manifest(path)
+    assert m["term_buckets"] == 4 and m["snapshot"].endswith("v=3")
+    assert m["segments"] == []
+    assert IncrementalBm25Index(spark, path).as_bm25().term_buckets == 4
 
 
 def test_collection_upsert_search_loop_incremental(spark, corpus):

@@ -369,11 +369,8 @@ class Bm25Index:
         # one partition per core, however many writes were folded in
         delta = delta.coalesce(self.spark.sparkContext.defaultParallelism) \
             .cache()
-        docs = delta.filter(F.col("term").isNull())
         shadow |= self._shadow
-        out = self._base._compose(
-            shadow, delta.filter(F.col("term").isNotNull()),
-            docs.filter(F.col("dl") > 0).select("_doc_id", "dl"))
+        out = self._base._compose(shadow, *_split_doc_rows(delta))
         out._base, out._delta, out._shadow = self._base, delta, shadow
         out._corpus_stats()
         if self._delta is not None:
@@ -391,48 +388,58 @@ def _doc_rows(ids: DataFrame) -> DataFrame:
                       F.lit(None).cast("long").alias("tf"), dl.alias("dl"))
 
 
-def _tombstones(ids: DataFrame) -> DataFrame:
-    """Postings-log rows that shadow each ``_doc_id`` of ``ids`` and add
-    no postings."""
-    return _doc_rows(ids.select("_doc_id")).withColumn(
-        "_op", F.lit("delete"))
+def _split_doc_rows(rows: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """A delta in the postings layout → (postings, doc lengths): the
+    postings are the rows with a term; the lengths come from the doc rows
+    (_doc_rows) of docs that are indexed (``dl > 0``)."""
+    return (rows.filter("term IS NOT NULL"),
+            rows.filter("term IS NULL AND dl > 0").select("_doc_id", "dl"))
 
 
 class IncrementalBm25Index:
-    """Incremental BM25 maintenance: snapshot postings + a postings delta
-    log, following the same manifest/segment/compaction protocol as
-    storage.LogStore (the reference updates its text index transactionally
-    per upsert — crud.rs:19-118; this is that contract at batch scale).
+    """Incremental BM25 maintenance: bucketed snapshot postings plus a
+    postings delta log, held in a storage.LogStore keyed by ``_doc_id`` —
+    the same store, segments, manifest, compaction and vacuum as a durable
+    Collection (the reference updates its text index transactionally per
+    upsert — crud.rs:19-118; this is that contract at batch scale).
 
-    - ``upsert_docs``/``delete_docs`` append one immutable log segment
-      computed from ONLY the mutated docs (tokenize cost ∝ batch size,
-      never corpus size — no full re-index per upsert→search cycle).
+    - ``upsert_docs`` appends one immutable log segment computed from ONLY
+      the batch (tokenize cost ∝ batch size, never corpus size — no full
+      re-index per upsert→search cycle); the store learns the segment's
+      doc ids once, at the write. ``delete_docs`` appends a delete segment
+      (LogStore.append_delete).
     - ``as_bm25()`` opens the live view lazily: snapshot postings minus
-      shadowed docs, union the log's last-writer-wins postings — the same
-      composition Bm25Index.incremental_update runs in memory. Term df
-      and corpus stats are aggregated from the composed frames. The
-      snapshot is never shuffled — shadowed-doc removal filters on the
-      log's doc ids, collected as a literal shadow-id set.
+      the docs the log writes, union the log's last-writer-wins rows
+      (LogStore.read_log: literal per-segment id filters) — composed by
+      Bm25Index._compose, as incremental_update composes its delta. The
+      view has no window and the snapshot is never shuffled.
     - ``compact()`` folds the log into a new snapshot version and
-      truncates the log atomically (manifest rename is the commit point);
-      ``vacuum()`` then deletes what the manifest no longer references.
+      truncates the log atomically (LogStore.write_snapshot; the manifest
+      rename is the commit point); ``vacuum()`` then deletes what the
+      manifest no longer references.
 
     ``build()`` plus ``IncrementalBm25Index(spark, path).as_bm25()`` is
     the way to persist and reopen a BM25 index.
 
     Layout: MANIFEST.json (snapshot, segments, seq, term_buckets),
-    snapshot/v=N/{postings partitioned by _tb, doc_lengths},
-    log/NNNNNN.parquet with rows (_doc_id, term, tf, dl, _op, _seq); a
-    delete (or an upsert whose new text has no tokens) is a single
-    term=NULL tombstone row.
+    snapshot/v=N/{postings partitioned by _tb, doc_lengths}, and
+    log/NNNNNN.parquet segments whose rows are the Collection serving
+    delta's (Bm25Index.incremental_update): an upsert holds the batch's
+    postings ``(_doc_id, term, tf, dl)`` plus one ``term`` NULL doc row per
+    doc with its length, a delete holds ``_doc_id`` only, and every row
+    carries LogStore's ``_veles_op``/``_veles_seq``. Indexes written with
+    the earlier ``_op``/``_seq`` log columns are not read; rebuild them.
     """
 
     def __init__(self, spark, path: str, id_col: str = "id",
                  text_col: str = "text"):
+        from velesdb_spark.storage import LogStore
+
         self.spark = spark
         self.path = path
         self.id_col = id_col
         self.text_col = text_col
+        self.store = LogStore(spark, path, "_doc_id")
 
     # ------------------------------------------------------------ build
     @classmethod
@@ -446,64 +453,42 @@ class IncrementalBm25Index:
         idx = cls(docs.sparkSession, path, id_col, text_col)
         postings, lengths = _tokenized(docs, id_col, text_col)
         idx._write_snapshot(postings, lengths.filter(F.col("dl") > 0),
-                            version=1, seq=0, buckets=term_buckets)
+                            term_buckets)
         return idx
 
     def _write_snapshot(self, postings: DataFrame, doc_lengths: DataFrame,
-                        version: int, seq: int, buckets: int) -> None:
-        import os
+                        buckets: int) -> None:
+        def write(base: str) -> None:
+            # repartition on the bucket key before the partitionBy write:
+            # without it every upstream task writes a sliver into every
+            # bucket directory (buckets x tasks files — 256 at 8 buckets
+            # on local[32]); with it each bucket is one task's single
+            # well-sized file, and a query's per-term bucket read opens
+            # 1 file instead of tasks-many (guide §6 file sizing)
+            (postings.select("term", "_doc_id", "tf")
+             .withColumn("_tb", term_bucket_expr(F.col("term"), buckets))
+             .repartition(buckets, F.col("_tb"))
+             .write.mode("overwrite").partitionBy("_tb")
+             .parquet(f"{base}/postings"))
+            doc_lengths.write.mode("overwrite").parquet(f"{base}/doc_lengths")
 
-        from velesdb_spark.storage import commit_manifest
-
-        snap = f"snapshot/v={version}"
-        base = os.path.join(self.path, snap)
-        postings = postings.select("term", "_doc_id", "tf")
-        # repartition on the bucket key before the partitionBy write:
-        # without it every upstream task writes a sliver into every
-        # bucket directory (buckets x tasks files — 256 at 8 buckets
-        # on local[32]); with it each bucket is one task's single
-        # well-sized file, and a query's per-term bucket read opens
-        # 1 file instead of tasks-many (guide §6 file sizing)
-        (postings.withColumn("_tb", term_bucket_expr(F.col("term"), buckets))
-         .repartition(buckets, F.col("_tb"))
-         .write.mode("overwrite").partitionBy("_tb")
-         .parquet(f"{base}/postings"))
-        doc_lengths.write.mode("overwrite").parquet(f"{base}/doc_lengths")
-        commit_manifest(self.path, {"snapshot": snap, "segments": [],
-                                    "seq": seq, "term_buckets": buckets})
+        self.store.write_snapshot(write, term_buckets=buckets)
 
     # ------------------------------------------------------------ writes
-    def _append_segment(self, rows: DataFrame) -> None:
-        import os
-
-        from velesdb_spark.storage import commit_manifest, read_manifest
-
-        os.makedirs(os.path.join(self.path, "log"), exist_ok=True)
-        m = read_manifest(self.path)
-        seq = m["seq"] + 1
-        seg = f"log/{seq:06d}.parquet"
-        rows.withColumn("_seq", F.lit(seq).cast("long")) \
-            .write.mode("overwrite").parquet(os.path.join(self.path, seg))
-        m["seq"] = seq
-        m["segments"] = m["segments"] + [seg]
-        commit_manifest(self.path, m)
-
     def upsert_docs(self, docs: DataFrame) -> "IncrementalBm25Index":
-        """Append one postings-delta segment for ``docs`` (replaces any
-        prior version of each doc). Tokenization touches only this batch."""
+        """Append one log segment for ``docs`` (replaces any prior version
+        of each doc). Tokenization touches only this batch. A batch is one
+        logical write (LogStore.append_upsert's rule): a doc it names
+        twice is indexed once, with one of its texts."""
+        docs = docs.dropDuplicates([self.id_col])
         postings, lengths = _tokenized(docs, self.id_col, self.text_col)
-        posting_rows = postings.select(
-            "_doc_id", "term", "tf", "dl", F.lit("upsert").alias("_op"))
-        # a doc whose new text has no tokens (or NULL text) still shadows
-        # its old postings
-        empty_rows = _tombstones(lengths.filter(F.col("dl") <= 0))
-        self._append_segment(posting_rows.unionByName(empty_rows))
+        # the doc rows shadow the old postings of every doc in the batch,
+        # including one whose new text has no tokens
+        self.store.append(postings.unionByName(_doc_rows(lengths)))
         return self
 
     def delete_docs(self, ids) -> "IncrementalBm25Index":
-        from velesdb_spark.functions.util import id_frame
-
-        self._append_segment(_tombstones(id_frame(self.spark, ids, "_doc_id")))
+        self.store.append_delete(ids)
         return self
 
     # ------------------------------------------------------------ reads
@@ -511,14 +496,15 @@ class IncrementalBm25Index:
         """Open the live index view as a Bm25Index (same scores/search).
 
         Plan shape: the snapshot's bucketed postings/doc_lengths minus the
-        docs the log shadows (a literal shadow-id set, collected from the
-        log in one job), union the log's last-writer-wins postings
-        (Bm25Index._compose, shared with incremental_update). Term df and corpus stats are aggregated from
-        that composed view, so a df lookup's term filter reaches the
-        snapshot postings scan; nothing is tokenized."""
+        docs the log writes, union the log's last-writer-wins rows split
+        into postings and doc lengths (Bm25Index._compose, shared with
+        incremental_update). The shadow set and the per-segment filters
+        are literal id sets the store learned at write time (a reopened
+        handle collects them once per manifest): no window, no shuffle
+        below the score aggregate, nothing tokenized. Term df and corpus
+        stats are aggregated from the composed view, so a df lookup's
+        term filter reaches the snapshot postings scan."""
         import os
-
-        from pyspark.sql import Window
 
         from velesdb_spark.storage import read_manifest
 
@@ -534,20 +520,12 @@ class IncrementalBm25Index:
                       self.spark.createDataFrame([], "_doc_id bigint, dl bigint"))
         idx = Bm25Index.__new__(Bm25Index)._attach(
             self.spark, self.id_col, *frames, m.get("term_buckets"))
-        if not m["segments"]:
+        log, shadow = self.store.read_log(m)
+        if log is None:
             return idx
-        log = self.spark.read.parquet(
-            *[os.path.join(self.path, s) for s in m["segments"]])
-        # last-writer-wins per doc: all postings rows of the winning seq
-        w = Window.partitionBy("_doc_id")
-        latest = (log.withColumn("_max_seq", F.max("_seq").over(w))
-                  .filter(F.col("_seq") == F.col("_max_seq")))
-        live = latest.filter(F.col("_op") != "delete")
-        # the log's doc ids, the shadow set: bounded by the log since the
-        # last compaction
-        shadow = {r[0] for r in log.select("_doc_id").collect()}
-        return idx._compose(shadow, live.select("term", "_doc_id", "tf"),
-                            live.select("_doc_id", "dl").distinct())
+        if "term" not in log.columns:  # a log of deletes only
+            return idx._compose(shadow, None, None)
+        return idx._compose(shadow, *_split_doc_rows(log))
 
     def scores(self, query: str) -> DataFrame:
         return self.as_bm25().scores(query)
@@ -564,19 +542,15 @@ class IncrementalBm25Index:
         m = read_manifest(self.path)
         if not m["segments"]:
             return
-        cur = int(m["snapshot"].rsplit("=", 1)[1]) if m["snapshot"] else 0
         live = self.as_bm25()
         # keep the built layout
         self._write_snapshot(live.postings, live.doc_lengths,
-                             version=cur + 1, seq=m["seq"],
-                             buckets=m.get("term_buckets") or 64)
+                             m.get("term_buckets") or 64)
 
     def vacuum(self) -> None:
         """Remove snapshot versions and log segments the manifest no
-        longer references (storage.vacuum_dir, shared with LogStore)."""
-        from velesdb_spark.storage import vacuum_dir
-
-        vacuum_dir(self.path)
+        longer references (LogStore.vacuum)."""
+        self.store.vacuum()
 
 
 def bm25_scan_scores(docs: DataFrame, query: str, id_col: str = "id",

@@ -14,17 +14,22 @@ flush in collection/core/crud.rs:19-118) — onto Spark-native primitives:
   each live segment's ids, learned once (a delete holds them, an upsert
   collects its batch ids in one job, a reopened store collects them once
   per manifest)
-- read() = snapshot WHERE NOT id IN (all log ids), union each segment's
-  rows WHERE NOT id IN (ids a later segment rewrites), deletes dropped.
-  The id lists are literal shadow-id sets, which Spark hashes as InSet:
-  the view has no window, no shuffle and no join, and the snapshot (the
-  100 TB side at scale) is only scanned. A set holds at most the log
-  since the last compaction, the key set a broadcast anti join would
-  collect to the driver on every read
+- read() = snapshot WHERE NOT id IN (all log ids), union the log half:
+  each segment's rows WHERE NOT id IN (ids a later segment rewrites),
+  deletes dropped. The id lists are literal shadow-id sets, which Spark
+  hashes as InSet: the view has no window, no shuffle and no join, and
+  the snapshot (the 100 TB side at scale) is only scanned. A set holds at
+  most the log since the last compaction, the key set a broadcast anti
+  join would collect to the driver on every read
 - compact() (the reference's flush/snapshot) folds the log into a new
   snapshot version and truncates the log atomically; superseded snapshot
   directories remain on disk until vacuum() so readers holding the
   previous manifest stay consistent
+
+This is the one log protocol of the package: the incremental BM25 index
+(functions/bm25.py IncrementalBm25Index) keeps its postings log in a
+LogStore keyed by ``_doc_id``, appends many rows per key through
+``append`` and writes its bucketed snapshot through ``write_snapshot``.
 
 Single-writer by design, matching the reference's single-process log store.
 """
@@ -34,7 +39,7 @@ from __future__ import annotations
 import json
 import os
 import shutil
-from typing import Optional, Sequence
+from typing import Callable, Optional, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -46,45 +51,14 @@ _SEQ = "_veles_seq"
 
 
 def read_manifest(path: str) -> dict:
-    """Load a log-store manifest; empty-state default when absent. Shared
-    by LogStore and the incremental BM25 postings log (functions/bm25.py
-    IncrementalBm25Index), which follow the same segment/manifest/
-    compaction protocol and the same vacuum_dir; a BM25 manifest also
-    records its snapshot's ``term_buckets``."""
+    """Load the manifest of the LogStore at ``path``; empty-state default
+    when absent. A BM25 index's manifest also records its snapshot's
+    ``term_buckets``."""
     try:
         with open(os.path.join(path, "MANIFEST.json")) as f:
             return json.load(f)
     except FileNotFoundError:
         return {"snapshot": None, "segments": [], "seq": 0}
-
-
-def commit_manifest(path: str, m: dict) -> None:
-    """Atomically rename the manifest into place — the commit point."""
-    target = os.path.join(path, "MANIFEST.json")
-    tmp = target + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(m, f)
-    os.replace(tmp, target)  # atomic commit point
-
-
-def vacuum_dir(path: str) -> None:
-    """Delete the snapshot versions and log segments under ``path`` that
-    its manifest no longer references."""
-    m = read_manifest(path)
-    snapdir = os.path.join(path, "snapshot")
-    live_snap = os.path.basename(m["snapshot"]) if m["snapshot"] else None
-    if os.path.isdir(snapdir):
-        for v in os.listdir(snapdir):
-            if v != live_snap:
-                shutil.rmtree(os.path.join(snapdir, v))
-    live_segs = {os.path.basename(s) for s in m["segments"]}
-    logdir = os.path.join(path, "log")
-    if not os.path.isdir(logdir):
-        return
-    for s in os.listdir(logdir):
-        if s not in live_segs:
-            seg = os.path.join(logdir, s)
-            shutil.rmtree(seg) if os.path.isdir(seg) else os.remove(seg)
 
 
 class LogStore:
@@ -96,7 +70,7 @@ class LogStore:
         self.path = path
         self.id_col = id_col
         # segment seq -> the ids it writes (None for a NULL id); entries
-        # of segments a compaction dropped are pruned by read()
+        # of segments a compaction dropped are pruned by read_log()
         self._seg_ids: dict[int, frozenset] = {}
 
     # ------------------------------------------------------------ manifest
@@ -108,7 +82,11 @@ class LogStore:
         return read_manifest(self.path)
 
     def _commit_manifest(self, m: dict) -> None:
-        commit_manifest(self.path, m)
+        """Atomically rename the manifest into place — the commit point."""
+        tmp = self._manifest_path + ".tmp"
+        with open(tmp, "w") as f:
+            json.dump(m, f)
+        os.replace(tmp, self._manifest_path)  # atomic commit point
 
     def exists(self) -> bool:
         return os.path.exists(self._manifest_path)
@@ -132,20 +110,28 @@ class LogStore:
         self._commit_manifest(m)
         return seq
 
-    def append_upsert(self, df: DataFrame) -> list:
-        """One immutable log segment per batch. Within a batch, ids are
-        deduped (a batch is one logical write, like the reference's
-        upsert_bulk); across batches, later segments win. The segment's
-        ids are collected once, in one job over its key column, and
-        returned: the write's shadow set, which the caller may hand on."""
+    def append(self, df: DataFrame) -> list:
+        """Write ``df`` as one immutable upsert segment, as is, and learn
+        its ids: one job over the segment's key column (explicit schema,
+        no inference job). The ids are returned, one per row. Every row
+        of the segment belongs to its id's new version, so a key may have
+        many rows (the BM25 postings log writes one per posting)."""
         from pyspark.sql.types import StructType
 
-        seq = self._append_segment(df.dropDuplicates([self.id_col]), "upsert")
+        seq = self._append_segment(df, "upsert")
         key = StructType([df.schema[self.id_col]])
         ids = [r[0] for r in self.spark.read.schema(key).parquet(
             os.path.join(self.path, f"log/{seq:06d}.parquet")).collect()]
         self._seg_ids[seq] = frozenset(ids)
         return ids
+
+    def append_upsert(self, df: DataFrame) -> list:
+        """One immutable log segment per batch. Within a batch, ids are
+        deduped (a batch is one logical write, like the reference's
+        upsert_bulk); across batches, later segments win. Returns the
+        segment's ids (append): the write's shadow set, which the caller
+        may hand on."""
+        return self.append(df.dropDuplicates([self.id_col]))
 
     def append_delete(self, ids: Sequence[int]) -> None:
         from velesdb_spark.functions.util import id_frame
@@ -171,23 +157,17 @@ class LogStore:
         self._seg_ids = {q: self._seg_ids[q] for q in seqs}
         return [self._seg_ids[q] for q in seqs]
 
-    def read(self) -> Optional[DataFrame]:
-        """Last-writer-wins resolved view of snapshot + log, from literal
-        shadow-id sets: the snapshot minus every id the log writes, union
-        each segment's upserts minus the ids a later segment writes. Plan
-        shape: filtered scans and a union — no window, no shuffle, no
-        join. Each set holds at most the log since the last compaction.
+    def read_log(self, m: dict) -> tuple[Optional[DataFrame], set]:
+        """The log half of manifest ``m``'s view: each segment's upsert
+        rows minus the ids a later segment writes (all rows of an id's
+        superseded version go), and the set of every id the log writes,
+        which shadows the snapshot. ``(None, ∅)`` with no log.
 
         A NULL id is one key among log segments (the newest NULL-id row
         wins), but shadows no snapshot row, since NULL matches no id."""
-        m = self._read_manifest()
-        snap = None
-        if m["snapshot"]:
-            snap = self.spark.read.parquet(
-                os.path.join(self.path, m["snapshot"]))
         if not m["segments"]:
             self._seg_ids = {}
-            return snap
+            return None, set()
         log = (self.spark.read.option("mergeSchema", "true")
                .parquet(*[os.path.join(self.path, s) for s in m["segments"]]))
         seqs = [int(os.path.basename(s).split(".")[0])
@@ -206,30 +186,66 @@ class LogStore:
         keep = f"{ident(_OP)} <> 'delete'"
         if shadowed:
             keep += f" AND NOT ({' OR '.join(shadowed)})"
-        survivors = log.filter(keep).drop(_OP, _SEQ)
+        return log.filter(keep).drop(_OP, _SEQ), later
+
+    def read(self) -> Optional[DataFrame]:
+        """Last-writer-wins resolved view of snapshot + log, from literal
+        shadow-id sets: the snapshot minus every id the log writes, union
+        the log half (read_log). Plan shape: filtered scans and a union —
+        no window, no shuffle, no join. Each set holds at most the log
+        since the last compaction."""
+        m = self._read_manifest()
+        snap = None
+        if m["snapshot"]:
+            snap = self.spark.read.parquet(
+                os.path.join(self.path, m["snapshot"]))
+        survivors, ids = self.read_log(m)
+        if survivors is None:
+            return snap
         if snap is None:
             return survivors
-        cond = in_sql(self.id_col, later)
+        cond = in_sql(self.id_col, ids)
         kept = snap.filter(f"NOT {cond}") if cond else snap
         return kept.unionByName(survivors, allowMissingColumns=True)
 
     # ------------------------------------------------------------ maintenance
-    def compact(self) -> None:
-        """Fold the log into a new snapshot version and truncate the log
-        (log_payload.rs:316-363 snapshot + compaction). The new snapshot is
-        fully written before the manifest flips; old versions stay until
-        vacuum()."""
-        df = self.read()
-        if df is None:
-            return
+    def write_snapshot(self, write: Callable[[str], None], **keys) -> None:
+        """Write the next snapshot version through ``write(directory)`` and
+        commit it with the log truncated (log_payload.rs:316-363 snapshot
+        + compaction). The snapshot is fully written before the manifest
+        flips; old versions stay until vacuum(). Manifest keys this store
+        does not own are kept, and ``keys`` sets more (a BM25 index's
+        ``term_buckets``). The handle's learned id sets go with the log."""
         m = self._read_manifest()
         cur = int(m["snapshot"].rsplit("=", 1)[1]) if m["snapshot"] else 0
         new = f"snapshot/v={cur + 1}"
-        df.write.mode("overwrite").parquet(os.path.join(self.path, new))
-        self._commit_manifest(
-            {"snapshot": new, "segments": [], "seq": m["seq"]})
+        write(os.path.join(self.path, new))
+        self._commit_manifest({**m, **keys, "snapshot": new, "segments": []})
+        self._seg_ids = {}
+
+    def compact(self) -> None:
+        """Fold the log into a new snapshot version and truncate the log
+        (write_snapshot)."""
+        df = self.read()
+        if df is None:
+            return
+        self.write_snapshot(df.write.mode("overwrite").parquet)
 
     def vacuum(self) -> None:
         """Remove snapshot versions and log segments no longer referenced
         by the manifest (safe once no reader holds an older manifest)."""
-        vacuum_dir(self.path)
+        m = self._read_manifest()
+        snapdir = os.path.join(self.path, "snapshot")
+        live_snap = os.path.basename(m["snapshot"]) if m["snapshot"] else None
+        if os.path.isdir(snapdir):
+            for v in os.listdir(snapdir):
+                if v != live_snap:
+                    shutil.rmtree(os.path.join(snapdir, v))
+        live_segs = {os.path.basename(s) for s in m["segments"]}
+        logdir = os.path.join(self.path, "log")
+        if not os.path.isdir(logdir):
+            return
+        for s in os.listdir(logdir):
+            if s not in live_segs:
+                seg = os.path.join(logdir, s)
+                shutil.rmtree(seg) if os.path.isdir(seg) else os.remove(seg)
